@@ -65,27 +65,17 @@ object Bench {
     val ok = results.collect { case (_, Some(v)) => v }
     val errored = results.count(_._2.isEmpty)
     val total = ok.sum
-    // "queries_cold" (run-1 times) is an ADDITION after the existing
-    // keys, so a consumer of "queries" parses unchanged
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_cold":$cold,"errors":$errored,"sf":"$sfDir"}""")
-    // the driver keeps only the TAIL of stdout: with the total printed
-    // first in one long line, truncation destroys exactly the headline
-    // (BENCH_r03/r04 "parsed": null). A short trailing summary survives
-    // any tail capture. Distinct metric name so a consumer summing
-    // "total" lines cannot double-count the same wall-clock.
-    println(s"""{"metric":"total_tail","value":$total,"unit":"sec","errors":$errored,"n_queries":${results.size},"sf":"$sfDir"}""")
-    // === r16 additions BELOW total_tail (additions-only: the driver's
-    // existing total_tail parse sees an unchanged prefix) ===
-    // The driver archives only the last ~2000 BYTES of stdout (every
-    // BENCH_r*.json "tail" field is exactly 2000 chars), so r15's single
-    // 10 KB per-query line was truncated mid-map and PERF_r15 lost the
-    // whole round-over-round comparison (per_query: {}, geomean: null).
-    // Emit the map again in SMALL SELF-CONTAINED chunk lines, 3-decimal
+    // Summary lines, in this order: the full map, the chunked per-query
+    // map, the cold gaps, and total_tail LAST. The bench's consumer
+    // keeps only the last ~2000 BYTES of stdout and parses the final
+    // line, so the short total_tail must end the output. "queries_cold"
+    // (run-1 times) is the total line's last key.
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errored,"sf":"$sfDir","queries_cold":$cold}""")
+    // The same map again in SMALL SELF-CONTAINED chunk lines (a single
+    // 10 KB line is truncated mid-map by a tail capture): 3-decimal
     // values, 20 queries each, sorted by ASCENDING min time so the most
-    // expensive queries sit NEAREST the end of stdout: whatever tail
-    // window the driver keeps, it captures total_tail (parsed from the
-    // full stream) plus the costliest — most comparison-relevant —
-    // chunks; a bigger window captures the whole map.
+    // expensive queries sit nearest total_tail, inside whatever tail
+    // window the consumer keeps.
     def f3(v: Double): String = f"$v%.3f"
     val byTime = results.sortBy { case (k, v) => (v.getOrElse(-1.0), k) }
     val parts = byTime.grouped(20).toVector
@@ -112,6 +102,10 @@ object Bench {
       }.mkString("{", ",", "}")
       println(s"""{"metric":"cold_gap_tail","queries":$m}""")
     }
+    // a short trailing summary survives any tail capture; a distinct
+    // metric name so a consumer summing "total" lines cannot
+    // double-count the same wall-clock
+    println(s"""{"metric":"total_tail","value":$total,"unit":"sec","errors":$errored,"n_queries":${results.size},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1903,23 +1903,22 @@ object Stats {
       .withColumn("c", coalesce(col("c"), lit(0L)))
     val wg = Window.partitionBy("g").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = grid
+    // max and argmax in ONE pass over the grid: the per-group max rides
+    // along as a window column, and a single aggregate takes the
+    // smallest v attaining it (ties → smallest v). A null group is
+    // dropped (its rows still count in the corpus ECDF above).
+    grid
       .withColumn("cum_g", sum(col("c")).over(wg))
       .withColumn("cum_c", sum(col("cc")).over(wg))
       .crossJoin(broadcast(nAll))
       .withColumn("__d",
         abs(col("cum_g").cast(N) * col("n_all").cast(N) -
           col("cum_c").cast(N) * col("n").cast(N)))
-      // the bounded grid feeds BOTH the max agg and the argmax
-      // join-back — the kmv double-derivation lesson, same fix
-      .localCheckpoint(true)
-    val dmax = cum.groupBy("g", "n", "n_all")
-      .agg(max(col("__d")).as("__dmax"))
-    val at = cum.select(col("g"), col("v"), col("__d"))
-      .join(dmax.select(col("g"), col("__dmax")), Seq("g"))
-      .where(col("__d") === col("__dmax"))
-      .groupBy("g").agg(min(col("v")).as("at_value"))
-    dmax.join(at, Seq("g"))
+      .where(col("g").isNotNull)
+      .withColumn("__dmax", max(col("__d")).over(Window.partitionBy("g")))
+      .groupBy("g", "n", "n_all", "__dmax")
+      .agg(min(when(col("__d") === col("__dmax"), col("v")))
+        .as("at_value"))
       .select(col("g").as("group"), col("n"),
         (col("__dmax").cast("double") /
           (col("n").cast("double") * col("n_all").cast("double")))

@@ -97,12 +97,12 @@ object PolyHashImpl {
   * interpreted lambda frame per fold step — the dominant per-row cost
   * under the winnowing / sketch / simhash / feature-hash families. This
   * is one tight loop over the string's bytes inside whole-stage codegen.
-  * Null in → null out, like the HOF chain. */
+  * Null in → null out, like the HOF chain. A non-string child fails at
+  * analysis (no implicit cast: the hash is defined on characters). */
 case class PolyHash(child: Expression, reversed: Boolean = false)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
-  // callers guarantee a string child (shingles, tokens, terms — the
-  // same caller-guarantee discipline as every expression in this file)
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String =
     if (reversed) "poly_hash_rev" else "poly_hash"

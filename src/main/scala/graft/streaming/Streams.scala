@@ -159,7 +159,10 @@ object Streams {
     * partial aggregate regardless of view size. [[compactAdditive]]
     * folds the log to one row per key (the same merge the reader runs),
     * so read amplification is a knob, not a correctness concern.
-    * Sums run in exact decimal (order-independent); cast at the edge. */
+    * Sums run in exact decimal (order-independent); cast at the edge.
+    * Every view over this log folds it when the view is BUILT, so a
+    * view is a snapshot of the log files listed at that moment; call
+    * the view again to see later batches. */
   def additiveSink(stream: DataFrame, keys: Seq[String], value: Column,
       tablePath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -180,19 +183,33 @@ object Streams {
     * checkpoint commit, appending a byte-identical partial under the
     * same batch id — deduping on (keys, _batch) makes the fold
     * replay-idempotent, which is what lets the view claim
-    * load ∘ load = load without a transactional sink. */
+    * load ∘ load = load without a transactional sink. The log is
+    * hash-partitioned by `keys` up front, which satisfies both the
+    * (keys, _batch) dedup and a following per-key fold: the whole fold
+    * costs one exchange. */
   private def dedupedPartials(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, keys: Seq[String]): DataFrame =
-    spark.read.parquet(tablePath).dropDuplicates(keys :+ "_batch")
+    spark.read.parquet(tablePath).repartition(keys.map(col): _*)
+      .dropDuplicates(keys :+ "_batch")
 
   /** Current state of an [[additiveSink]] log: one row per key with the
-    * folded sum (double at the boundary) and count. */
+    * folded sum (double at the boundary) and count.
+    *
+    * The fold runs HERE, when the view is built (one job, one shuffle),
+    * and the returned frame is a leaf over its shuffle output
+    * ([[org.apache.spark.sql.graft.Bridge.executedLeaf]]): a view tail
+    * that references the counts several times reads them, rather than
+    * re-scanning and re-folding the log per reference. So the view is
+    * a snapshot of the log files listed at that moment — the file
+    * listing was already taken then — and partials appended later
+    * show up in the next `sumView` call, not in this frame. */
   def sumView(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       keys: Seq[String]): DataFrame =
-    dedupedPartials(spark, tablePath, keys)
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("_psum")).cast("double").as("total"),
-        sum(col("_pcount")).as("n"))
+    org.apache.spark.sql.graft.Bridge.executedLeaf(
+      dedupedPartials(spark, tablePath, keys)
+        .groupBy(keys.map(col): _*)
+        .agg(sum(col("_psum")).cast("double").as("total"),
+          sum(col("_pcount")).as("n")))
 
   /** Fold the additive log to one partial per key in place. Same
     * quiescence contract as [[compactLog]] — and additionally the

@@ -29,6 +29,26 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df` as a leaf over its executed RDD — the plan `Dataset.checkpoint`
+    * builds, without the storage. The plan runs here (its shuffles
+    * materialize once, AQE stages included); every consumer of the
+    * returned frame, however many references it holds, then reads
+    * those shuffle outputs, with `df`'s statistics carried over (and its
+    * output partitioning where the plan reports one; an adaptive plan
+    * reports none, so consumers exchange as they need). Nothing is
+    * pinned: the shuffle files live as long as the returned frame is
+    * reachable, like any shuffle's. */
+  def executedLeaf(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val qe = ds.queryExecution
+    val rdd = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+      qe, Some("executedLeaf"))(qe.executedPlan.execute())
+    ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds,
+        ds.isStreaming))
+  }
+
   /** Register a SQL function on an EXISTING session (SparkSessionExtensions
     * only applies at session construction). */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,

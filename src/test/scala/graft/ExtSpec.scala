@@ -1411,6 +1411,18 @@ class ExtSpec extends SparkSpec {
       a == 5L || b == 5L }) // unrelated docs share nothing
   }
 
+  test("polyHash of a non-string column fails at analysis, readably") {
+    val ints = Seq(1L, 2L).toDF("n")
+    for (h <- Seq(Dedup.polyHash _, Dedup.polyHashReversed _)) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        ints.select(h($"n")))
+      assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
+        e.getMessage)
+      assert(e.getMessage.contains("\"STRING\"") &&
+        e.getMessage.contains("\"BIGINT\""), e.getMessage)
+    }
+  }
+
   test("gopherQuality: each rule gates independently; no row vanishes") {
     // 52 distinct tokens (no token above the 10% dominance cut), mean
     // word length ~4, two stopword types
@@ -3567,6 +3579,49 @@ class ExtSpec extends SparkSpec {
     val same = Seq(("x", 1L), ("x", 2L)).toDF("g", "v")
     val z = rows(graft.ext.Stats.ksDrift(same, $"g", $"v")).head
     assert(z.getDouble(2) == 0.0 && z.getLong(3) == 1L)
+  }
+  test("ksDrift argmax: ties take the smallest v, a zero-filled grid cell " +
+      "can win, a null group is dropped but still counts in the corpus") {
+    def ks(d: org.apache.spark.sql.DataFrame) =
+      rows(graft.ext.Stats.ksDrift(d, $"g", $"v").orderBy("group"))
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
+          r.getLong(3)))
+    // a: 1,1,2,3 ; b: 1,1,3,4 ; corpus 1x4, 2x1, 3x2, 4x1 (n=8) →
+    // ECDF_a (4/8, 6/8, 1, 1) vs corpus (4/8, 5/8, 7/8, 1): |diffs|
+    // 0, 1/8, 1/8, 0 — tied at v=2 and v=3, so v=2; b (4/8, 4/8, 6/8,
+    // 1): the same tie
+    val tied = (Seq(1L, 1L, 2L, 3L).map(("a", _)) ++
+      Seq(1L, 1L, 3L, 4L).map(("b", _))).toDF("g", "v")
+    assert(ks(tied) == Seq(("a", 4L, 0.125, 2L), ("b", 4L, 0.125, 2L)))
+    // c is absent at v=1 and v=2 (zero-filled cells); corpus 1x2, 2x2,
+    // 3x2 (n=6): ECDF_c (0, 0, 1) vs (2/6, 4/6, 1) — the max 4/6 sits on
+    // the zero-filled cell v=2
+    val zero = (Seq(1L, 1L, 2L, 2L).map(("d", _)) ++
+      Seq(3L, 3L).map(("c", _))).toDF("g", "v")
+    assert(ks(zero).head == ("c", 2L, 4.0 / 6.0, 2L))
+    // a null group contributes to the corpus ECDF but gets no row:
+    // corpus 1x1, 2x1 (n=2); e = {1}: ECDF (1, 1) vs (1/2, 1) → 1/2 at 1
+    val withNull = Seq[(String, Long)](("e", 1L), (null, 2L)).toDF("g", "v")
+    assert(ks(withNull) == Seq(("e", 1L, 0.5, 1L)))
+    // exhaustive check against a driver-side brute force on a small
+    // value domain, where ties and zero-filled cells are common
+    val rnd = new scala.util.Random(164)
+    val data = Seq.fill(120)((Seq("p", "q", "r", null)(rnd.nextInt(4)),
+      rnd.nextInt(6).toLong))
+    val vs = data.map(_._2).distinct.sorted
+    val nAll = data.size.toLong
+    val expect = data.map(_._1).filter(_ != null).distinct.sorted.map { g =>
+      val n = data.count(_._1 == g).toLong
+      val d = vs.map { v =>
+        val cg = data.count(r => r._1 == g && r._2 <= v).toLong
+        val cc = data.count(_._2 <= v).toLong
+        (math.abs(cg * nAll - cc * n), v)
+      }
+      val dmax = d.map(_._1).max
+      (g, n, dmax.toDouble / (n.toDouble * nAll.toDouble),
+        d.filter(_._1 == dmax).map(_._2).min)
+    }
+    assert(ks(data.toDF("g", "v")) == expect)
   }
   test("ksMatrix: pairwise two-sample KS, consistent with ksDrift logic") {
     // a: 1,1,2,3 ; b: 3,3,4,4 -> ECDF_a (2/4,3/4,1,1) vs

@@ -14,7 +14,9 @@ class QueriesSpec extends SparkSpec {
     * on every tail. Spark sessions are thread-safe; 8 in flight cut
     * the full-corpus sweep ~4× with identical results (the driver's
     * sbt-test budget is the constraint — r15's serial sweep helped
-    * push the suite past it). Failures propagate with the query name. */
+    * push the suite past it). Failures propagate with the query name;
+    * on a failure the pool is stopped and drained before returning, so
+    * no straggler still runs when the caller restores session confs. */
   private def forEachQuery[T](f: ((String,
       (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame)) => T): Seq[T] = {
@@ -25,10 +27,17 @@ class QueriesSpec extends SparkSpec {
       val futs = Queries.all.toSeq.map { kv =>
         scala.concurrent.Future(f(kv))
       }
-      scala.concurrent.Await.result(
+      val out = scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(futs),
         scala.concurrent.duration.Duration(20, "min"))
-    } finally pool.shutdown()
+      pool.shutdown()
+      out
+    } catch {
+      case e: Throwable =>
+        pool.shutdownNow()
+        pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES)
+        throw e
+    }
   }
 
   /** BroadcastExchange subtrees whose build side derives from a
@@ -238,6 +247,10 @@ class QueriesSpec extends SparkSpec {
     "x186_psi" ->
       ("PSI bucket skeleton: |groups| × |buckets| enumeration — both " +
         "axes category-bounded, never row-sized"),
+    "x164_ks_drift" ->
+      ("KS grid skeleton: |groups| × |distinct values| of a discrete " +
+        "column (sources × token lengths) — the x186 PSI grid, built " +
+        "by the same code"),
     "x193_cramers_v" ->
       "same contingency skeleton as x175 (category × category)",
     "x167_hll_pair_union" ->

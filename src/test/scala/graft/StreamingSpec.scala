@@ -379,6 +379,74 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch && streamed.size == 2)
   }
 
+  /** A three-batch additive (g, v) ledger for the fold-once tests. */
+  private def gvLedger(name: String): String = {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory(name)
+    val table = dir.resolve("log").toString
+    val mem = MemoryStream[GV]
+    val q = Streams.additiveSink(mem.toDF(), Seq("g", "v"), lit(1L),
+      table, dir.resolve("ckpt").toString)
+    Seq(Seq("a" -> 1, "a" -> 2, "b" -> 2, "b" -> 3),
+      Seq("a" -> 1, "b" -> 4, "c" -> 2), Seq("c" -> 3, "a" -> 4))
+      .foreach { b =>
+        mem.addData(b.map { case (g, v) => GV(g, v.toString) }: _*)
+        q.processAllAvailable()
+      }
+    q.stop()
+    table
+  }
+
+  test("ledger views pin no storage: sumView, ksDriftView and psiView " +
+      "leave getPersistentRDDs unchanged") {
+    val table = gvLedger("graft_pin")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // the frames stay reachable until the check: the registry holds
+    // RDDs weakly, so a dropped frame's pin could vanish in a GC
+    val views = Seq(Streams.sumView(spark, table, Seq("g", "v")),
+      Streams.ksDriftView(spark, table), Streams.psiView(spark, table))
+    val sizes = views.map(rows(_).size)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    assert(views.size == 3 && sizes.forall(_ > 0))
+  }
+
+  test("ksDriftView and psiView read the ledger ONCE per call, however " +
+      "often their tails reference the folded counts") {
+    import org.apache.spark.scheduler._
+    val table = gvLedger("graft_once")
+    val ledgerRows = spark.read.parquet(table).count()
+    val sc = spark.sparkContext
+    val group = "graft-ledger-read-once"
+    // records read by file scans in jobs of this thread's job group
+    // (scoped so no other session work can leak into the sum)
+    def recordsRead(body: => Unit): Long = {
+      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val read = new java.util.concurrent.atomic.AtomicLong
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties)
+              .exists(_.getProperty("spark.jobGroup.id") == group))
+            e.stageIds.foreach(stages.add)
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (stages.contains(e.stageId) && e.taskMetrics != null)
+            read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      }
+      sc.addSparkListener(l)
+      sc.setJobGroup(group, "ledger read-once test")
+      try body
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.graft.TestListenerBus.drain(sc)
+        sc.removeSparkListener(l)
+      }
+      read.get
+    }
+    assert(ledgerRows > 0)
+    assert(recordsRead(rows(Streams.ksDriftView(spark, table))) ==
+      ledgerRows)
+    assert(recordsRead(rows(Streams.psiView(spark, table))) == ledgerRows)
+  }
+
   test("cusumView: the additive (g, v=period) ledger folds to the " +
       "batch cusum across batch boundaries") {
     implicit val sqlCtx = spark.sqlContext
