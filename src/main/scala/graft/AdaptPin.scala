@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the x66 pinned adaptive-LSH golden in `Oracles.scala`.
   *
   * Random-hyperplane signatures are hash-specific — no SQL engine
@@ -18,11 +16,7 @@ import org.apache.spark.sql.SparkSession
 object AdaptPin {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     def runOnce(): Seq[(Long, Long, Double)] =
       Queries.x66AdaptiveLsh(spark, dir).collect().toSeq
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

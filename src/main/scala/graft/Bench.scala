@@ -1,17 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR: WARN-level scans (FileStreamSink metadata probes) print full
-    // stack traces to stderr and bury the one-line JSON the driver parses
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     // JVM/codegen/scan warm-up outside the timed region: exercise agg,
     // window, join and the parquet reader once so the first timed query
     // doesn't absorb JIT/classloading cost

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates the x55 pinned OPQ literals in `Oracles.scala`.
@@ -20,11 +19,7 @@ import org.apache.spark.sql.functions._
 object OpqPin {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val base = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
     def learnOnce() =

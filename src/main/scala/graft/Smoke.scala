@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** t1-style smoke: build a session the way the driver would, run
-  * SparkEntry.entry, print the row count (must be > 0). */
+/** t1-style smoke: on the shared [[Harness.session]], run
+  * SparkEntry.entry and print the row count (must be > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val df = SparkEntry.entry(spark)
     println(s"[smoke] entry rows=${df.count()} cols=${df.columns.mkString(",")}")
     df.show(5, truncate = false)

@@ -1,26 +1,27 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check.py).
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [q1,q2,...]` — the
+  * optional third argument restricts both the parquet dumps and
+  * oracle_sql.json to those names, so tools/check.py reports just the
+  * subset; the full gate passes exactly two arguments. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query names (builder-local
-    // targeted runs); the driver always passes exactly two args
     val Array(sfDir, outDir) = args.take(2)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val only = args.lift(2).map(_.split(",").toSet)
+    val spark = Harness.session()
+    try run(spark, sfDir, outDir, only) finally spark.stop()
+  }
+
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]]): Unit = {
+    def wanted(name: String) = only.forall(_.contains(name))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => wanted(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -47,8 +48,8 @@ object Verify {
       if (sfName == "sf0.01") SparkEntry.oracleSql
       else SparkEntry.oracleSql -- Oracles.pinnedToSf001
     val json = applicable
+      .filter { case (name, _) => wanted(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

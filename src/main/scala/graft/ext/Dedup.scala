@@ -513,6 +513,81 @@ object Dedup {
         col("contamination"))
   }
 
+  /** Exact Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin, Bayardo
+    * et al. WWW'07 / Xiao et al. WWW'08 — public algorithms): order every
+    * document's hashed shingles by a single global total order (ascending
+    * document frequency, ties by hash) and generate candidates only from
+    * each document's first `|d| − ⌈t·|d|⌉ + 1` shingles. Any pair with
+    * Jaccard ≥ t shares its globally-smallest common shingle inside BOTH
+    * prefixes (if it were outside x's prefix, all ≥ ⌈t·|x|⌉ common
+    * shingles would fit in the ⌈t·|x|⌉ − 1 suffix slots), so recall is 1
+    * BY CONSTRUCTION — unlike the df-cap heuristic, nothing is traded.
+    * Rare-first ordering pushes stopword-grade shingles out of every
+    * prefix, so the Σ df² candidate bill is paid only on rare shingles.
+    * Costs one df-count agg, one postings⋈df join and one per-document
+    * rank window (all linear in postings) against a quadratic-stage
+    * saving; verification is unchanged (exact, full sets). */
+  def jaccardPairsPrefix(docs: DataFrame, idCol: String,
+      shinglesCol: String, threshold: Double): DataFrame = {
+    val base = docs
+      .select(col(idCol).as("id"), hashedShingles(col(shinglesCol)).as("hs"))
+    val tok = base.select(col("id"), size(col("hs")).as("s"),
+      explode(col("hs")).as("h"))
+    val dfc = tok.groupBy("h").agg(count(lit(1)).as("df"))
+    val w = Window.partitionBy(col("id")).orderBy(col("df"), col("h"))
+    // ⌈t·s⌉ in EXACT decimal arithmetic, with t rounded DOWN at scale
+    // 12: the binary double for e.g. 0.55 sits a hair ABOVE its decimal
+    // value, so double ceil(t*s) can round past the true integer bound,
+    // shortening the prefix by one and silently dropping true pairs.
+    // Rounding t down errs only toward a LONGER prefix (more
+    // candidates, all still exact-verified) — recall stays 1 by
+    // construction for every (threshold, set-size) combination.
+    val tDec = new java.math.BigDecimal(threshold)
+      .setScale(12, java.math.RoundingMode.FLOOR)
+    val pruned = tok.join(dfc, "h")
+      .withColumn("r", row_number().over(w))
+      .where(col("r") <= col("s") - ceil(lit(tDec) * col("s")) + 1)
+    // PPJoin's POSITIONAL filter (Xiao WWW'08 §3.2) on top of the
+    // prefix filter: a match at ranks (r_a, r_b) bounds the overlap at
+    // 1 + min(s_a − r_a, s_b − r_b) — when this is the pair's
+    // globally-smallest common shingle, every other common shingle
+    // sits strictly after it in BOTH suffixes. J ≥ t needs
+    // O·(1+t) ≥ t·(s_a+s_b), so rows whose bound can't reach that drop
+    // BEFORE the pair-dedup and verify join; the same algebra gives the
+    // size filter t·max(s) ≤ min(s), applied first. Recall stays 1: a
+    // true pair's first-common-shingle row always passes (its bound ≥
+    // the real overlap), and t rounded down only widens the keep side
+    // (spec-asserted equal to exact [[jaccardPairs]]). Across six paired
+    // same-JVM A/B points against the plain ids-only prefix join it won
+    // five (1.4-1.9×) — the pairs killed before the dedup and verify
+    // stages repay the 3×-wider df²-stage rows (ARCHITECTURE.md).
+    val prefix = pruned.select(col("id"), col("h"), col("r"), col("s"))
+    val oneT = java.math.BigDecimal.ONE.add(tDec)
+    val candidates = prefix.as("a").join(prefix.as("b"),
+        col("a.h") === col("b.h") && col("a.id") < col("b.id")
+          && lit(tDec) * greatest(col("a.s"), col("b.s"))
+            <= least(col("a.s"), col("b.s"))
+          && lit(tDec) * (col("a.s") + col("b.s"))
+            <= lit(oneT) * (lit(1) +
+              least(col("a.s") - col("a.r"), col("b.s") - col("b.r"))))
+      .select(col("a.id").as("d1"), col("b.id").as("d2"))
+      .dropDuplicates("d1", "d2")
+    verifyPairs(base, candidates, threshold)
+  }
+
+  /** Exact-Jaccard verification of an ids-only candidate set against the
+    * full hashed-shingle sets — shared by the df-cap and prefix-filter
+    * candidate generators. */
+  private def verifyPairs(base: DataFrame, candidates: DataFrame,
+      threshold: Double): DataFrame = {
+    val sa = base.select(col("id").as("d1"), col("hs").as("hs_a"))
+    val sb = base.select(col("id").as("d2"), col("hs").as("hs_b"))
+    candidates.join(sa, "d1").join(sb, "d2")
+      .withColumn("jaccard", jaccard(col("hs_a"), col("hs_b")))
+      .where(col("jaccard") >= threshold)
+      .select(col("d1"), col("d2"), col("jaccard"))
+  }
+
   /** Exact n-gram Jaccard similarity pairs via a posting-list join on
     * HASHED shingles (8-byte join keys, not strings) — the
     * oracle-checkable exact counterpart of [[minhashLsh]].
@@ -534,93 +609,6 @@ object Dedup {
     * shingle arrays travel only in the final per-candidate verify join,
     * never through the df²-sized stage.
     */
-  /** Exact Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin, Bayardo
-    * et al. WWW'07 / Xiao et al. WWW'08 — public algorithms): order every
-    * document's hashed shingles by a single global total order (ascending
-    * document frequency, ties by hash) and generate candidates only from
-    * each document's first `|d| − ⌈t·|d|⌉ + 1` shingles. Any pair with
-    * Jaccard ≥ t shares its globally-smallest common shingle inside BOTH
-    * prefixes (if it were outside x's prefix, all ≥ ⌈t·|x|⌉ common
-    * shingles would fit in the ⌈t·|x|⌉ − 1 suffix slots), so recall is 1
-    * BY CONSTRUCTION — unlike the df-cap heuristic, nothing is traded.
-    * Rare-first ordering pushes stopword-grade shingles out of every
-    * prefix, so the Σ df² candidate bill is paid only on rare shingles.
-    * Costs one df-count agg, one postings⋈df join and one per-document
-    * rank window (all linear in postings) against a quadratic-stage
-    * saving; verification is unchanged (exact, full sets). */
-  def jaccardPairsPrefix(docs: DataFrame, idCol: String,
-      shinglesCol: String, threshold: Double,
-      positional: Boolean = true): DataFrame = {
-    val base = docs
-      .select(col(idCol).as("id"), hashedShingles(col(shinglesCol)).as("hs"))
-    val tok = base.select(col("id"), size(col("hs")).as("s"),
-      explode(col("hs")).as("h"))
-    val dfc = tok.groupBy("h").agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("id")).orderBy(col("df"), col("h"))
-    // ⌈t·s⌉ in EXACT decimal arithmetic, with t rounded DOWN at scale
-    // 12: the binary double for e.g. 0.55 sits a hair ABOVE its decimal
-    // value, so double ceil(t*s) can round past the true integer bound,
-    // shortening the prefix by one and silently dropping true pairs.
-    // Rounding t down errs only toward a LONGER prefix (more
-    // candidates, all still exact-verified) — recall stays 1 by
-    // construction for every (threshold, set-size) combination.
-    val tDec = new java.math.BigDecimal(threshold)
-      .setScale(12, java.math.RoundingMode.FLOOR)
-    val pruned = tok.join(dfc, "h")
-      .withColumn("r", row_number().over(w))
-      .where(col("r") <= col("s") - ceil(lit(tDec) * col("s")) + 1)
-    if (!positional) {
-      val prefix = pruned.select(col("id"), col("h"))
-      val candidates = prefix.as("a").join(prefix.as("b"),
-          col("a.h") === col("b.h") && col("a.id") < col("b.id"))
-        .select(col("a.id").as("d1"), col("b.id").as("d2"))
-        .dropDuplicates("d1", "d2")
-      verifyPairs(base, candidates, threshold)
-    } else {
-      // PPJoin's POSITIONAL filter (Xiao WWW'08 §3.2) on top of the
-      // prefix filter: a match at ranks (r_a, r_b) bounds the overlap
-      // at 1 + min(s_a − r_a, s_b − r_b) — when this is the pair's
-      // globally-smallest common shingle, every other common shingle
-      // sits strictly after it in BOTH suffixes. J ≥ t needs
-      // O·(1+t) ≥ t·(s_a+s_b), so rows whose bound can't reach that
-      // drop BEFORE the pair-dedup and verify join; the same algebra
-      // gives the size filter t·max(s) ≤ min(s), applied first.
-      // Recall stays 1: a true pair's first-common-shingle row always
-      // passes (its bound ≥ the real overlap), and t rounded down
-      // only widens the keep side (spec-asserted equal to the plain
-      // path). The DEFAULT since round 8: across six paired same-JVM
-      // A/B points it won five (1.4-1.9×) — the pairs killed before
-      // the dedup and verify stages repay the 3×-wider df²-stage rows
-      // (measurements in ARCHITECTURE.md); `positional = false` keeps
-      // the narrower ids-only plan.
-      val prefix = pruned.select(col("id"), col("h"), col("r"), col("s"))
-      val oneT = java.math.BigDecimal.ONE.add(tDec)
-      val candidates = prefix.as("a").join(prefix.as("b"),
-          col("a.h") === col("b.h") && col("a.id") < col("b.id")
-            && lit(tDec) * greatest(col("a.s"), col("b.s"))
-              <= least(col("a.s"), col("b.s"))
-            && lit(tDec) * (col("a.s") + col("b.s"))
-              <= lit(oneT) * (lit(1) +
-                least(col("a.s") - col("a.r"), col("b.s") - col("b.r"))))
-        .select(col("a.id").as("d1"), col("b.id").as("d2"))
-        .dropDuplicates("d1", "d2")
-      verifyPairs(base, candidates, threshold)
-    }
-  }
-
-  /** Exact-Jaccard verification of an ids-only candidate set against the
-    * full hashed-shingle sets — shared by the df-cap and prefix-filter
-    * candidate generators. */
-  private def verifyPairs(base: DataFrame, candidates: DataFrame,
-      threshold: Double): DataFrame = {
-    val sa = base.select(col("id").as("d1"), col("hs").as("hs_a"))
-    val sb = base.select(col("id").as("d2"), col("hs").as("hs_b"))
-    candidates.join(sa, "d1").join(sb, "d2")
-      .withColumn("jaccard", jaccard(col("hs_a"), col("hs_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("d1"), col("d2"), col("jaccard"))
-  }
-
   def jaccardPairs(docs: DataFrame, idCol: String, shinglesCol: String,
       threshold: Double, maxDocFreq: Long = Long.MaxValue): DataFrame = {
     val base = docs
@@ -1039,24 +1027,6 @@ object Dedup {
     * same width-vs-df trade as [[bandKeys]].
     * Output: (id_a, id_b, hamming); only (id, band-slice) longs and
     * (id, signature) longs ever shuffle. */
-  /** [[weightedSimhashPairs]] with the band width AUTO-SIZED to the
-    * corpus: width ≈ log2(n / targetOccupancy) keeps expected
-    * same-band occupancy — and therefore the n²/2^width candidate
-    * bill — CONSTANT as the corpus grows (the [[Similarity
-    * .autoBitsPerBand]] discipline; a fixed 32-bit signature measured
-    * 35× wall at 10× rows, pure band-bucket crowding). Width is
-    * clamped to [4, 15] so bands × width ≤ 60 composite-hash bits. */
-  def weightedSimhashPairsAuto(docs: DataFrame, idCol: String,
-      textCol: String, bands: Int = 4, maxHamming: Int = 3,
-      targetOccupancy: Long = 4L): DataFrame = {
-    val n = docs.count()
-    val needed = 64 - java.lang.Long.numberOfLeadingZeros(
-      math.max(1L, (n + targetOccupancy - 1) / targetOccupancy) - 1)
-    val width = math.min(15, math.max(4, needed))
-    weightedSimhashPairs(docs, idCol, textCol, bits = bands * width,
-      bands = bands, maxHamming = maxHamming)
-  }
-
   def weightedSimhashPairs(docs: DataFrame, idCol: String,
       textCol: String, bits: Int = 32, bands: Int = 4,
       maxHamming: Int = 3): DataFrame = {
@@ -1105,19 +1075,6 @@ object Dedup {
       maxHamming: Int = 3): DataFrame =
     labelsFromPairs(docs, idCol,
       weightedSimhashPairs(docs, idCol, textCol, bits, bands, maxHamming))
-
-  /** [[weightedSimhashClusters]] with [[weightedSimhashPairsAuto]]'s
-    * corpus-sized band width — the 100 TB default (the fixed 32-bit
-    * form above keeps the oracle-pinned x99 signature and hits the
-    * measured band-crowding wall at 10× rows: 150 s vs 12 s sfx10,
-    * the same 35×-class cliff the pair listing measured before auto
-    * width). Same output contract. */
-  def weightedSimhashClustersAuto(docs: DataFrame, idCol: String,
-      textCol: String, bands: Int = 4, maxHamming: Int = 3,
-      targetOccupancy: Long = 4L): DataFrame =
-    labelsFromPairs(docs, idCol,
-      weightedSimhashPairsAuto(docs, idCol, textCol, bands, maxHamming,
-        targetOccupancy))
 
   /** Shared survivor-label tail: escalating [[clusters]] over a pair
     * list, left-completed with singletons — public so a caller holding

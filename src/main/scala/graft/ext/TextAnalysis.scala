@@ -1407,7 +1407,6 @@ object TextAnalysis {
       salt: Int = DefaultScoreSalt): DataFrame = {
     require(smoothK > 0, "importance ratio needs smoothK > 0 (the " +
       "background probability must never be 0)")
-    import org.apache.spark.sql.types.DecimalType
     val bgf = docs.select(col(idCol).as("id"), isTarget.as("__t"),
         tokens(lower(col(textCol))).as("t"))
       .select(col("id"), col("__t"), explode(expr(
@@ -1426,11 +1425,6 @@ object TextAnalysis {
     // target model")
     val vb = c2.select(col("w2")).distinct().count()
     val vt = c2.where(col("cnt2_t") > 0).select(col("w2")).distinct().count()
-    def smoothed(cnt2: Column, cnt1: Column, v: Long): Column =
-      ((coalesce(cnt2, lit(0L)).cast("double") + lit(smoothK)) /
-        (coalesce(cnt1, lit(0L)).cast("double") +
-          lit(smoothK) * lit(v.toDouble)))
-        .cast(DecimalType(28, 12))
     val bg = bgf.select(col("id"), col("w1"), col("w2"))
     val saltCols = Seq(col("id"), col("w1"), col("w2"))
     def j(l: DataFrame, m: DataFrame, keys: Seq[String]): DataFrame =
@@ -1439,8 +1433,8 @@ object TextAnalysis {
         saltOn = saltCols)
     val withCounts = j(j(bg, c2, Seq("w1", "w2")), c1, Seq("w1"))
     val agg = withCounts
-      .withColumn("pt", smoothed(col("cnt2_t"), col("cnt1_t"), vt))
-      .withColumn("pb", smoothed(col("cnt2_b"), col("cnt1_b"), vb))
+      .withColumn("pt", smoothedProb(col("cnt2_t"), col("cnt1_t"), vt, smoothK))
+      .withColumn("pb", smoothedProb(col("cnt2_b"), col("cnt1_b"), vb, smoothK))
       .groupBy("id")
       .agg(count(lit(1)).as("n_bigrams"),
         (sum(col("pt")).cast("double") / sum(col("pb")).cast("double"))
@@ -1475,16 +1469,27 @@ object TextAnalysis {
       c2br, c1br, vt, vb, smoothK, salt)
   }
 
+  /** The importance family's add-k smoothed conditional
+    * (cnt2 + k) / (cnt1 + k·V) at scale 12, a missing count read as 0.
+    * A model with an EMPTY vocabulary (V = 0: a target predicate no
+    * document meets, or an empty target frame) defines no probability,
+    * so the column is null — and so is every importance built on it,
+    * the same null a document without a bigram gets — instead of a
+    * division by zero inside generated code. */
+  private def smoothedProb(cnt2: Column, cnt1: Column, v: Long,
+      smoothK: Double): Column = {
+    import org.apache.spark.sql.types.DecimalType
+    if (v == 0) lit(null).cast(DecimalType(28, 12))
+    else ((coalesce(cnt2, lit(0L)).cast("double") + lit(smoothK)) /
+      (coalesce(cnt1, lit(0L)).cast("double") +
+        lit(smoothK) * lit(v.toDouble)))
+      .cast(DecimalType(28, 12))
+  }
+
   private def importanceScoreWith(docs: DataFrame, idCol: String,
       textCol: String, c2t: DataFrame, c1t: DataFrame, c2b: DataFrame,
       c1b: DataFrame, vt: Long, vb: Long, smoothK: Double,
       salt: Int): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def smoothed(cnt2: Column, cnt1: Column, v: Long): Column =
-      ((coalesce(cnt2, lit(0L)).cast("double") + lit(smoothK)) /
-        (coalesce(cnt1, lit(0L)).cast("double") +
-          lit(smoothK) * lit(v.toDouble)))
-        .cast(DecimalType(28, 12))
     val bg = bigrams(docs, idCol, textCol)
     val saltCols = Seq(col("id"), col("w1"), col("w2"))
     def j(l: DataFrame, m: DataFrame, keys: Seq[String]): DataFrame =
@@ -1494,8 +1499,8 @@ object TextAnalysis {
     val withCounts = j(j(j(j(bg, c2t, Seq("w1", "w2")),
       c1t, Seq("w1")), c2b, Seq("w1", "w2")), c1b, Seq("w1"))
     val agg = withCounts
-      .withColumn("pt", smoothed(col("cnt2_t"), col("cnt1_t"), vt))
-      .withColumn("pb", smoothed(col("cnt2_b"), col("cnt1_b"), vb))
+      .withColumn("pt", smoothedProb(col("cnt2_t"), col("cnt1_t"), vt, smoothK))
+      .withColumn("pb", smoothedProb(col("cnt2_b"), col("cnt1_b"), vb, smoothK))
       .groupBy("id")
       .agg(count(lit(1)).as("n_bigrams"),
         (sum(col("pt")).cast("double") / sum(col("pb")).cast("double"))

@@ -29,12 +29,6 @@ object Cleansing {
     when(c.isin(sentinels: _*), lit(null))
       .otherwise(regexp_replace(c, "[,%]", ""))
 
-  /** Percent-encoded value → fraction at scale 4
-    * (reference: transform-load.2025-08-19.rkt:203 `$9::decimal / 100`,
-    * then trunc to 4 at :204). */
-  def pctToFraction(c: Column): Column =
-    truncTo(c.cast(org.apache.spark.sql.types.DecimalType(38, 8)) / lit(BigDecimal(100)), 4)
-
   /** 'C'/'P' → 'Call'/'Put' (reference:
     * transform-load.2025-08-19.rkt:195-198). */
   def sideDecode(c: Column): Column =

@@ -62,7 +62,13 @@ object PolyHashImpl {
     * string: UTF8String.reverse copies whole characters in reverse
     * order (forward `numBytesForFirstByte` strides), so the reversed
     * string's k-th character is the original's (n−1−k)-th — fold the
-    * original's codepoints back-to-front. */
+    * original's codepoints back-to-front.
+    *
+    * Bit-exact with `polyHash(reverse(str))` for VALID UTF-8 only. On
+    * malformed input (e.g. a truncated trailing multibyte sequence) the
+    * result is the fold of the decoder's per-stride codepoints (U+FFFD
+    * for an unparsable stride), which `reverse` need not reproduce —
+    * PropertySpec pins the truncated-tail value. */
   def hashReversed(str: UTF8String): Long = {
     val bytes = str.getBytes
     val nb = bytes.length

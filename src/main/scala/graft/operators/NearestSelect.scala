@@ -60,9 +60,4 @@ object NearestSelect {
     "0.94", "0.96", "0.97", "0.98", "0.99", "1.00", "1.01", "1.02",
     "1.03", "1.04", "1.06", "1.08", "1.10", "1.125", "1.15", "1.175",
     "1.20", "1.25", "1.30").map(BigDecimal(_))
-
-  /** Target expirations: folder date + {2,4,6,8} weeks
-    * (transform-load.2025-08-19.rkt:123-126). */
-  def targetExpirations(folderDate: Column): Seq[Column] =
-    Seq(2, 4, 6, 8).map(w => date_add(folderDate, 7 * w))
 }

@@ -68,23 +68,16 @@ class ExtSpec extends SparkSpec {
     // prefix lemma guarantees the smallest common shingle sits in both
     // prefixes no matter how hot it is
     assert(prefixed.contains((1L, 4L, 1.0)))
-    // real corpus, threshold variety: identical sets at t=0.8 too
+    // real corpus, threshold variety: the prefix + positional filters
+    // are pure candidate prunes — the pair set equals exact Jaccard's
     val sf = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select($"doc_id", TextAnalysis.shingles($"text", 3).as("sh"))
-    val u8 = rows(Dedup.jaccardPairs(sf, "doc_id", "sh", 0.8))
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val p8 = rows(Dedup.jaccardPairsPrefix(sf, "doc_id", "sh", 0.8))
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(p8 == u8)
-    // the PPJoin positional filter is a pure candidate prune — the
-    // exact pair set is unchanged at both thresholds
     for (t <- Seq(0.6, 0.8)) {
-      val pos = rows(Dedup.jaccardPairsPrefix(sf, "doc_id", "sh", t,
-          positional = true))
+      val exact = rows(Dedup.jaccardPairs(sf, "doc_id", "sh", t))
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val plain = rows(Dedup.jaccardPairsPrefix(sf, "doc_id", "sh", t))
+      val pruned = rows(Dedup.jaccardPairsPrefix(sf, "doc_id", "sh", t))
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(pos == plain, s"positional filter changed the pair set at t=$t")
+      assert(pruned == exact, s"prefix filters changed the pair set at t=$t")
     }
   }
 
@@ -932,9 +925,13 @@ class ExtSpec extends SparkSpec {
     val sf = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     cmp(sf, col("lang") === "en", sf.where(col("lang") === "en"),
       TextAnalysis.DefaultScoreSalt)
-    // degenerate predicates: empty target (all probability through the
-    // 1/V_t floor with V_t = 0 -> pt = k/0·... guard parity), full target
+    // degenerate predicates: full target, and an empty one — V_t = 0
+    // defines no target probability, so both forms score every row null
+    // (not a division by zero)
     cmp(docs, lit(true), docs, 1)
+    cmp(docs, lit(false), docs.where(lit(false)), 1)
+    assert(rows(TextAnalysis.importanceRatioScoreFlagged(docs, "doc_id",
+      "text", lit(false), salt = 1)).forall(_.isNullAt(2)))
     intercept[IllegalArgumentException] {
       TextAnalysis.importanceRatioScoreFlagged(docs, "doc_id", "text",
         lit(true), smoothK = 0.0)

@@ -483,4 +483,16 @@ class PropertySpec extends SparkSpec {
     assert(lit0 == hof0)
   }
 
+  test("PolyHashImpl.hashReversed on malformed UTF-8: a truncated " +
+      "trailing multibyte sequence folds as one U+FFFD (pinned)") {
+    import graft.functions.expressions.PolyHashImpl
+    import org.apache.spark.unsafe.types.UTF8String
+    // "ab" + the first two bytes of the 3-byte "€" (E2 82 AC): the last
+    // character's stride overruns the buffer and the JDK decoder turns
+    // the 2-byte remainder into U+FFFD (65533); folded back-to-front
+    val s = UTF8String.fromBytes(Array('a'.toByte, 'b'.toByte,
+      0xE2.toByte, 0x82.toByte))
+    assert(PolyHashImpl.hashReversed(s) == (65533L * 31 + 'b') * 31 + 'a')
+  }
+
 }
