@@ -33,18 +33,18 @@ import graft.sources.Tables
 object Harness {
 
   /** `local[$SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
-    * partitions, UTC session time zone, UI off, log level ERROR (WARN
-    * scans print stack traces that bury the one-line JSON outputs). */
+    * partitions, UTC session time zone, UI off. Logging is ERROR to
+    * stderr from JVM start (`log4j2.properties` on the main classpath):
+    * INFO startup lines and WARN scan stack traces would bury the
+    * one-line JSON outputs. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
   }
 
   /** The scale directory of the env-driven mains. */

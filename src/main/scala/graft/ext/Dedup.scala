@@ -1650,8 +1650,13 @@ object Dedup {
       .localCheckpoint(true) // feeds the bucket collect, the bloom
       // build AND the candidate join — three consumers, one expansion
     val nInVar = inVar.count()
-    val gated = if (nInVar == 0) {
-      exVariants.where(lit(false)) // empty batch: nothing can match
+    // an empty batch or an empty index matches nothing: the empty side
+    // becomes a plan-time empty relation, so no job scans the index.
+    // Found empty only at runtime, an empty strings table ends the
+    // query while the variants scan, no longer needed, keeps running
+    // after the action has returned
+    val gated = if (nInVar == 0 || exStrings.isEmpty) {
+      exVariants.where(lit(false))
     } else {
       val bloom = Bloom.buildHashed(inVar, col("v"),
         expectedItems = nInVar, fpp = 0.01)

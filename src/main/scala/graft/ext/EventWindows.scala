@@ -67,9 +67,9 @@ object EventWindows {
   }
 
   /** The window + z tail of [[rateAnomaly]] over an already-built
-    * (ws, key, c) counts table — shared with the streaming view
-    * ([[graft.streaming.Streams.rateAnomalyView]]), whose counts come
-    * from the additive ledger instead of a scan. */
+    * (ws, key, c) counts table — shared with the streaming form over
+    * [[graft.streaming.Streams.sumView]] of a (key, ws) ledger, whose
+    * counts come from the additive ledger instead of a scan. */
   def rateAnomalyFromCounts(counts: DataFrame, lookback: Int = 24,
       minPeriods: Int = 8): DataFrame = {
     require(lookback >= 2 && minPeriods >= 2 && minPeriods <= lookback,

@@ -572,7 +572,7 @@ object Stats {
     * streaming additive ledger folds to (the ksDriftFromCounts
     * discipline), so classifier evaluation has streaming views
     * bit-equal to the batch operators over everything ingested
-    * ([[graft.streaming.Streams.rocAucView]]). Same loud
+    * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). Same loud
     * `maxGridValues` guard as the units form — a streaming ledger
     * keyed by an unquantized score would otherwise grow the global
     * window without bound. */
@@ -690,7 +690,7 @@ object Stats {
 
   /** [[thresholdSweep]] over PRE-AGGREGATED (v, y, c) counts — the
     * streaming-ledger form
-    * ([[graft.streaming.Streams.thresholdSweepView]]). Same loud
+    * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). Same loud
     * `maxGridValues` guard as the units form. */
   def thresholdSweepFromCounts(counts: DataFrame,
       maxGridValues: Long = 10000000L): DataFrame = {
@@ -767,8 +767,8 @@ object Stats {
       .groupBy("v", "y").agg(count(lit(1)).as("c")), maxGridValues)
 
   /** [[averagePrecision]] over PRE-AGGREGATED (v, y, c) counts — the
-    * streaming-ledger form ([[graft.streaming.Streams.prAucView]]):
-    * the SAME (v, y) additive ledger that serves rocAuc /
+    * streaming-ledger form ([[graft.streaming.Streams.sumView]] of a
+    * (v, y) ledger): the SAME (v, y) additive ledger that serves rocAuc /
     * thresholdSweep / calibration also folds to exact AP. */
   def averagePrecisionFromCounts(counts: DataFrame,
       maxGridValues: Long = 10000000L): DataFrame = {
@@ -824,7 +824,7 @@ object Stats {
 
   /** [[averagePrecisionByGroup]] over PRE-AGGREGATED (g, v, y, c)
     * counts — the (g, v, y) grouped-ledger form
-    * ([[graft.streaming.Streams.apByGroupView]]). */
+    * ([[graft.streaming.Streams.sumView]] of a (g, v, y) ledger). */
   def averagePrecisionByGroupFromCounts(counts: DataFrame,
       maxGridValues: Long = 10000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -880,7 +880,7 @@ object Stats {
 
   /** [[mccSweep]] over PRE-AGGREGATED (v, y, c) counts — the SAME
     * (v, y) ledger as the rest of the classifier-eval family
-    * ([[graft.streaming.Streams.mccSweepView]]). */
+    * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). */
   def mccSweepFromCounts(counts: DataFrame,
       maxGridValues: Long = 10000000L): DataFrame = {
     val N = DecimalType(38, 0)
@@ -916,7 +916,7 @@ object Stats {
 
   /** [[gainsCurve]] over PRE-AGGREGATED (v, y, c) counts — the SAME
     * (v, y) ledger as the rest of the family
-    * ([[graft.streaming.Streams.gainsCurveView]]). */
+    * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). */
   def gainsCurveFromCounts(counts: DataFrame,
       maxGridValues: Long = 10000000L): DataFrame = {
     val N = DecimalType(38, 0)
@@ -1393,7 +1393,7 @@ object Stats {
 
   /** [[weightedKappa]] over PRE-AGGREGATED (a, b, c) cells — rides
     * the SAME (a, b) ledger as [[cohenKappaFromCounts]]
-    * ([[graft.streaming.Streams.weightedKappaView]]). */
+    * ([[graft.streaming.Streams.sumView]] of a (a, b) ledger). */
   def weightedKappaFromCounts(cells: DataFrame,
       quadratic: Boolean = true): DataFrame = {
     val N = DecimalType(38, 0)
@@ -1457,7 +1457,7 @@ object Stats {
 
   /** [[thresholdSweepByGroup]] over PRE-AGGREGATED (g, v, y, c)
     * counts — the (g, v, y) grouped-ledger form
-    * ([[graft.streaming.Streams.thresholdSweepByGroupView]]). */
+    * ([[graft.streaming.Streams.sumView]] of a (g, v, y) ledger). */
   def thresholdSweepByGroupFromCounts(counts: DataFrame,
       maxGridValues: Long = 10000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1558,7 +1558,7 @@ object Stats {
 
   /** [[calibrationBins]] over PRE-AGGREGATED (v, y, c) counts with
     * v the ppm probability — the streaming-ledger form
-    * ([[graft.streaming.Streams.calibrationView]]). */
+    * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). */
   def calibrationBinsFromCounts(counts: DataFrame, bins: Int = 10)
       : DataFrame = {
     require(bins >= 2 && bins <= 1000,
@@ -1613,7 +1613,7 @@ object Stats {
     * counts — the streaming-ledger form: the same (g, v, y) additive
     * ledger that serves [[rocAucByGroupFromCounts]] folds to
     * per-group reliability bins
-    * ([[graft.streaming.Streams.calibrationByGroupView]]). */
+    * ([[graft.streaming.Streams.sumView]] of a (g, v, y) ledger). */
   def calibrationBinsByGroupFromCounts(counts: DataFrame,
       bins: Int = 10): DataFrame = {
     require(bins >= 2 && bins <= 1000,
@@ -1854,7 +1854,7 @@ object Stats {
 
   /** [[cohenKappa]] over PRE-AGGREGATED (a, b, c) cells — the
     * streaming-ledger form
-    * ([[graft.streaming.Streams.cohenKappaView]]). */
+    * ([[graft.streaming.Streams.sumView]] of a (a, b) ledger). */
   def cohenKappaFromCounts(cells: DataFrame): DataFrame = {
     val N = DecimalType(38, 0)
     val grid = cells
@@ -1953,9 +1953,11 @@ object Stats {
       .withColumn("c", coalesce(col("c"), lit(0L)))
     val wg = Window.partitionBy("g").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = grid.withColumn("cum", sum(col("c")).over(wg))
-      .select(col("g"), col("n"), col("v"), col("cum"))
-      .localCheckpoint(true)
+    // run once, read by both sides of the pair self-join; an executed
+    // leaf, so no storage is pinned
+    val cum = org.apache.spark.sql.graft.Bridge.executedLeaf(
+      grid.withColumn("cum", sum(col("c")).over(wg))
+        .select(col("g"), col("n"), col("v"), col("cum")))
     val a = cum.select(col("g").as("src_a"), col("n").as("n_a"),
       col("v"), col("cum").as("cum_a"))
     val b = cum.select(col("g").as("src_b"), col("n").as("n_b"),

@@ -1,15 +1,104 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured-Streaming forms of the engine's incremental semantics
   * (SURVEY §2.8). These are plan transforms — they apply to a streaming
   * DataFrame (`spark.readStream…`) and are driven by `writeStream`; the
   * batch operators in graft.operators stay the source of truth for
   * semantics, and the specs assert the two agree.
+  *
+  * Every sink is one micro-batch body under [[eachBatch]] (the only
+  * `writeStream` in the engine), and a batch lands in its ledger by one
+  * of two rules — the streaming form of the reference's idempotent
+  * upsert (`INSERT … ON CONFLICT DO NOTHING`,
+  * transform-load.2025-08-19.rkt:209):
+  *  - [[appendPartial]]: stamp `_batch` and append. A replayed batch
+  *    appends a byte-identical copy under the same id, which readers
+  *    drop by deduping on (keys, _batch) — [[fold]] does it for the
+  *    sum/count/max ledgers; the HLL and KMV views merge with max and
+  *    distinct, which a replayed copy cannot change.
+  *  - [[overwriteBatch]]: stamp `_batch` and dynamic-overwrite that
+  *    one `_batch=N` partition. A replay rewrites its own partition;
+  *    a sink that judges a batch against the ledger reads
+  *    [[priorBatches]], which excludes it.
   */
 object Streams {
+
+  /** The one micro-batch runner: runs `body(batch, batchId)` for every
+    * micro-batch of `stream`, with `checkpoint` as the query's
+    * checkpoint location. foreachBatch is at-least-once — a crash
+    * between the body and the checkpoint commit re-runs the batch
+    * under the same id — which is what the two landing rules absorb. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .foreachBatch(body)
+      .start()
+
+  /** Landing rule 1: append `df` stamped with the batch id. */
+  private def appendPartial(df: DataFrame, batchId: Long,
+      path: String): Unit =
+    df.withColumn("_batch", lit(batchId)).write.mode("append").parquet(path)
+
+  /** Landing rule 2: write `df` as the `_batch=batchId` partition,
+    * replacing only that partition. */
+  private def overwriteBatch(df: DataFrame, batchId: Long,
+      path: String): Unit =
+    df.withColumn("_batch", lit(batchId)).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_batch")
+      .parquet(path)
+
+  /** True iff a `part-` file exists anywhere under `path` that a
+    * parquet read would see (hidden `_x`/`.x` entries skipped, `k=v`
+    * partition directories walked); stops at the first hit. An
+    * explicit FileSystem check, not exception-message parsing: a
+    * directory with no part file (a first batch whose rows were all
+    * filtered, or an empty dynamic-overwrite write, which leaves the
+    * directory behind) fails parquet schema inference, while any OTHER
+    * read failure — permissions, a corrupt footer — must propagate. */
+  private def hasData(spark: SparkSession, path: String): Boolean = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def visible(p: Path): Boolean = {
+      val n = p.getName
+      !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+    }
+    def walk(dir: Path): Boolean =
+      fs.listStatus(dir).iterator.filter(s => visible(s.getPath)).exists(s =>
+        if (s.isDirectory) walk(s.getPath)
+        else s.getPath.getName.startsWith("part-"))
+    fs.exists(root) && walk(root)
+  }
+
+  /** The [[overwriteBatch]] ledger at `path` below batch `batchId`, or
+    * None while it holds no data. The batch's own partition is
+    * excluded, so a replayed batch is judged against exactly what
+    * preceded it, never against its own earlier write. */
+  private def priorBatches(spark: SparkSession, path: String,
+      batchId: Long): Option[DataFrame] =
+    if (!hasData(spark, path)) None
+    else Some(spark.read.parquet(path)
+      .where(col("_batch").cast("long") < lit(batchId)))
+
+  /** The one fold over an [[appendPartial]] ledger: at-least-once
+    * replays collapsed by deduping on (keys, _batch) — which is what
+    * lets every view claim load ∘ load = load without a transactional
+    * sink — then `aggs` per key. The ledger is hash-partitioned by
+    * `keys` up front, which satisfies both the dedup and the per-key
+    * aggregate: the whole fold costs one exchange. */
+  private def fold(spark: SparkSession, path: String, keys: Seq[String])(
+      aggs: Column*): DataFrame =
+    spark.read.parquet(path).repartition(keys.map(col): _*)
+      .dropDuplicates(keys :+ "_batch")
+      .groupBy(keys.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
 
   /** Idempotent replay: PK dedup with state bounded by a watermark — the
     * streaming form of ON CONFLICT DO NOTHING (keep-first; reference:
@@ -42,38 +131,24 @@ object Streams {
     * never rewritten, so a 100 TB table costs one PK-projection scan per
     * batch (at real scale the PK set would sit in a bucketed/indexed
     * store; the shape — dedup, anti-join, append — is the same).
-    * Replayed batches insert nothing: load ∘ load = load.
+    * Replayed batches insert nothing: load ∘ load = load. The table
+    * holds the stream's own columns (no `_batch` stamp).
     *
     * Returns the started query; stop it when done. */
   def keepFirstSink(stream: DataFrame, pk: Seq[String],
       precedence: Seq[Column], tablePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val deduped = graft.operators.Upsert.keepFirst(batch, pk, precedence)
-        // explicit FileSystem existence check, not exception-message
-        // parsing: the table "exists" iff the dir holds at least one
-        // part file (a first batch whose rows were all filtered writes
-        // only _SUCCESS, and reading that dir fails schema inference).
-        // Any OTHER read failure — permissions, corrupt footer — must
-        // propagate, not silently skip the anti-join and break
-        // load ∘ load = load
-        val tableP = new org.apache.hadoop.fs.Path(tablePath)
-        val fs = tableP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasData = fs.exists(tableP) && fs.listStatus(tableP)
-          .exists(st => st.isFile && st.getPath.getName.startsWith("part-"))
-        val fresh =
-          if (hasData)
-            deduped.join(
-              spark.read.parquet(tablePath).select(pk.map(col): _*),
-              pk, "left_anti")
-          else deduped
-        fresh.write.mode("append").parquet(tablePath)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val deduped = graft.operators.Upsert.keepFirst(batch, pk, precedence)
+      val fresh =
+        if (hasData(spark, tablePath))
+          deduped.join(
+            spark.read.parquet(tablePath).select(pk.map(col): _*),
+            pk, "left_anti")
+        else deduped
+      fresh.write.mode("append").parquet(tablePath)
+    }
 
   /** foreachBatch last-wins sink (S10 streaming — the CDC form of
     * `ON CONFLICT DO UPDATE`): the table is an append-only LOG; each
@@ -90,21 +165,14 @@ object Streams {
     * identical rows under the same batch id, which the per-PK max
     * resolves to the same values: load ∘ load = load on the VIEW. */
   def lastWinsSink(stream: DataFrame, tablePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(tablePath)
-      }
-      .start()
+      : StreamingQuery =
+    eachBatch(stream, checkpoint)(appendPartial(_, _, tablePath))
 
   /** Current state of a [[lastWinsSink]] log: one row per PK, largest
     * (_batch, ord) wins. `ord` must fully determine order within a
     * batch (the batch operator's contract). Retains `_batch` so a
     * compacted log remains a valid log. */
-  def latestView(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+  def latestView(spark: SparkSession, tablePath: String,
       pk: Seq[String], ord: Seq[Column]): DataFrame =
     graft.operators.Upsert.lastWins(
       spark.read.parquet(tablePath), pk, col("_batch") +: ord)
@@ -117,7 +185,7 @@ object Streams {
     * run saw it" cost a filter, not a restore. Compaction folds history
     * away (its contract) — retain the log, or snapshot before
     * compacting, where time travel matters. */
-  def viewAsOf(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+  def viewAsOf(spark: SparkSession, tablePath: String,
       pk: Seq[String], ord: Seq[Column], asOfBatch: Long): DataFrame =
     graft.operators.Upsert.lastWins(
       spark.read.parquet(tablePath).where(col("_batch") <= asOfBatch),
@@ -133,13 +201,12 @@ object Streams {
     * racing the delete would be lost, and crash-safety across the swap
     * needs a transactional table format (which is what a production
     * deployment would put under this same log/fold/compact shape). */
-  def compactLog(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+  def compactLog(spark: SparkSession, tablePath: String,
       pk: Seq[String], ord: Seq[Column]): Unit =
     swapInPlace(spark, tablePath, latestView(spark, tablePath, pk, ord))
 
-  private def swapInPlace(spark: org.apache.spark.sql.SparkSession,
+  private def swapInPlace(spark: SparkSession,
       tablePath: String, folded: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
     val tmp = tablePath + ".compact"
     folded.write.mode("overwrite").parquet(tmp)
     val fs = new Path(tablePath)
@@ -164,36 +231,39 @@ object Streams {
     * view is a snapshot of the log files listed at that moment; call
     * the view again to see later batches. */
   def additiveSink(stream: DataFrame, keys: Seq[String], value: Column,
-      tablePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.groupBy(keys.map(col): _*)
-          .agg(sum(value.cast(org.apache.spark.sql.types.DecimalType(28, 4)))
-            .as("_psum"), count(lit(1)).as("_pcount"))
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(tablePath)
-      }
-      .start()
-
-  /** The log with at-least-once replays collapsed: foreachBatch can
-    * re-run a batch after a crash between the parquet append and the
-    * checkpoint commit, appending a byte-identical partial under the
-    * same batch id — deduping on (keys, _batch) makes the fold
-    * replay-idempotent, which is what lets the view claim
-    * load ∘ load = load without a transactional sink. The log is
-    * hash-partitioned by `keys` up front, which satisfies both the
-    * (keys, _batch) dedup and a following per-key fold: the whole fold
-    * costs one exchange. */
-  private def dedupedPartials(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, keys: Seq[String]): DataFrame =
-    spark.read.parquet(tablePath).repartition(keys.map(col): _*)
-      .dropDuplicates(keys :+ "_batch")
+      tablePath: String, checkpoint: String): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      appendPartial(batch.groupBy(keys.map(col): _*)
+        .agg(sum(value.cast(org.apache.spark.sql.types.DecimalType(28, 4)))
+          .as("_psum"), count(lit(1)).as("_pcount")), batchId, tablePath)
+    }
 
   /** Current state of an [[additiveSink]] log: one row per key with the
     * folded sum (double at the boundary) and count.
+    *
+    * CONTRACT: every `*FromCounts`/`*FromCells` tail in the engine,
+    * applied to this view, equals its batch operator over everything
+    * ingested (StreamingSpec asserts it tail by tail), so one count
+    * ledger serves every view of its key shape — project the view to
+    * the tail's columns, with `n` (the folded `_pcount`, one appended
+    * unit per observation) as the count:
+    *  - keys (g, v): [[graft.ext.Stats.ksDriftFromCounts]],
+    *    `psiFromCounts`, `ksMatrixFromCounts` and `cusumFromCounts`
+    *    (v as the period `p`), [[graft.ext.TextAnalysis.jsdMatrixFromCounts]]
+    *    (v as the token `tok`), and
+    *    [[graft.ext.Quantiles.quantileNormalizeFromCounts]] (g as
+    *    `group`, n as `n_gv`);
+    *  - keys (v, y), (g, v, y): the classifier-eval tails
+    *    (`rocAucFromCounts` … `gainsCurveFromCounts`, and their
+    *    `ByGroup` forms);
+    *  - keys (a, b): `cohenKappaFromCounts`, `weightedKappaFromCounts`;
+    *  - keys (key, ws), a count of 1 per event: the
+    *    [[graft.ext.EventWindows]] alarms (`rateAnomalyFromCounts`,
+    *    `calendarDensify`, `seasonalAnomalyFromCounts`, `levelShift`,
+    *    `dispersion`, `mannKendall`, `availability`, `theilSen`
+    *    `FromCounts`) over (ws, key, c = total);
+    *  - keys (stratum, cohort), the success flag as the value:
+    *    [[graft.ext.Stats.simpsonAuditFromCells]] over (n, k = total).
     *
     * The fold runs HERE, when the view is built (one job, one shuffle),
     * and the returned frame is a leaf over its shuffle output
@@ -203,26 +273,23 @@ object Streams {
     * a snapshot of the log files listed at that moment — the file
     * listing was already taken then — and partials appended later
     * show up in the next `sumView` call, not in this frame. */
-  def sumView(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+  def sumView(spark: SparkSession, tablePath: String,
       keys: Seq[String]): DataFrame =
     org.apache.spark.sql.graft.Bridge.executedLeaf(
-      dedupedPartials(spark, tablePath, keys)
-        .groupBy(keys.map(col): _*)
-        .agg(sum(col("_psum")).cast("double").as("total"),
-          sum(col("_pcount")).as("n")))
+      fold(spark, tablePath, keys)(
+        sum(col("_psum")).cast("double").as("total"),
+        sum(col("_pcount")).as("n")))
 
   /** Fold the additive log to one partial per key in place. Same
     * quiescence contract as [[compactLog]] — and additionally the
     * stream's last batch must be checkpoint-committed, because a
     * replay of a batch that compaction already folded away would
     * re-append it as a new partial. */
-  def compactAdditive(spark: org.apache.spark.sql.SparkSession,
+  def compactAdditive(spark: SparkSession,
       tablePath: String, keys: Seq[String]): Unit =
     swapInPlace(spark, tablePath,
-      dedupedPartials(spark, tablePath, keys)
-        .groupBy(keys.map(col): _*)
-        .agg(sum(col("_psum")).as("_psum"), sum(col("_pcount")).as("_pcount"),
-          max(col("_batch")).as("_batch")))
+      fold(spark, tablePath, keys)(sum(col("_psum")).as("_psum"),
+        sum(col("_pcount")).as("_pcount"), max(col("_batch")).as("_batch")))
 
   /** Streaming distinct-count maintenance — the cardinality member of
     * the incremental-view family: each micro-batch appends its PARTIAL
@@ -236,23 +303,17 @@ object Streams {
     * matter how long the stream runs, which is the whole point: exact
     * streaming distinct would grow state with every novel value. */
   def hllSink(stream: DataFrame, groupCol: String, value: Column,
-      tablePath: String, checkpoint: String, p: Int = 8)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.DistinctSketch.hllRegisters(batch, groupCol, value, p)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(tablePath)
-      }
-      .start()
+      tablePath: String, checkpoint: String, p: Int = 8): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      appendPartial(graft.ext.DistinctSketch.hllRegisters(batch, groupCol,
+        value, p), batchId, tablePath)
+    }
 
   /** Current estimate from an [[hllSink]] log: MAX-fold the register
     * partials, then the shared estimate tail — identical to what the
     * batch path would compute over everything ingested so far
     * (StreamingSpec asserts register-for-register equality). */
-  def hllView(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+  def hllView(spark: SparkSession, tablePath: String,
       p: Int = 8): DataFrame =
     graft.ext.DistinctSketch.hllEstimate(
       spark.read.parquet(tablePath)
@@ -268,146 +329,21 @@ object Streams {
     * grows k rows per (group, batch) until compacted by re-ranking —
     * the reader's own fold. */
   def kmvSink(stream: DataFrame, groupCol: String, value: Column,
-      tablePath: String, checkpoint: String, k: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      tablePath: String, checkpoint: String, k: Int = 64): StreamingQuery = {
     require(k >= 2, s"kmvSink: k=$k must be >= 2")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.DistinctSketch.kmvPartial(batch, groupCol, value, k)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(tablePath)
-      }
-      .start()
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      appendPartial(graft.ext.DistinctSketch.kmvPartial(batch, groupCol,
+        value, k), batchId, tablePath)
+    }
   }
 
   /** Current estimate from a [[kmvSink]] ledger: dedup (g, h), rank,
     * same estimate tail as the batch sketch. */
-  def kmvView(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+  def kmvView(spark: SparkSession, tablePath: String,
       k: Int = 64): DataFrame =
     graft.ext.DistinctSketch.kmvEstimate(
       spark.read.parquet(tablePath).select(col("g"), col("h"))
         .dropDuplicates("g", "h"), k)
-
-  /** Rate-anomaly view over an [[additiveSink]] ledger keyed on
-    * (key, ws): fold the per-batch count partials, then run the exact
-    * x119 z-score tail — the streaming ingestion-health alarm with
-    * ZERO bespoke state (the ledger is the same additive log every
-    * incremental aggregate here uses; counts of 1s fold exactly, so
-    * the long cast is lossless). */
-  def rateAnomalyView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, lookback: Int = 24, minPeriods: Int = 8)
-      : DataFrame =
-    graft.ext.EventWindows.rateAnomalyFromCounts(
-      sumView(spark, tablePath, Seq("key", "ws"))
-        .select(col("ws"), col("key"), col("total").cast("long").as("c")),
-      lookback, minPeriods)
-
-  /** CALENDAR-dense rate-anomaly view over the SAME [[additiveSink]]
-    * (key, ws) ledger as [[rateAnomalyView]]: densify the folded
-    * counts over the observed span (gap periods carry c = 0) and run
-    * the exact x207 trailing-z tail — the source-going-dark alarm,
-    * streaming-fed and bit-equal to batch
-    * [[graft.ext.EventWindows.calendarRateAnomaly]] over everything
-    * ingested (StreamingSpec). */
-  def calendarRateAnomalyView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, width: String, lookback: Int = 24,
-      minPeriods: Int = 8): DataFrame =
-    graft.ext.EventWindows.rateAnomalyFromCounts(
-      graft.ext.EventWindows.calendarDensify(
-        sumView(spark, tablePath, Seq("key", "ws"))
-          .select(col("ws"), col("key"),
-            col("total").cast("long").as("c")),
-        width),
-      lookback, minPeriods)
-
-  /** SEASONAL-profile anomaly view over the SAME [[additiveSink]]
-    * (key, ws) ledger — one count ledger now serves THREE ingestion
-    * alarms (trailing z, calendar-dense trailing z, hour-of-day
-    * seasonal z), each bit-equal to its batch operator over
-    * everything ingested (StreamingSpec). */
-  def seasonalAnomalyView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, width: String, minRef: Int = 3): DataFrame =
-    graft.ext.EventWindows.seasonalAnomalyFromCounts(
-      sumView(spark, tablePath, Seq("key", "ws"))
-        .select(col("ws"), col("key"), col("total").cast("long").as("c")),
-      width, minRef = minRef)
-
-  /** SIMPSON-paradox audit view over an [[additiveSink]] ledger keyed
-    * (stratum, cohort) with the success flag as the value: the
-    * ledger's (count, sum) pair IS the contingency cell (n, k) — both
-    * additive, so the fold is exact and the view runs the x213 tail
-    * bit-equal to batch [[graft.ext.Stats.simpsonAudit]] over
-    * everything ingested (StreamingSpec). The A/B family's mix-shift
-    * alarm, streaming-fed with zero bespoke state. */
-  def simpsonAuditView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.simpsonAuditFromCells(
-      sumView(spark, tablePath, Seq("stratum", "cohort"))
-        .select(col("stratum"), col("cohort"), col("n"),
-          col("total").cast("long").as("k")))
-
-  /** LEVEL-SHIFT locator view over the SAME [[additiveSink]]
-    * (key, ws) count ledger — the FOURTH alarm on one ledger
-    * (trailing z, calendar z, seasonal z, and now the change-point
-    * LOCATOR), bit-equal to batch
-    * [[graft.ext.EventWindows.levelShift]] over everything ingested
-    * (StreamingSpec). */
-  def levelShiftView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, width: String): DataFrame =
-    graft.ext.EventWindows.levelShiftFromCounts(
-      sumView(spark, tablePath, Seq("key", "ws"))
-        .select(col("ws"), col("key"), col("total").cast("long").as("c")),
-      width)
-
-  /** Arrival-DISPERSION view over the SAME [[additiveSink]] (key, ws)
-    * count ledger — the FIFTH alarm on one ledger (trailing z,
-    * calendar z, seasonal z, change-point locator, and now the
-    * burstiness read), bit-equal to batch
-    * [[graft.ext.EventWindows.dispersion]] over everything ingested
-    * (StreamingSpec). */
-  def dispersionView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, width: String): DataFrame =
-    graft.ext.EventWindows.dispersionFromCounts(
-      sumView(spark, tablePath, Seq("key", "ws"))
-        .select(col("ws"), col("key"), col("total").cast("long").as("c")),
-      width)
-
-  /** MANN–KENDALL trend view over the SAME [[additiveSink]] (key, ws)
-    * count ledger — the SIXTH alarm on one ledger, bit-equal to batch
-    * [[graft.ext.EventWindows.mannKendall]] over everything ingested
-    * (StreamingSpec). */
-  def mannKendallView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, width: String): DataFrame =
-    graft.ext.EventWindows.mannKendallFromCounts(
-      sumView(spark, tablePath, Seq("key", "ws"))
-        .select(col("ws"), col("key"), col("total").cast("long").as("c")),
-      width)
-
-  /** AVAILABILITY view over the SAME [[additiveSink]] (key, ws) count
-    * ledger — the SEVENTH read on one ledger (uptime + longest dark
-    * run beside the five alarms and the locator), bit-equal to batch
-    * [[graft.ext.EventWindows.availability]] over everything ingested
-    * (StreamingSpec). */
-  def availabilityView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, width: String): DataFrame =
-    graft.ext.EventWindows.availabilityFromCounts(
-      sumView(spark, tablePath, Seq("key", "ws"))
-        .select(col("ws"), col("key"), col("total").cast("long").as("c")),
-      width)
-
-  /** THEIL–SEN slope view over the SAME [[additiveSink]] (key, ws)
-    * count ledger — the EIGHTH read on one ledger (the robust trend
-    * MAGNITUDE beside the Mann–Kendall significance view), bit-equal
-    * to batch [[graft.ext.EventWindows.theilSen]] over everything
-    * ingested (StreamingSpec). */
-  def theilSenView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, width: String): DataFrame =
-    graft.ext.EventWindows.theilSenFromCounts(
-      sumView(spark, tablePath, Seq("key", "ws"))
-        .select(col("ws"), col("key"), col("total").cast("long").as("c")),
-      width)
 
   /** Streaming EMBEDDING-drift maintenance: each micro-batch appends
     * its [[graft.ext.Similarity.shardSums]] partial — per-(shard, dim)
@@ -421,28 +357,20 @@ object Streams {
     * the (_batch, shard, dim) dedup (a re-run batch appends
     * byte-identical decimal rows). */
   def centroidDriftSink(stream: DataFrame, idCol: String, vecCol: String,
-      shards: Int, tablePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Similarity.shardSums(batch, idCol, vecCol, shards)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(tablePath)
-      }
-      .start()
+      shards: Int, tablePath: String, checkpoint: String): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      appendPartial(graft.ext.Similarity.shardSums(batch, idCol, vecCol,
+        shards), batchId, tablePath)
+    }
 
   /** Fold a [[centroidDriftSink]] ledger to the per-shard drift rows —
     * [[graft.ext.Similarity.driftFromShardSums]] over the deduped,
     * batch-summed partials. */
-  def centroidDriftView(spark: org.apache.spark.sql.SparkSession,
+  def centroidDriftView(spark: SparkSession,
       tablePath: String): DataFrame =
     graft.ext.Similarity.driftFromShardSums(
-      spark.read.parquet(tablePath)
-        .dropDuplicates("_batch", "shard", "dim")
-        .groupBy("shard", "dim")
-        .agg(sum(col("s")).as("s"), sum(col("n_vecs")).as("n_vecs")))
+      fold(spark, tablePath, Seq("shard", "dim"))(
+        sum(col("s")).as("s"), sum(col("n_vecs")).as("n_vecs")))
 
   /** Streaming SHARDED-EXPORT sink — the x142 manifest-driven export
     * as a restart-safe ingest tail: each micro-batch is packed into
@@ -452,38 +380,33 @@ object Streams {
     * (_batch, shard_id) pair is the global shard key) and lands as
     * `_batch=N/shard_id=M/` JSONL partitions. Dynamic partition
     * overwrite by batch id keeps a replayed batch byte-idempotent —
-    * the same ledger discipline as every admission sink here.
+    * the [[overwriteBatch]] rule, partitioned one level deeper.
     * [[shardedExportManifest]] re-derives the manifest FROM DISK.
     * Appends (idCol, nTokensCol, textCol, _batch, shard_id). */
   def shardedExportSink(docStream: DataFrame, idCol: String,
       nTokensCol: String, textCol: String, shardTokens: Long,
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val plan = graft.ext.Sampling.shardPlan(
-            batch.select(col(idCol), col(nTokensCol)),
-            col(idCol), col(nTokensCol), shardTokens)
-          .select(col("id").as(idCol), col("shard_id"))
-        batch.select(col(idCol), col(nTokensCol), col(textCol))
-          .join(plan, Seq(idCol))
-          .withColumn("_batch", lit(batchId))
-          .repartition(col("shard_id"))
-          .sortWithinPartitions(col("shard_id"), col(idCol))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch", "shard_id")
-          .json(outPath)
-      }
-      .start()
+      outPath: String, checkpoint: String): StreamingQuery =
+    eachBatch(docStream, checkpoint) { (batch, batchId) =>
+      val plan = graft.ext.Sampling.shardPlan(
+          batch.select(col(idCol), col(nTokensCol)),
+          col(idCol), col(nTokensCol), shardTokens)
+        .select(col("id").as(idCol), col("shard_id"))
+      batch.select(col(idCol), col(nTokensCol), col(textCol))
+        .join(plan, Seq(idCol))
+        .withColumn("_batch", lit(batchId))
+        .repartition(col("shard_id"))
+        .sortWithinPartitions(col("shard_id"), col(idCol))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_batch", "shard_id")
+        .json(outPath)
+    }
 
   /** Disk-derived manifest over a [[shardedExportSink]] table: one row
     * per (_batch, shard_id) with doc count, token mass, and the id
     * range — what a downstream trainer actually reads, certified
     * (the x142 contract, per batch). */
-  def shardedExportManifest(spark: org.apache.spark.sql.SparkSession,
+  def shardedExportManifest(spark: SparkSession,
       outPath: String, idCol: String, nTokensCol: String): DataFrame = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
@@ -501,213 +424,19 @@ object Streams {
     * with this, every drift alarm in the engine (lexical TV, embedding
     * centroid, distribution SHAPE) has a streaming form bit-equal to
     * its batch operator over everything ingested (StreamingSpec). */
-  def ksDriftView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
+  def ksDriftView(spark: SparkSession, tablePath: String): DataFrame =
     graft.ext.Stats.ksDriftFromCounts(
       sumView(spark, tablePath, Seq("g", "v"))
         .select(col("g"), col("v"), col("n").as("c")))
 
-  /** Pairwise KS-MATRIX view over the same [[additiveSink]] (g, v)
-    * ledger as [[ksDriftView]]: fold the per-batch count partials and
-    * run the exact x165 two-sample tail — the group-vs-group
-    * distribution-shape matrix, streaming-fed and bit-equal to batch
-    * [[graft.ext.Stats.ksMatrix]] over everything ingested
-    * (StreamingSpec). One ledger serves both drift alarms. */
-  def ksMatrixView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.ksMatrixFromCounts(
-      sumView(spark, tablePath, Seq("g", "v"))
-        .select(col("g"), col("v"), col("n").as("c")))
-
-  /** QUANTILE-NORMALIZATION view over the SAME [[additiveSink]] (g, v)
-    * ledger as the KS/PSI/JSD family — the batch-effect corrector
-    * ([[graft.ext.Quantiles.quantileNormalize]]) streaming-fed and
-    * bit-equal to batch over everything ingested (StreamingSpec); the
-    * SIXTH view on the distribution ledger. Reads the OBSERVATION
-    * count `n` (the `_pcount` fold) like every sibling distribution
-    * view (KS/PSI/JSD) — the ledger convention is one appended unit
-    * per observation; the `total` value-sum column is NOT a count. */
-  def quantileNormalizeView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Quantiles.quantileNormalizeFromCounts(
-      sumView(spark, tablePath, Seq("g", "v"))
-        .select(col("g").as("group"), col("v"),
-          col("n").cast("long").as("n_gv")))
-
-  /** Exact ROC-AUC view over an [[additiveSink]] ledger keyed
-    * (v, y) — score value × binary label, one appended unit per
-    * scored document: fold the count partials and run the exact x240
-    * U-identity tail. ONE (v, y) ledger serves the whole
-    * classifier-eval family ([[thresholdSweepView]],
-    * [[calibrationView]]) — live gate monitoring bit-equal to the
-    * batch operators over everything ingested (StreamingSpec). */
-  def rocAucView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.rocAucFromCounts(
-      sumView(spark, tablePath, Seq("v", "y"))
-        .select(col("v"), col("y"), col("n").as("c")))
-
-  /** Threshold-sweep view over the SAME (v, y) ledger as
-    * [[rocAucView]] — the full precision/recall/F1/FPR operating
-    * table, streaming-fed. */
-  def thresholdSweepView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.thresholdSweepFromCounts(
-      sumView(spark, tablePath, Seq("v", "y"))
-        .select(col("v"), col("y"), col("n").as("c")))
-
-  /** Calibration view over the SAME (v, y) ledger as [[rocAucView]],
-    * with v the ppm probability — reliability bins streaming-fed;
-    * compose with [[graft.ext.Stats.expectedCalibrationError]] for
-    * the live ECE number. */
-  def calibrationView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, bins: Int = 10): DataFrame =
-    graft.ext.Stats.calibrationBinsFromCounts(
-      sumView(spark, tablePath, Seq("v", "y"))
-        .select(col("v"), col("y"), col("n").as("c")), bins)
-
-  /** Exact AVERAGE-PRECISION (PR-AUC) view over the SAME (v, y)
-    * ledger as [[rocAucView]] — the precision-recall read for
-    * imbalanced gates, streaming-fed and bit-equal to batch
-    * [[graft.ext.Stats.averagePrecision]] over everything ingested
-    * (StreamingSpec). The FOURTH view on one classifier-eval
-    * ledger. */
-  def prAucView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.averagePrecisionFromCounts(
-      sumView(spark, tablePath, Seq("v", "y"))
-        .select(col("v"), col("y"), col("n").as("c")))
-
-  /** Decision-curve view over the SAME (v, y) ledger as
-    * [[rocAucView]] — the live operating-point chooser under fixed
-    * unit costs, streaming-fed and bit-equal to batch
-    * [[graft.ext.Stats.decisionCurve]]. */
-  def decisionCurveView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, wTp: Long, wFp: Long, wFn: Long): DataFrame =
-    graft.ext.Stats.decisionCurveFromCounts(
-      sumView(spark, tablePath, Seq("v", "y"))
-        .select(col("v"), col("y"), col("n").as("c")), wTp, wFp, wFn)
-
-  /** MCC-sweep view over the SAME (v, y) ledger as [[rocAucView]] —
-    * the balanced confusion-matrix number per cut, streaming-fed and
-    * bit-equal to batch [[graft.ext.Stats.mccSweep]]. The SIXTH view
-    * on one classifier-eval ledger. */
-  def mccSweepView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.mccSweepFromCounts(
-      sumView(spark, tablePath, Seq("v", "y"))
-        .select(col("v"), col("y"), col("n").as("c")))
-
-  /** Gains/lift view over the SAME (v, y) ledger as [[rocAucView]] —
-    * the depth-based curation read, streaming-fed and bit-equal to
-    * batch [[graft.ext.Stats.gainsCurve]]. The SEVENTH view on one
-    * classifier-eval ledger. */
-  def gainsCurveView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.gainsCurveFromCounts(
-      sumView(spark, tablePath, Seq("v", "y"))
-        .select(col("v"), col("y"), col("n").as("c")))
-
-  /** Per-GROUP average-precision view over the SAME (g, v, y) ledger
-    * as [[rocAucByGroupView]] — per-source PR-space ranking quality,
-    * streaming-fed and bit-equal to batch
-    * [[graft.ext.Stats.averagePrecisionByGroup]]. */
-  def apByGroupView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.averagePrecisionByGroupFromCounts(
-      sumView(spark, tablePath, Seq("g", "v", "y"))
-        .select(col("g"), col("v"), col("y"), col("n").as("c")))
-
-  /** Weighted-kappa view over the SAME (a, b) ledger as
-    * [[cohenKappaView]] — ordinal chance-corrected agreement,
-    * streaming-fed and bit-equal to batch
-    * [[graft.ext.Stats.weightedKappa]]. One rater-pair ledger now
-    * serves both agreement reads. */
-  def weightedKappaView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, quadratic: Boolean = true): DataFrame =
-    graft.ext.Stats.weightedKappaFromCounts(
-      sumView(spark, tablePath, Seq("a", "b"))
-        .select(col("a"), col("b"), col("n").as("c")), quadratic)
-
-  /** Per-GROUP ROC-AUC view over an [[additiveSink]] ledger keyed
-    * (g, v, y) — source × score × label, one appended unit per scored
-    * document: fold the count partials and run the exact x244
-    * partitioned U-identity tail. The (g, v, y) ledger is the grouped
-    * twin of the (v, y) one (documented beside it): its g-marginal
-    * folds to the pooled ledger, so ONE grouped ledger can serve both
-    * the per-source audit and every pooled view. Streaming-fed,
-    * bit-equal to batch [[graft.ext.Stats.rocAucByGroup]] over
-    * everything ingested (StreamingSpec). */
-  def rocAucByGroupView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.rocAucByGroupFromCounts(
-      sumView(spark, tablePath, Seq("g", "v", "y"))
-        .select(col("g"), col("v"), col("y"), col("n").as("c")))
-
-  /** Per-GROUP threshold-sweep view over the SAME (g, v, y) ledger
-    * as [[rocAucByGroupView]] — every source's live operating table,
-    * streaming-fed and bit-equal to batch
-    * [[graft.ext.Stats.thresholdSweepByGroup]]. */
-  def thresholdSweepByGroupView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.thresholdSweepByGroupFromCounts(
-      sumView(spark, tablePath, Seq("g", "v", "y"))
-        .select(col("g"), col("v"), col("y"), col("n").as("c")))
-
-  /** Per-GROUP calibration view over the SAME (g, v, y) ledger as
-    * [[rocAucByGroupView]], with v the ppm probability — per-source
-    * reliability bins, streaming-fed and bit-equal to batch
-    * [[graft.ext.Stats.calibrationBinsByGroup]]. */
-  def calibrationByGroupView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, bins: Int = 10): DataFrame =
-    graft.ext.Stats.calibrationBinsByGroupFromCounts(
-      sumView(spark, tablePath, Seq("g", "v", "y"))
-        .select(col("g"), col("v"), col("y"), col("n").as("c")), bins)
-
-  /** Cohen's-kappa view over an [[additiveSink]] ledger keyed
-    * (a, b) — the two raters' verdict pair per unit: chance-corrected
-    * agreement streaming-fed, bit-equal to batch
-    * [[graft.ext.Stats.cohenKappa]] over everything ingested. */
-  def cohenKappaView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.Stats.cohenKappaFromCounts(
-      sumView(spark, tablePath, Seq("a", "b"))
-        .select(col("a"), col("b"), col("n").as("c")))
-
   /** PSI view over the SAME [[additiveSink]] (g, v) ledger as
-    * [[ksDriftView]]/[[ksMatrixView]] — one count ledger now serves
-    * three distribution alarms (KS shape, pairwise KS, and the
-    * scorecard-monitoring PSI), each bit-equal to its batch operator
-    * over everything ingested (StreamingSpec). */
-  def psiView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
+    * [[ksDriftView]] — the scorecard-monitoring PSI beside the KS
+    * shape alarm, bit-equal to batch [[graft.ext.Stats.psi]] over
+    * everything ingested (StreamingSpec). */
+  def psiView(spark: SparkSession, tablePath: String): DataFrame =
     graft.ext.Stats.psiFromCounts(
       sumView(spark, tablePath, Seq("g", "v"))
         .select(col("g"), col("v"), col("n").as("c")))
-
-  /** CUSUM view over an [[additiveSink]] (g, v) ledger where v is the
-    * PERIOD: fold the per-batch count partials and run the exact x194
-    * sequential-alarm tail — the drift family's change-point detector,
-    * streaming-fed and bit-equal to batch [[graft.ext.Stats.cusum]]
-    * over everything ingested (StreamingSpec). */
-  def cusumView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, kMicro: Long, hMicro: Long): DataFrame =
-    graft.ext.Stats.cusumFromCounts(
-      sumView(spark, tablePath, Seq("g", "v"))
-        .select(col("g"), col("v").as("p"), col("n").as("c")),
-      kMicro, hMicro)
-
-  /** Pairwise JSD-matrix view over an [[additiveSink]] (g, v) ledger
-    * where v is the TOKEN: fold the per-batch count partials and run
-    * the exact x188 divergence tail — the lexical mirror audit,
-    * streaming-fed and bit-equal to batch
-    * [[graft.ext.TextAnalysis.jsdMatrix]] over everything ingested
-    * (StreamingSpec). */
-  def jsdMatrixView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
-    graft.ext.TextAnalysis.jsdMatrixFromCounts(
-      sumView(spark, tablePath, Seq("g", "v"))
-        .select(col("g"), col("v").as("tok"), col("n").as("c")))
 
   /** Streaming PCA-MOMENT ledger: each micro-batch appends its exact
     * partial covariance moments — per-dim (count, Σxq) and per-dim-
@@ -718,30 +447,23 @@ object Streams {
     * per batch regardless of batch size. */
   def pcaMomentsSink(vecStream: DataFrame, idCol: String,
       vecCol: String, tablePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val N0 = org.apache.spark.sql.types.DecimalType(38, 0)
-    vecStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pe = batch.select(col(idCol).as("__id"),
-            posexplode(col(vecCol)).as(Seq("__i", "__x")))
-          .select(col("__id"), col("__i"),
-            floor(col("__x").cast("double") * lit(1e6)).cast("long")
-              .as("__xq"))
-          .localCheckpoint(true) // feeds both partial tables
-        pe.groupBy("__i")
-          .agg(count(lit(1)).as("_pn"), sum(col("__xq").cast(N0)).as("_pt"))
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(s"$tablePath/dims")
-        pe.as("a").join(pe.as("b"), Seq("__id"))
-          .groupBy(col("a.__i").as("__ia"), col("b.__i").as("__ib"))
-          .agg(sum(col("a.__xq").cast(N0) * col("b.__xq").cast(N0))
-            .as("_ps"))
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(s"$tablePath/moments")
-      }
-      .start()
+    eachBatch(vecStream, checkpoint) { (batch, batchId) =>
+      val pe = batch.select(col(idCol).as("__id"),
+          posexplode(col(vecCol)).as(Seq("__i", "__x")))
+        .select(col("__id"), col("__i"),
+          floor(col("__x").cast("double") * lit(1e6)).cast("long")
+            .as("__xq"))
+        .localCheckpoint(true) // feeds both partial tables
+      appendPartial(pe.groupBy("__i")
+        .agg(count(lit(1)).as("_pn"), sum(col("__xq").cast(N0)).as("_pt")),
+        batchId, s"$tablePath/dims")
+      appendPartial(pe.as("a").join(pe.as("b"), Seq("__id"))
+        .groupBy(col("a.__i").as("__ia"), col("b.__i").as("__ib"))
+        .agg(sum(col("a.__xq").cast(N0) * col("b.__xq").cast(N0))
+          .as("_ps")), batchId, s"$tablePath/moments")
+    }
   }
 
   /** Top-principal-component view over a [[pcaMomentsSink]] ledger:
@@ -749,16 +471,14 @@ object Streams {
     * iteration + normalization — bit-equal to batch
     * [[graft.ext.Pca.topComponent]] over everything ingested
     * (StreamingSpec). */
-  def topComponentView(spark: org.apache.spark.sql.SparkSession,
+  def topComponentView(spark: SparkSession,
       tablePath: String, iters: Int = 4): DataFrame =
     graft.ext.Pca.normalizeComponent(
       graft.ext.Pca.powerVectorFromMoments(
-        dedupedPartials(spark, s"$tablePath/dims", Seq("__i"))
-          .groupBy("__i")
-          .agg(sum(col("_pn")).as("__n"), sum(col("_pt")).as("__t")),
-        dedupedPartials(spark, s"$tablePath/moments", Seq("__ia", "__ib"))
-          .groupBy("__ia", "__ib")
-          .agg(sum(col("_ps")).as("__s")),
+        fold(spark, s"$tablePath/dims", Seq("__i"))(
+          sum(col("_pn")).as("__n"), sum(col("_pt")).as("__t")),
+        fold(spark, s"$tablePath/moments", Seq("__ia", "__ib"))(
+          sum(col("_ps")).as("__s")),
         iters))
 
   /** Streaming A/B MOMENT ledger: each micro-batch appends its
@@ -768,21 +488,13 @@ object Streams {
     * with a second moment riding along). Σx² partials are computed at
     * (18,4)² → (37,8) inside each batch and stored at (38,8). */
   def abMomentsSink(units: DataFrame, cohort: Column, value: Column,
-      tablePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val D = org.apache.spark.sql.types.DecimalType(18, 4)
-    units.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val xd = value.cast(D)
-        batch.groupBy(cohort.as("cohort"))
-          .agg(count(lit(1)).as("_pn"), sum(xd).as("_ps"),
-            sum(xd * xd).as("_pss"))
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(tablePath)
-      }
-      .start()
+      tablePath: String, checkpoint: String): StreamingQuery = {
+    val xd = value.cast(org.apache.spark.sql.types.DecimalType(18, 4))
+    eachBatch(units, checkpoint) { (batch, batchId) =>
+      appendPartial(batch.groupBy(cohort.as("cohort"))
+        .agg(count(lit(1)).as("_pn"), sum(xd).as("_ps"),
+          sum(xd * xd).as("_pss")), batchId, tablePath)
+    }
   }
 
   /** Welch t-test view over an [[abMomentsSink]] ledger: fold the
@@ -790,13 +502,10 @@ object Streams {
     * batching-independent) and run the x184 Welch tail. The streaming
     * A/B readout is bit-equal to batch [[graft.ext.Stats.welchT]]
     * over everything ingested (StreamingSpec). */
-  def welchView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame =
+  def welchView(spark: SparkSession, tablePath: String): DataFrame =
     graft.ext.Stats.welchTFromMoments(
-      dedupedPartials(spark, tablePath, Seq("cohort"))
-        .groupBy("cohort")
-        .agg(sum(col("_pn")).as("n"), sum(col("_ps")).as("s"),
-          sum(col("_pss")).as("ss")))
+      fold(spark, tablePath, Seq("cohort"))(sum(col("_pn")).as("n"),
+        sum(col("_ps")).as("s"), sum(col("_pss")).as("ss")))
 
   /** Streaming ADMISSION against a PERSISTED LSH dedup index — the
     * [[modelAssignSink]] frozen-artifact discipline applied to
@@ -809,29 +518,20 @@ object Streams {
     * indexed corpus — duplicates WITHIN the stream pass (by design:
     * the index is the authority; compose the ledgered
     * [[semanticAdmitSink]]-style cross-batch state, or re-index and
-    * restart, when stream-internal dedup is wanted). Appends admitted
-    * rows as `_batch=N/` dynamic-overwrite partitions
-    * (replay-idempotent). */
+    * restart, when stream-internal dedup is wanted). Lands admitted
+    * rows by [[overwriteBatch]] (replay-idempotent). */
   def lshAdmitSink(docStream: DataFrame, indexDir: String, idCol: String,
       shinglesCol: String, outPath: String, checkpoint: String,
       numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.6)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val spark = docStream.sparkSession
     val exBands = spark.read.parquet(s"$indexDir/bands").localCheckpoint()
     val exHs = spark.read.parquet(s"$indexDir/shingles").localCheckpoint()
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Dedup.dedupAgainstLoadedIndex(exBands, exHs, batch,
-            idCol, shinglesCol, numHashes, bands, threshold)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch")
-          .parquet(outPath)
-      }
-      .start()
+    eachBatch(docStream, checkpoint) { (batch, batchId) =>
+      overwriteBatch(graft.ext.Dedup.dedupAgainstLoadedIndex(exBands, exHs,
+        batch, idCol, shinglesCol, numHashes, bands, threshold),
+        batchId, outPath)
+    }
   }
 
   /** Streaming ADMISSION against a PERSISTED symmetric-delete variant
@@ -846,11 +546,10 @@ object Streams {
     * admission is judged ONLY against the indexed records — variants
     * WITHIN the stream pass; records shorter than min_len are
     * unjudgeable and pass (the same exclusion the index applied).
-    * Appends admitted rows as `_batch=N/` dynamic-overwrite
-    * partitions (replay-idempotent). */
+    * Lands admitted rows by [[overwriteBatch]] (replay-idempotent). */
   def linkageAdmitSink(recStream: DataFrame, indexDir: String,
       idCol: String, strCol: String, outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val spark = recStream.sparkSession
     val paramsDf = spark.read.parquet(s"$indexDir/params")
     val params = paramsDf.head()
@@ -864,21 +563,13 @@ object Streams {
       params.getAs[Int]("n_buckets") else 0
     val exV = spark.read.parquet(s"$indexDir/variants").localCheckpoint()
     val exS = spark.read.parquet(s"$indexDir/strings").localCheckpoint()
-    recStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val matched = graft.ext.Dedup.linkAgainstLoadedIndex(exV, exS,
-            batch, idCol, strCol, maxDist, minLen, nBuckets)
-          .select(col("id").as(idCol)).distinct()
-        batch.join(matched, Seq(idCol), "left_anti")
-          .withColumn("_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch")
-          .parquet(outPath)
-      }
-      .start()
+    eachBatch(recStream, checkpoint) { (batch, batchId) =>
+      val matched = graft.ext.Dedup.linkAgainstLoadedIndex(exV, exS,
+          batch, idCol, strCol, maxDist, minLen, nBuckets)
+        .select(col("id").as(idCol)).distinct()
+      overwriteBatch(batch.join(matched, Seq(idCol), "left_anti"),
+        batchId, outPath)
+    }
   }
 
   /** Streaming SEMANTIC-NEIGHBOR serving against a PERSISTED SIF
@@ -897,38 +588,26 @@ object Streams {
     * of scope (re-index and restart to refresh, the Ivf refresh
     * contract); a document whose terms are all OOV emits nothing;
     * stream ids must not collide with corpus ids (the self-exclusion
-    * in the ranker would silently drop the corpus row). Appends
-    * (query_id, rank, neighbor_id, cosine) as `_batch=N/`
-    * dynamic-overwrite partitions (replay-idempotent). */
+    * in the ranker would silently drop the corpus row). Lands
+    * (query_id, rank, neighbor_id, cosine) by [[overwriteBatch]]
+    * (replay-idempotent). */
   def sifNeighborSink(docStream: DataFrame, weightsPath: String,
       cellsPath: String, idCol: String, textCol: String, dim: Int,
-      k: Int, outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      k: Int, outPath: String, checkpoint: String): StreamingQuery = {
     val spark = docStream.sparkSession
     val w = graft.ext.TextAnalysis.loadSifWeights(spark, weightsPath)
       .localCheckpoint()
-    val corpus = graft.ext.TextAnalysis.loadSifCells(spark, cellsPath)
-      .groupBy("id")
+    def vectors(cells: DataFrame): DataFrame = cells.groupBy("id")
       .agg(transform(array_sort(collect_list(struct(col("dim"),
         col("v")))), x => x.getField("v")).as("embedding"))
-      .localCheckpoint()
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val q = graft.ext.TextAnalysis.sifEmbedFrozen(batch, idCol,
-            textCol, w, dim)
-          .groupBy("id")
-          .agg(transform(array_sort(collect_list(struct(col("dim"),
-            col("v")))), x => x.getField("v")).as("embedding"))
-        graft.ext.Similarity.bruteTopK(q, corpus, "id", "embedding", k)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch")
-          .parquet(outPath)
-      }
-      .start()
+    val corpus = vectors(graft.ext.TextAnalysis.loadSifCells(spark,
+      cellsPath)).localCheckpoint()
+    eachBatch(docStream, checkpoint) { (batch, batchId) =>
+      val q = vectors(graft.ext.TextAnalysis.sifEmbedFrozen(batch, idCol,
+        textCol, w, dim))
+      overwriteBatch(graft.ext.Similarity.bruteTopK(q, corpus, "id",
+        "embedding", k), batchId, outPath)
+    }
   }
 
   /** Streaming SOURCE-CENTROID ledger: per micro-batch, the
@@ -938,30 +617,20 @@ object Streams {
     * own source column. [[centroidMatrixView]] folds the ledger to
     * the exact x174 pair-cosine matrix over everything ingested. */
   def centroidMatrixSink(stream: DataFrame, source: Column, vec: Column,
-      tablePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Similarity.sourceSums(batch, source, vec)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(tablePath)
-      }
-      .start()
+      tablePath: String, checkpoint: String): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      appendPartial(graft.ext.Similarity.sourceSums(batch, source, vec),
+        batchId, tablePath)
+    }
 
   /** Fold a [[centroidMatrixSink]] ledger to the exact batch
     * [[graft.ext.Similarity.sourceCentroidMatrix]]: dedup replayed
     * partials on (src, dim, _batch), re-sum to (20,8), pair tail. */
-  def centroidMatrixView(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(20, 8)
+  def centroidMatrixView(spark: SparkSession,
+      tablePath: String): DataFrame =
     graft.ext.Similarity.sourceCentroidMatrixFromSums(
-      spark.read.parquet(tablePath)
-        .dropDuplicates("src", "dim", "_batch")
-        .groupBy("src", "dim")
-        .agg(sum(col("s")).cast(D).as("s")))
-  }
+      fold(spark, tablePath, Seq("src", "dim"))(sum(col("s"))
+        .cast(org.apache.spark.sql.types.DecimalType(20, 8)).as("s")))
 
   /** Streaming RFM ledger: per micro-batch, one (user, last_us,
     * frequency, spend) MERGEABLE partial row — max is max-mergeable,
@@ -973,35 +642,27 @@ object Streams {
     * _batch id and the view dedups on (user, _batch). */
   def rfmSink(events: DataFrame, userCol: Column, ts: Column,
       value: Column, tablePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.groupBy(userCol.as("user_id")).agg(
-            max(unix_micros(ts)).as("_plast"),
-            count(lit(1)).as("_pcount"),
-            sum(value.cast(org.apache.spark.sql.types.DecimalType(18, 4)))
-              .as("_psum"))
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(tablePath)
-      }
-      .start()
+      : StreamingQuery =
+    eachBatch(events, checkpoint) { (batch, batchId) =>
+      appendPartial(batch.groupBy(userCol.as("user_id")).agg(
+          max(unix_micros(ts)).as("_plast"),
+          count(lit(1)).as("_pcount"),
+          sum(value.cast(org.apache.spark.sql.types.DecimalType(18, 4)))
+            .as("_psum")), batchId, tablePath)
+    }
 
   /** Fold an [[rfmSink]] ledger to the exact batch
     * [[graft.ext.EventWindows.rfm]] table over everything ingested:
     * dedup replayed partials on (user, _batch), merge (max, sum,
     * sum), then the same as-of recency + NTILE bucket tail. */
-  def rfmView(spark: org.apache.spark.sql.SparkSession,
+  def rfmView(spark: SparkSession,
       tablePath: String, buckets: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val merged = spark.read.parquet(tablePath)
-      .dropDuplicates("user_id", "_batch")
-      .groupBy("user_id").agg(
-        max(col("_plast")).as("__last"),
-        sum(col("_pcount")).as("frequency"),
-        sum(col("_psum"))
-          .cast(org.apache.spark.sql.types.DecimalType(18, 4)).as("__m"))
+    val merged = fold(spark, tablePath, Seq("user_id"))(
+      max(col("_plast")).as("__last"),
+      sum(col("_pcount")).as("frequency"),
+      sum(col("_psum"))
+        .cast(org.apache.spark.sql.types.DecimalType(18, 4)).as("__m"))
     val asof = merged.agg(max(col("__last")).as("__mx"))
     val dayUs = 86400000000L
     val age = col("__mx") - col("__last")
@@ -1028,35 +689,24 @@ object Streams {
     * ONCE at stream start, and every micro-batch of vectors is
     * assigned under those FROZEN cell boundaries
     * ([[graft.ext.Ivf.assignModel]] — bit-identical to batch
-    * assignment under the same loaded model, StreamingSpec). Appends
-    * (neighbor_id, cid) rows as `_batch=N/` partitions with dynamic
-    * partition overwrite, so a replayed batch rewrites its own
-    * partition byte-identically (the ledger discipline). Restart-safe
+    * assignment under the same loaded model, StreamingSpec). Lands
+    * (neighbor_id, cid) rows by [[overwriteBatch]], so a replayed
+    * batch rewrites its own partition byte-identically. Restart-safe
     * by construction: the saved model IS the state — a restart
     * re-loads the same files and serves the same assignments; to
     * re-index, retrain + save, then restart the stream (the
     * frozen-stats refresh contract). */
   def modelAssignSink(vecStream: DataFrame, modelPath: String,
       idCol: String, vecCol: String, outPath: String, checkpoint: String,
-      twoLevel: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      twoLevel: Boolean = false): StreamingQuery = {
     val spark = vecStream.sparkSession
     val model: graft.ext.Ivf.Model =
       if (twoLevel) graft.ext.Ivf.loadModelTwoLevel(spark, modelPath)
       else graft.ext.Ivf.FlatModel(graft.ext.Ivf.loadModel(spark, modelPath))
-    vecStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Ivf.assignModel(batch, idCol, vecCol, model)
-          .select(col("neighbor_id"), col("cid"))
-          .withColumn("_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch")
-          .parquet(outPath)
-      }
-      .start()
+    eachBatch(vecStream, checkpoint) { (batch, batchId) =>
+      overwriteBatch(graft.ext.Ivf.assignModel(batch, idCol, vecCol, model)
+        .select(col("neighbor_id"), col("cid")), batchId, outPath)
+    }
   }
 
   /** Streaming distribution-drift monitor: score every micro-batch's
@@ -1073,18 +723,11 @@ object Streams {
     * dedup on _batch like every ledger here). */
   def driftMonitorSink(stream: DataFrame, textCol: String,
       corpusCounts: DataFrame, corpusTotal: Long, tablePath: String,
-      checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.TextAnalysis
-          .tvAgainstCorpus(batch, textCol, corpusCounts, corpusTotal)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(tablePath)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      appendPartial(graft.ext.TextAnalysis.tvAgainstCorpus(batch, textCol,
+        corpusCounts, corpusTotal), batchId, tablePath)
+    }
 
   /** Diff→CDC bridge: maintain a parquet table by APPLYING a stream of
     * [[graft.operators.Diff.snapshotDiff]] rows incrementally — the
@@ -1109,32 +752,23 @@ object Streams {
     * a production table format would provide (see [[compactLog]]'s
     * contract). */
   def applyDiffSink(diffStream: DataFrame, pk: Seq[String],
-      tablePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    diffStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val vals = batch.columns.filter(_.startsWith("new_"))
-          .map(_.stripPrefix("new_")).toSeq
-        val incoming = batch.where(col("change").isin("added", "changed"))
-          .select(pk.map(col) ++ vals.map(c => col("new_" + c).as(c)): _*)
-        val tableP = new org.apache.hadoop.fs.Path(tablePath)
-        val fs = tableP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasData = fs.exists(tableP) && fs.listStatus(tableP)
-          .exists(st => st.isFile && st.getPath.getName.startsWith("part-"))
-        if (!hasData) {
-          incoming.write.mode("overwrite").parquet(tablePath)
-        } else {
-          val touched = batch.select(pk.map(col): _*)
-          val next = spark.read.parquet(tablePath)
-            .join(touched, pk, "left_anti")
-            .unionByName(incoming)
-          swapInPlace(spark, tablePath, next)
-        }
+      tablePath: String, checkpoint: String): StreamingQuery =
+    eachBatch(diffStream, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val vals = batch.columns.filter(_.startsWith("new_"))
+        .map(_.stripPrefix("new_")).toSeq
+      val incoming = batch.where(col("change").isin("added", "changed"))
+        .select(pk.map(col) ++ vals.map(c => col("new_" + c).as(c)): _*)
+      if (!hasData(spark, tablePath)) {
+        incoming.write.mode("overwrite").parquet(tablePath)
+      } else {
+        val touched = batch.select(pk.map(col): _*)
+        val next = spark.read.parquet(tablePath)
+          .join(touched, pk, "left_anti")
+          .unionByName(incoming)
+        swapInPlace(spark, tablePath, next)
       }
-      .start()
+    }
 
   /** Streaming model-based quality scorer: score a document STREAM
     * under bigram conditional frequencies trained ONCE on a fixed
@@ -1149,8 +783,7 @@ object Streams {
   def bigramScoreSink(docStream: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, outPath: String,
       checkpoint: String, smoothK: Double = 0.0,
-      jmLambda: Option[Double] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      jmLambda: Option[Double] = None): StreamingQuery = {
     val (c1, c2) = graft.ext.TextAnalysis.bigramModel(corpus, idCol,
       textCol)
     val c1c = c1.localCheckpoint()
@@ -1175,15 +808,9 @@ object Streams {
         b => graft.ext.TextAnalysis.bigramScoreWith(b, idCol, textCol,
           c1c, c2c)
     }
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scorer(batch)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+    eachBatch(docStream, checkpoint) { (batch, batchId) =>
+      appendPartial(scorer(batch), batchId, outPath)
+    }
   }
 
   /** Streaming DSIR importance scorer: score a document STREAM against
@@ -1198,18 +825,12 @@ object Streams {
   def importanceScoreSink(docStream: DataFrame, background: DataFrame,
       target: DataFrame, idCol: String, textCol: String,
       outPath: String, checkpoint: String, smoothK: Double = 0.5)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val scorer = graft.ext.TextAnalysis.importanceScorer(
       background, target, idCol, textCol, smoothK)
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scorer(batch)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+    eachBatch(docStream, checkpoint) { (batch, batchId) =>
+      appendPartial(scorer(batch), batchId, outPath)
+    }
   }
 
   /** Streaming passage admission: the x82 passage-level exact dedup
@@ -1217,47 +838,28 @@ object Streams {
     * non-overlapping `chunkSize`-token windows; a chunk is ADMITTED
     * iff its text was not already admitted — by an earlier batch (the
     * admitted parquet at `outPath` below this batch id IS the ledger,
-    * re-read per batch — the restart-safe discipline shared with
-    * [[semanticAdmitSink]]) or earlier within the batch (first
-    * (id, chunk_id) wins, the [[graft.ext.Dedup.dedupPassages]]
-    * rule). Dynamic partition overwrite by batch id makes a replayed
-    * batch idempotent: a batch's own partition is excluded from its
-    * judge set, so rows are never refused against their own previous
-    * write. The ledger probe is a text-keyed anti join — AQE handles
-    * a hot boilerplate passage the same way the batch operator's
-    * combiner does. Appends (id, chunk_id, n_tokens, chunk_text,
-    * _batch). */
+    * re-read per batch through [[priorBatches]] — the restart-safe
+    * discipline shared with [[semanticAdmitSink]]) or earlier within
+    * the batch (first (id, chunk_id) wins, the
+    * [[graft.ext.Dedup.dedupPassages]] rule). [[overwriteBatch]] makes
+    * a replayed batch idempotent. The ledger probe is a text-keyed
+    * anti join — AQE handles a hot boilerplate passage the same way
+    * the batch operator's combiner does. Appends (id, chunk_id,
+    * n_tokens, chunk_text, _batch). */
   def passageAdmitSink(docStream: DataFrame, idCol: String,
       textCol: String, chunkSize: Int, outPath: String,
-      checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark0 = docStream.sparkSession
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val chunks = graft.ext.Dedup.dedupPassages(batch, idCol,
-            textCol, chunkSize)
-          .where(col("kept")).drop("kept")
-        val fs = new org.apache.hadoop.fs.Path(outPath)
-          .getFileSystem(spark0.sparkContext.hadoopConfiguration)
-        val fresh =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(outPath))) chunks
-          else {
-            val seen = spark0.read.parquet(outPath)
-              .where(col("_batch").cast("long") < lit(batchId))
-              .select(col("chunk_text"))
-            chunks.join(seen, Seq("chunk_text"), "left_anti")
-          }
-        fresh.select(col("id"), col("chunk_id"), col("n_tokens"),
-            col("chunk_text"))
-          .withColumn("_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch")
-          .parquet(outPath)
-      }
-      .start()
+      checkpoint: String): StreamingQuery = {
+    val spark = docStream.sparkSession
+    eachBatch(docStream, checkpoint) { (batch, batchId) =>
+      val chunks = graft.ext.Dedup.dedupPassages(batch, idCol,
+          textCol, chunkSize)
+        .where(col("kept")).drop("kept")
+      val fresh = priorBatches(spark, outPath, batchId).fold(chunks)(seen =>
+        chunks.join(seen.select(col("chunk_text")), Seq("chunk_text"),
+          "left_anti"))
+      overwriteBatch(fresh.select(col("id"), col("chunk_id"),
+        col("n_tokens"), col("chunk_text")), batchId, outPath)
+    }
   }
 
   /** Streaming corpus-intake gate: the x96 manifest's first two stages
@@ -1265,95 +867,68 @@ object Streams {
     * as a restart-safe ingest sink. A document is ADMITTED iff it
     * passes every quality rule AND its canonical fingerprint was not
     * already admitted, by an earlier batch (the admitted parquet at
-    * `outPath` below this batch id IS the ledger, re-read per batch —
-    * the [[semanticAdmitSink]]/[[passageAdmitSink]] discipline) or
+    * `outPath` below this batch id IS the ledger, re-read per batch
+    * through [[priorBatches]] — the
+    * [[semanticAdmitSink]]/[[passageAdmitSink]] discipline) or
     * earlier within the batch (smallest id per fingerprint wins, a
     * combiner-bounded min agg — a hot boilerplate text costs one
-    * combiner per partition, never a window sort). Dynamic partition
-    * overwrite by batch id keeps a replayed batch idempotent: the
-    * batch's own partition is excluded from its judge set.
+    * combiner per partition, never a window sort). [[overwriteBatch]]
+    * keeps a replayed batch idempotent, and a batch that admits
+    * nothing leaves no data for the next batch to read.
     * Appends (id, text, fp, n_tokens, _batch). */
   def qualityAdmitSink(docStream: DataFrame, idCol: String,
       textCol: String, outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark0 = docStream.sparkSession
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val quality = graft.ext.TextAnalysis
-          .gopherQuality(batch, idCol, textCol)
-          .where(col("gopher_pass")).select(col("id"))
-        val passed = batch
-          .select(col(idCol).as("id"), col(textCol).as("text"))
-          .join(quality, Seq("id"))
-          .withColumn("fp", graft.ext.TextAnalysis.fingerprint(col("text")))
-          .withColumn("n_tokens",
-            graft.ext.TextAnalysis.tokenCount(col("text")))
-        val first = passed.groupBy("fp").agg(min(col("id")).as("__keep"))
-        val inBatch = passed.join(first, Seq("fp"))
-          .where(col("id") === col("__keep")).drop("__keep")
-        val fs = new org.apache.hadoop.fs.Path(outPath)
-          .getFileSystem(spark0.sparkContext.hadoopConfiguration)
-        val fresh =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(outPath))) inBatch
-          else {
-            val seen = spark0.read.parquet(outPath)
-              .where(col("_batch").cast("long") < lit(batchId))
-              .select(col("fp"))
-            inBatch.join(seen, Seq("fp"), "left_anti")
-          }
-        fresh.select(col("id"), col("text"), col("fp"), col("n_tokens"))
-          .withColumn("_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch")
-          .parquet(outPath)
-      }
-      .start()
+      : StreamingQuery = {
+    val spark = docStream.sparkSession
+    eachBatch(docStream, checkpoint) { (batch, batchId) =>
+      val quality = graft.ext.TextAnalysis
+        .gopherQuality(batch, idCol, textCol)
+        .where(col("gopher_pass")).select(col("id"))
+      val passed = batch
+        .select(col(idCol).as("id"), col(textCol).as("text"))
+        .join(quality, Seq("id"))
+        .withColumn("fp", graft.ext.TextAnalysis.fingerprint(col("text")))
+        .withColumn("n_tokens",
+          graft.ext.TextAnalysis.tokenCount(col("text")))
+      val first = passed.groupBy("fp").agg(min(col("id")).as("__keep"))
+      val inBatch = passed.join(first, Seq("fp"))
+        .where(col("id") === col("__keep")).drop("__keep")
+      val fresh = priorBatches(spark, outPath, batchId).fold(inBatch)(seen =>
+        inBatch.join(seen.select(col("fp")), Seq("fp"), "left_anti"))
+      overwriteBatch(fresh.select(col("id"), col("text"), col("fp"),
+        col("n_tokens")), batchId, outPath)
+    }
   }
 
   /** Streaming UniMax re-planning: after each micro-batch of arriving
     * documents, recompute the [[graft.ext.Sampling.unimaxAllocation]]
     * table over EVERYTHING seen so far (the arrivals parquet at
-    * `seenPath` below this batch id IS the ledger — the admission-sink
+    * `seenPath` up to this batch id IS the ledger — the admission-sink
     * discipline applied to a planning output) and append the fresh
     * allocation stamped with the batch id. The latest `_batch`
     * partition is the current mixture plan; the history is the plan's
     * evolution as sources grow. Per-batch output ≡ the batch allocator
-    * over the union of batches (StreamingSpec). Dynamic partition
-    * overwrite keeps replays idempotent on both paths.
+    * over the union of batches (StreamingSpec). [[overwriteBatch]]
+    * keeps replays idempotent on both paths.
     * Appends (source, n_docs, n_tokens, cap_tokens, alloc_tokens,
     * rate_ppm, _batch) to `outPath`; raw (source, n_tokens_doc) rows
     * to `seenPath`. */
   def unimaxPlanSink(docStream: DataFrame, sourceCol: String,
-      weight: org.apache.spark.sql.Column, budget: Long,
-      maxEpochs: Long, outPath: String, seenPath: String,
-      checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark0 = docStream.sparkSession
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val arrivals = batch.select(col(sourceCol).as("source"),
-          weight.cast("long").as("n_tokens_doc"))
-        arrivals.withColumn("_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch").parquet(seenPath)
-        // everything at or below this batch id: earlier batches from
-        // the ledger + this batch's own (just-overwritten) partition
-        val seen = spark0.read.parquet(seenPath)
-          .where(col("_batch").cast("long") <= lit(batchId))
-        val plan = graft.ext.Sampling.unimaxAllocation(seen,
-          col("source"), col("n_tokens_doc"), budget, maxEpochs)
-        plan.withColumn("_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch").parquet(outPath)
-      }
-      .start()
+      weight: Column, budget: Long, maxEpochs: Long, outPath: String,
+      seenPath: String, checkpoint: String): StreamingQuery = {
+    val spark = docStream.sparkSession
+    eachBatch(docStream, checkpoint) { (batch, batchId) =>
+      val arrivals = batch.select(col(sourceCol).as("source"),
+        weight.cast("long").as("n_tokens_doc"))
+      overwriteBatch(arrivals, batchId, seenPath)
+      // everything up to this batch id: earlier batches plus this
+      // batch's own just-written partition (none if nothing arrived yet)
+      val seen = priorBatches(spark, seenPath, batchId + 1)
+        .getOrElse(arrivals)
+      overwriteBatch(graft.ext.Sampling.unimaxAllocation(seen,
+        col("source"), col("n_tokens_doc"), budget, maxEpochs),
+        batchId, outPath)
+    }
   }
 
   /** Streaming BM25 scorer: score a document STREAM against a fixed
@@ -1377,18 +952,11 @@ object Streams {
     * on that corpus (StreamingSpec "refresh retrains"). */
   def bm25ScoreSink(docStream: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, terms: Seq[String],
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      outPath: String, checkpoint: String): StreamingQuery = {
     val scorer = graft.ext.Retrieval.bm25Scorer(corpus, idCol, textCol, terms)
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scorer(batch)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+    eachBatch(docStream, checkpoint) { (batch, batchId) =>
+      appendPartial(scorer(batch), batchId, outPath)
+    }
   }
 
   /** Streaming RETRIEVAL-HEALTH monitor: the per-query nDCG grid
@@ -1403,30 +971,21 @@ object Streams {
     * artifact (qrels are data, deterministic to re-read). Each batch
     * pays one tokenize scan of ITSELF; the qrels join bounds tf rows
     * to the judged vocabulary; both rank windows cut at `k`
-    * (WindowGroupLimit, as in batch). Writes
-    * (query_id, dcg, idcg, ndcg) partitioned by `_batch` with dynamic
-    * overwrite, so a replayed batch REWRITES its partition instead of
-    * duplicating — replay-idempotent after crash-between-write-and-
-    * commit. Per-batch rows ≡ batch ndcgEvalQrels on that batch alone
-    * (StreamingSpec, including across a restart). */
+    * (WindowGroupLimit, as in batch). Lands (query_id, dcg, idcg,
+    * ndcg) by [[overwriteBatch]], so a replayed batch REWRITES its
+    * partition instead of duplicating — replay-idempotent after
+    * crash-between-write-and-commit. Per-batch rows ≡ batch
+    * ndcgEvalQrels on that batch alone (StreamingSpec, including
+    * across a restart). */
   def retrievalHealthSink(docStream: DataFrame, qrels: DataFrame,
       idCol: String, textCol: String, k: Int, outPath: String,
-      checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String): StreamingQuery = {
     val pinned = qrels.select(col("query_id"), col("term")).distinct()
       .localCheckpoint(true)
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Retrieval.ndcgEvalQrels(batch, idCol, textCol,
-            pinned, k)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch").parquet(outPath)
-      }
-      .start()
+    eachBatch(docStream, checkpoint) { (batch, batchId) =>
+      overwriteBatch(graft.ext.Retrieval.ndcgEvalQrels(batch, idCol,
+        textCol, pinned, k), batchId, outPath)
+    }
   }
 
   /** Streaming ADC scorer: score a query STREAM against a fixed
@@ -1441,27 +1000,21 @@ object Streams {
     * that batch alone. */
   def adcScoreSink(queryStream: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, outPath: String,
-      checkpoint: String, m: Int = 8, kCodes: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String, m: Int = 8, kCodes: Int = 16): StreamingQuery = {
     val cb = graft.ext.Pq.seedCodebooks(corpus, idCol, vecCol, m, kCodes)
     val enc = graft.ext.Pq.encodeLong(corpus, idCol, vecCol, m, kCodes)
       .localCheckpoint()
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the LUT guard stays ON per batch: "micro-batches are bounded"
-        // holds only if the caller set a source rate limit
-        // (maxFilesPerTrigger/maxOffsetsPerTrigger) — a file-source
-        // backlog replayed after downtime delivers one arbitrarily large
-        // first batch straight into the LUT broadcast. The guard's
-        // ids-only count of an already-materialized micro-batch is one
-        // cheap local job; the refusal message names the sharding fix.
-        graft.ext.Pq.adcTopKEncoded(batch, enc, cb, idCol, vecCol, k)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+    eachBatch(queryStream, checkpoint) { (batch, batchId) =>
+      // the LUT guard stays ON per batch: "micro-batches are bounded"
+      // holds only if the caller set a source rate limit
+      // (maxFilesPerTrigger/maxOffsetsPerTrigger) — a file-source
+      // backlog replayed after downtime delivers one arbitrarily large
+      // first batch straight into the LUT broadcast. The guard's
+      // ids-only count of an already-materialized micro-batch is one
+      // cheap local job; the refusal message names the sharding fix.
+      appendPartial(graft.ext.Pq.adcTopKEncoded(batch, enc, cb, idCol,
+        vecCol, k), batchId, outPath)
+    }
   }
 
   /** [[adcScoreSink]] over an OPQ-ROTATED index: the serving shape of
@@ -1477,25 +1030,19 @@ object Streams {
   def opqAdcScoreSink(queryStream: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, outPath: String,
       checkpoint: String, m: Int = 8, kCodes: Int = 16, iters: Int = 2,
-      model: Option[graft.ext.Opq.OpqModel] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      model: Option[graft.ext.Opq.OpqModel] = None): StreamingQuery = {
     import graft.ext.{Opq, Pq}
     import graft.functions.VectorOps
     val mod = model.getOrElse(
       Opq.learn(corpus, idCol, vecCol, m, kCodes, iters))
     val enc = Opq.encodeLong(corpus, idCol, vecCol, mod).localCheckpoint()
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rotated = batch.select(col(idCol),
-          Opq.rotateT(VectorOps.toDouble(col(vecCol)), mod.rotation)
-            .as("__z"))
-        Pq.adcTopKEncoded(rotated, enc, mod.codebooks, idCol, "__z", k)
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+    eachBatch(queryStream, checkpoint) { (batch, batchId) =>
+      val rotated = batch.select(col(idCol),
+        Opq.rotateT(VectorOps.toDouble(col(vecCol)), mod.rotation)
+          .as("__z"))
+      appendPartial(Pq.adcTopKEncoded(rotated, enc, mod.codebooks, idCol,
+        "__z", k), batchId, outPath)
+    }
   }
 
   /** Streaming semantic admission: each micro-batch of incoming
@@ -1516,13 +1063,12 @@ object Streams {
     * compaction pass needed). The quantizer is still trained ONCE on
     * the original existing corpus and passed by value, so the ledger
     * grows the judging side without ever moving the cell boundaries.
-    * The ledger IS the admitted parquet at `outPath`: each batch writes
-    * to its own `_batch=<id>` partition with dynamic partition
-    * OVERWRITE, and is judged against existing ∪ the partitions BELOW
-    * its batch id. That makes the sink restart-safe by construction —
-    * a batch replayed from the checkpoint after a crash is judged
-    * against exactly what preceded it (never its own half-written
-    * output) and overwrites its own partition instead of
+    * The ledger IS the admitted parquet at `outPath`: each batch lands
+    * by [[overwriteBatch]] and is judged against existing ∪
+    * [[priorBatches]]. That makes the sink restart-safe by
+    * construction — a batch replayed from the checkpoint after a crash
+    * is judged against exactly what preceded it (never its own
+    * half-written output) and overwrites its own partition instead of
     * double-appending — and it holds no per-batch executor storage
     * (nothing accumulates in memory as the query ages; the admitted
     * rows are read back from columnar parquet, the same linear scan the
@@ -1558,8 +1104,7 @@ object Streams {
       model: Option[graft.ext.Ivf.Model] = None,
       targetCellSize: Long = graft.ext.Similarity.DefaultCellSize,
       crossBatch: Boolean = false,
-      dedupWithinBatch: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      dedupWithinBatch: Boolean = false): StreamingQuery = {
     // materialize the existing side once — every batch re-joins it
     val ex = existing.localCheckpoint()
     // fixed quantizer for the life of the query: boundaries must not
@@ -1573,42 +1118,23 @@ object Streams {
     })
     val exIdVec = ex.select(col(idCol), col(vecCol)).localCheckpoint()
     val spark = existing.sparkSession
-    incomingStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pre =
-          if (!dedupWithinBatch) batch
-          else {
-            val keep = graft.ext.Similarity.semanticDedup(batch, idCol,
-                vecCol, threshold, model = Some(m))
-              .where(col("id") === col("keep_id"))
-              .select(col("id").as(idCol))
-            batch.join(keep, Seq(idCol), "left_semi")
-          }
-        // the admitted parquet below this batch id IS the ledger: on a
-        // replay the current batch's own partition is excluded, so the
-        // rows are never judged against their previous write of
-        // themselves (which would refuse them all and lose the batch)
-        val judge =
-          if (!crossBatch) exIdVec
-          else {
-            val fs = new org.apache.hadoop.fs.Path(outPath)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (!fs.exists(new org.apache.hadoop.fs.Path(outPath))) exIdVec
-            else exIdVec.union(spark.read.parquet(outPath)
-              .where(col("_batch").cast("long") < lit(batchId))
-              .select(col(idCol), col(vecCol)))
-          }
-        val admitted = graft.ext.Similarity.semanticAdmit(judge, pre,
-          idCol, vecCol, threshold, model = Some(m))
-        admitted.withColumn("_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch")
-          .parquet(outPath)
-      }
-      .start()
+    eachBatch(incomingStream, checkpoint) { (batch, batchId) =>
+      val pre =
+        if (!dedupWithinBatch) batch
+        else {
+          val keep = graft.ext.Similarity.semanticDedup(batch, idCol,
+              vecCol, threshold, model = Some(m))
+            .where(col("id") === col("keep_id"))
+            .select(col("id").as(idCol))
+          batch.join(keep, Seq(idCol), "left_semi")
+        }
+      val judge =
+        if (!crossBatch) exIdVec
+        else priorBatches(spark, outPath, batchId).fold(exIdVec)(seen =>
+          exIdVec.union(seen.select(col(idCol), col(vecCol))))
+      overwriteBatch(graft.ext.Similarity.semanticAdmit(judge, pre,
+        idCol, vecCol, threshold, model = Some(m)), batchId, outPath)
+    }
   }
 
   /** Tumbling event-time aggregation with watermark — the streaming form

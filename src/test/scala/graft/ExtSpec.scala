@@ -4792,6 +4792,50 @@ class ExtSpec extends SparkSpec {
     }
   }
 
+  test("linkAgainstIndex over an empty index: every job the link " +
+      "starts has ended when its count returns") {
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft_varidx0")
+    val sc = spark.sparkContext
+    val group = "graft-link-empty-index"
+    // a job's start event is posted before the action that submitted it
+    // can return, and the end event of every job the action waits for
+    // is posted before the action sees its result; a job still missing
+    // its end once the bus is drained outlived the action
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          started.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ended.add(e.jobId)
+    }
+    try {
+      val idx = dir.resolve("empty").toString
+      Dedup.saveVariantIndex(Seq((1L, "spark")).toDF("id", "s")
+        .where(col("id") < 0), "id", "s", idx)
+      val incoming = Seq((10L, "spork"), (11L, "banana")).toDF("id", "s")
+      sc.addSparkListener(l)
+      sc.setJobGroup(group, "empty-index link")
+      val n =
+        try Dedup.linkAgainstIndex(spark, idx, incoming, "id", "s").count()
+        finally {
+          sc.clearJobGroup()
+          org.apache.spark.graft.TestListenerBus.drain(sc)
+          sc.removeSparkListener(l)
+        }
+      assert(n == 0)
+      assert(!started.isEmpty)
+      val open = started.asScala.toSet -- ended.asScala
+      assert(open.isEmpty, s"jobs still running after count(): $open")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   test("pair-graph persistence: save/load round-trips the winnow " +
       "graph bit-for-bit; a foreign directory fails loudly") {
     import graft.ext.Dedup

@@ -32,4 +32,20 @@ class HarnessSpec extends SparkSpec {
       .toSeq
     assert(hits == Seq("Harness.scala"), hits)
   }
+
+  test(".writeStream occurs once in code under src/main/scala: every " +
+      "sink runs through Streams.eachBatch") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val hits = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => Files.readAllLines(p).asScala
+        .map(_.trim)
+        .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
+          l.startsWith("//"))
+        .filter(_.contains(".writeStream"))
+        .map(_ => p.getFileName.toString))
+      .toSeq
+    assert(hits == Seq("Streams.scala"), hits)
+  }
 }

@@ -34,6 +34,19 @@ class StreamingSpec extends SparkSpec {
     q.stop()
   }
 
+  /** A count ledger's cells as the `*FromCounts` tails read them: the
+    * ledger keys plus the folded observation count `c` (the contract
+    * stated on `Streams.sumView`). */
+  private def counts(table: String, keys: String*) =
+    Streams.sumView(spark, table, keys)
+      .select(keys.map(col) :+ col("n").as("c"): _*)
+
+  /** The (ws, key, c) counts the EventWindows alarms read from a
+    * (key, ws) ledger with one unit per event. */
+  private def wsCounts(table: String) =
+    Streams.sumView(spark, table, Seq("key", "ws"))
+      .select(col("ws"), col("key"), col("total").cast("long").as("c"))
+
   test("streaming dedup: re-delivered PKs add no rows") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
@@ -323,7 +336,9 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch && streamed.size == 2)
     // quantile normalization rides the SAME (g, v) ledger (the sixth
     // view on the distribution ledger)
-    assert(rows(Streams.quantileNormalizeView(spark, table)
+    assert(rows(graft.ext.Quantiles.quantileNormalizeFromCounts(
+        Streams.sumView(spark, table, Seq("g", "v"))
+          .select($"g".as("group"), $"v", $"n".cast("long").as("n_gv")))
         .orderBy("group", "v")).map(_.toString) ==
       rows(graft.ext.Quantiles.quantileNormalize(
         (b1 ++ b2).toDF("g", "v"), $"g", $"v").orderBy("group", "v"))
@@ -347,8 +362,8 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     q.processAllAvailable()
     q.stop()
-    val streamed = rows(Streams.ksMatrixView(spark, table)
-      .orderBy("src_a", "src_b")).map(_.toString)
+    val streamed = rows(graft.ext.Stats.ksMatrixFromCounts(
+        counts(table, "g", "v")).orderBy("src_a", "src_b")).map(_.toString)
     val batch = rows(graft.ext.Stats.ksMatrix(
         (b1 ++ b2).toDF("g", "v"), $"g", $"v").orderBy("src_a", "src_b"))
       .map(_.toString)
@@ -397,6 +412,8 @@ class StreamingSpec extends SparkSpec {
     table
   }
 
+  // ksMatrixFromCounts over sumView is checked here too: its grid runs
+  // through an executed leaf, not a checkpoint
   test("ledger views pin no storage: sumView, ksDriftView and psiView " +
       "leave getPersistentRDDs unchanged") {
     val table = gvLedger("graft_pin")
@@ -404,10 +421,11 @@ class StreamingSpec extends SparkSpec {
     // the frames stay reachable until the check: the registry holds
     // RDDs weakly, so a dropped frame's pin could vanish in a GC
     val views = Seq(Streams.sumView(spark, table, Seq("g", "v")),
-      Streams.ksDriftView(spark, table), Streams.psiView(spark, table))
+      Streams.ksDriftView(spark, table), Streams.psiView(spark, table),
+      graft.ext.Stats.ksMatrixFromCounts(counts(table, "g", "v")))
     val sizes = views.map(rows(_).size)
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
-    assert(views.size == 3 && sizes.forall(_ > 0))
+    assert(views.size == 4 && sizes.forall(_ > 0))
   }
 
   test("ksDriftView and psiView read the ledger ONCE per call, however " +
@@ -463,16 +481,18 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     q.processAllAvailable()
     q.stop()
-    val streamed = rows(Streams.cusumView(spark, table, 0L, 2000000L)
-      .orderBy("period")).map(_.toString)
+    val periods = Streams.sumView(spark, table, Seq("g", "v"))
+      .select($"g", $"v".as("p"), $"n".as("c"))
+    val streamed = rows(graft.ext.Stats.cusumFromCounts(periods, 0L,
+        2000000L).orderBy("period")).map(_.toString)
     val batch = rows(graft.ext.Stats.cusumFromCounts(
         (b1 ++ b2).groupBy(identity).map { case (gv, xs) =>
           (gv.g, gv.v, xs.size.toLong) }.toSeq.toDF("g", "p", "c"),
         0L, 2000000L).orderBy("period")).map(_.toString)
     assert(streamed == batch && streamed.size == 4)
     // period 3 spans both batches (2 + 3 events) — the fold must see 5
-    assert(rows(Streams.cusumView(spark, table, 0L, 2000000L)
-      .where($"period" === "3")).head.getAs[Long]("c") == 5L)
+    assert(rows(graft.ext.Stats.cusumFromCounts(periods, 0L, 2000000L)
+        .where($"period" === "3")).head.getAs[Long]("c") == 5L)
   }
 
   test("jsdMatrixView: the additive (g, v=token) ledger folds to the " +
@@ -491,7 +511,9 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     q.processAllAvailable()
     q.stop()
-    val streamed = rows(Streams.jsdMatrixView(spark, table)
+    val tokens = Streams.sumView(spark, table, Seq("g", "v"))
+      .select($"g", $"v".as("tok"), $"n".as("c"))
+    val streamed = rows(graft.ext.TextAnalysis.jsdMatrixFromCounts(tokens)
       .orderBy("src_a", "src_b")).map(_.toString)
     val batch = rows(graft.ext.TextAnalysis.jsdMatrixFromCounts(
         (b1 ++ b2).groupBy(identity).map { case (gv, xs) =>
@@ -499,7 +521,7 @@ class StreamingSpec extends SparkSpec {
       .orderBy("src_a", "src_b")).map(_.toString)
     assert(streamed == batch && streamed.size == 3)
     // c shares nothing with a or b → exactly ln 2 (quantized)
-    val ac = rows(Streams.jsdMatrixView(spark, table)
+    val ac = rows(graft.ext.TextAnalysis.jsdMatrixFromCounts(tokens)
       .where($"src_a" === "a" && $"src_b" === "c")).head
     assert(math.abs(ac.getAs[Double]("jsd") - math.log(2.0)) < 1e-9)
   }
@@ -642,29 +664,34 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     val all = (b1 ++ b2).toDF("v", "y")
-    assert(rows(Streams.rocAucView(spark, table)).map(_.toString) ==
+    assert(rows(Stats.rocAucFromCounts(counts(table, "v", "y")))
+        .map(_.toString) ==
       rows(Stats.rocAuc(all, $"v", $"y")).map(_.toString))
-    assert(rows(Streams.thresholdSweepView(spark, table)
+    assert(rows(Stats.thresholdSweepFromCounts(counts(table, "v", "y"))
         .orderBy("threshold")).map(_.toString) ==
       rows(Stats.thresholdSweep(all, $"v", $"y").orderBy("threshold"))
         .map(_.toString))
-    assert(rows(Streams.calibrationView(spark, table).orderBy("bin"))
+    assert(rows(Stats.calibrationBinsFromCounts(counts(table, "v", "y"))
+        .orderBy("bin"))
         .map(_.toString) ==
       rows(Stats.calibrationBins(all, $"v", $"y").orderBy("bin"))
         .map(_.toString))
     // the SAME ledger also folds to exact AP, the decision curve and
     // the MCC sweep
-    assert(rows(Streams.prAucView(spark, table)).map(_.toString) ==
+    assert(rows(Stats.averagePrecisionFromCounts(counts(table, "v", "y")))
+        .map(_.toString) ==
       rows(Stats.averagePrecision(all, $"v", $"y")).map(_.toString))
-    assert(rows(Streams.decisionCurveView(spark, table, 5L, 1L, 2L)
+    assert(rows(Stats.decisionCurveFromCounts(counts(table, "v", "y"),
+        5L, 1L, 2L)
         .orderBy("threshold")).map(_.toString) ==
       rows(Stats.decisionCurve(all, $"v", $"y", 5L, 1L, 2L)
         .orderBy("threshold")).map(_.toString))
-    assert(rows(Streams.mccSweepView(spark, table).orderBy("threshold"))
+    assert(rows(Stats.mccSweepFromCounts(counts(table, "v", "y"))
+        .orderBy("threshold"))
         .map(_.toString) ==
       rows(Stats.mccSweep(all, $"v", $"y").orderBy("threshold"))
         .map(_.toString))
-    assert(rows(Streams.gainsCurveView(spark, table)
+    assert(rows(Stats.gainsCurveFromCounts(counts(table, "v", "y"))
         .orderBy("threshold")).map(_.toString) ==
       rows(Stats.gainsCurve(all, $"v", $"y").orderBy("threshold"))
         .map(_.toString))
@@ -682,14 +709,15 @@ class StreamingSpec extends SparkSpec {
     kmem.addData(k2: _*)
     kq.processAllAvailable()
     kq.stop()
-    assert(rows(Streams.cohenKappaView(spark, ktable)).map(_.toString) ==
+    assert(rows(Stats.cohenKappaFromCounts(counts(ktable, "a", "b")))
+        .map(_.toString) ==
       rows(Stats.cohenKappa((k1 ++ k2).toDF("a", "b"), $"a", $"b"))
         .map(_.toString))
     // the SAME rater-pair ledger folds to the weighted form too
     // (boolean raters cast to 0/1 ordinals)
     val kAll = (k1 ++ k2).toDF("a", "b")
       .select($"a".cast("long").as("a"), $"b".cast("long").as("b"))
-    assert(rows(Streams.weightedKappaView(spark, ktable))
+    assert(rows(Stats.weightedKappaFromCounts(counts(ktable, "a", "b")))
         .map(_.toString) ==
       rows(Stats.weightedKappa(kAll, $"a", $"b")).map(_.toString))
   }
@@ -715,19 +743,23 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     val all = (b1 ++ b2).toDF("g", "v", "y")
-    assert(rows(Streams.rocAucByGroupView(spark, table).orderBy("group"))
+    assert(rows(Stats.rocAucByGroupFromCounts(counts(table, "g", "v", "y"))
+        .orderBy("group"))
         .map(_.toString) ==
       rows(Stats.rocAucByGroup(all, $"g", $"v", $"y").orderBy("group"))
         .map(_.toString))
-    assert(rows(Streams.calibrationByGroupView(spark, table)
+    assert(rows(Stats.calibrationBinsByGroupFromCounts(
+        counts(table, "g", "v", "y"))
         .orderBy("group", "bin")).map(_.toString) ==
       rows(Stats.calibrationBinsByGroup(all, $"g", $"v", $"y")
         .orderBy("group", "bin")).map(_.toString))
-    assert(rows(Streams.apByGroupView(spark, table).orderBy("group"))
+    assert(rows(Stats.averagePrecisionByGroupFromCounts(
+        counts(table, "g", "v", "y")).orderBy("group"))
         .map(_.toString) ==
       rows(Stats.averagePrecisionByGroup(all, $"g", $"v", $"y")
         .orderBy("group")).map(_.toString))
-    assert(rows(Streams.thresholdSweepByGroupView(spark, table)
+    assert(rows(Stats.thresholdSweepByGroupFromCounts(
+        counts(table, "g", "v", "y"))
         .orderBy("group", "threshold")).map(_.toString) ==
       rows(Stats.thresholdSweepByGroup(all, $"g", $"v", $"y")
         .orderBy("group", "threshold")).map(_.toString))
@@ -950,7 +982,8 @@ class StreamingSpec extends SparkSpec {
     mem.addData(b2: _*)
     q.processAllAvailable()
     q.stop()
-    val view = Streams.rateAnomalyView(spark, table, 24, 8)
+    val view = graft.ext.EventWindows.rateAnomalyFromCounts(
+        wsCounts(table), 24, 8)
       .orderBy("ws").collect()
       .map(r => (r.getAs[java.sql.Timestamp]("ws").toString,
         r.getAs[Long]("c"), r.getAs[Long]("n_prior"),
@@ -998,48 +1031,54 @@ class StreamingSpec extends SparkSpec {
     val evs = (b1 ++ b2).toDF().withColumnRenamed("v", "event_type")
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("ws", "key").collect().map(_.toString).toSeq
-    assert(norm(Streams.calendarRateAnomalyView(spark, table, "1 hour",
+    assert(norm(graft.ext.EventWindows.rateAnomalyFromCounts(
+        graft.ext.EventWindows.calendarDensify(wsCounts(table), "1 hour"),
         6, 4)) ==
       norm(graft.ext.EventWindows.calendarRateAnomaly(evs, col("ts"),
         "1 hour", col("event_type"), 6, 4)))
-    assert(norm(Streams.seasonalAnomalyView(spark, table, "1 hour",
-        minRef = 3)) ==
+    assert(norm(graft.ext.EventWindows.seasonalAnomalyFromCounts(
+        wsCounts(table), "1 hour", minRef = 3)) ==
       norm(graft.ext.EventWindows.seasonalAnomaly(evs, col("ts"),
         "1 hour", col("event_type"), minRef = 3)))
     // the Theil–Sen slope rides the SAME ledger (eighth read)
-    assert(Streams.theilSenView(spark, table, "1 hour")
+    assert(graft.ext.EventWindows.theilSenFromCounts(wsCounts(table),
+        "1 hour")
         .orderBy("key").collect().map(_.toString).toSeq ==
       graft.ext.EventWindows.theilSen(evs, col("ts"), "1 hour",
         col("event_type")).orderBy("key").collect()
         .map(_.toString).toSeq)
     // availability/outage rides the SAME ledger (seventh read)
-    assert(Streams.availabilityView(spark, table, "1 hour")
+    assert(graft.ext.EventWindows.availabilityFromCounts(wsCounts(table),
+        "1 hour")
         .orderBy("key").collect().map(_.toString).toSeq ==
       graft.ext.EventWindows.availability(evs, col("ts"), "1 hour",
         col("event_type")).orderBy("key").collect()
         .map(_.toString).toSeq)
     // the Mann–Kendall trend rides the SAME ledger (sixth alarm)
-    assert(Streams.mannKendallView(spark, table, "1 hour")
+    assert(graft.ext.EventWindows.mannKendallFromCounts(wsCounts(table),
+        "1 hour")
         .orderBy("key").collect().map(_.toString).toSeq ==
       graft.ext.EventWindows.mannKendall(evs, col("ts"), "1 hour",
         col("event_type")).orderBy("key").collect()
         .map(_.toString).toSeq)
     // the dispersion read rides the SAME ledger (fifth alarm)
-    assert(Streams.dispersionView(spark, table, "1 hour")
+    assert(graft.ext.EventWindows.dispersionFromCounts(wsCounts(table),
+        "1 hour")
         .orderBy("key").collect().map(_.toString).toSeq ==
       graft.ext.EventWindows.dispersion(evs, col("ts"), "1 hour",
         col("event_type")).orderBy("key").collect()
         .map(_.toString).toSeq)
     // the level-shift locator rides the SAME ledger (fourth alarm)
-    assert(Streams.levelShiftView(spark, table, "1 hour")
+    assert(graft.ext.EventWindows.levelShiftFromCounts(wsCounts(table),
+        "1 hour")
         .orderBy("key").collect().map(_.toString).toSeq ==
       graft.ext.EventWindows.levelShift(evs, col("ts"), "1 hour",
         col("event_type")).orderBy("key").collect()
         .map(_.toString).toSeq)
     // a's dark day-5 hours score against the other days' same hour
     // (refs 2,3,2,3 → n'=4, S'=10, Q'=26): z = (0·4−10)/√4 = −5
-    val s = Streams.seasonalAnomalyView(spark, table, "1 hour",
-        minRef = 3)
+    val s = graft.ext.EventWindows.seasonalAnomalyFromCounts(
+        wsCounts(table), "1 hour", minRef = 3)
       .where(col("key") === "a" &&
         col("ws") === java.sql.Timestamp.valueOf("2024-01-05 07:00:00"))
       .collect()
@@ -1058,25 +1097,31 @@ class StreamingSpec extends SparkSpec {
     val b2 = mk("hard", 0L, 27, 90) ++ mk("hard", 1L, 2, 10)
     val dir = java.nio.file.Files.createTempDirectory("graft_simp")
     val table = dir.resolve("log").toString
+    // the ledger's (count, sum) pair IS the contingency cell (n, k)
+    def cells(t: String) =
+      Streams.sumView(spark, t, Seq("stratum", "cohort"))
+        .select($"stratum", $"cohort", $"n", $"total".cast("long").as("k"))
     val mem = MemoryStream[SCU]
     mem.addData(b1: _*)
     val q = Streams.additiveSink(mem.toDF(),
       Seq("stratum", "cohort"), when(col("ok"), 1L).otherwise(0L),
       table, dir.resolve("ckpt").toString)
     q.processAllAvailable()
-    val mid = Streams.simpsonAuditView(spark, table).collect().head
+    val mid = graft.ext.Stats.simpsonAuditFromCells(cells(table))
+      .collect().head
     assert(!mid.getAs[Boolean]("paradox") &&
       mid.getAs[Long]("n_strata") == 1L)
     mem.addData(b2: _*)
     q.processAllAvailable()
     q.stop()
-    val got = Streams.simpsonAuditView(spark, table).collect()
+    val got = graft.ext.Stats.simpsonAuditFromCells(cells(table)).collect()
       .map(_.toString).toSeq
     val batch = graft.ext.Stats.simpsonAudit((b1 ++ b2).toDF(),
       col("stratum"), col("cohort"), col("ok")).collect()
       .map(_.toString).toSeq
     assert(got == batch)
-    val r = Streams.simpsonAuditView(spark, table).collect().head
+    val r = graft.ext.Stats.simpsonAuditFromCells(cells(table))
+      .collect().head
     assert(r.getAs[Boolean]("paradox") &&
       r.getAs[Double]("adjusted_diff") == 0.1)
   }
@@ -1817,6 +1862,43 @@ class StreamingSpec extends SparkSpec {
         .groupBy($"fp").agg(min($"id").as("id"))
         .select($"id").collect().map(_.getLong(0)).toSet
       assert(got == batchKept)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("qualityAdmitSink: a first batch that admits nothing leaves the " +
+      "ledger readable; the next batch equals the batch gate") {
+    implicit val sqlCtx = spark.sqlContext
+    val good = "the a " + (1 to 50).map(i => f"gw$i%02d").mkString(" ")
+    // b1: every document fails Gopher, so batch 0 writes an empty
+    // partition set — the ledger directory exists with no data file
+    val b1 = Seq(TDoc(1L, "too short"), TDoc(2L, "also short"))
+    val b2 = Seq(TDoc(3L, good), TDoc(4L, good))
+    val dir = java.nio.file.Files.createTempDirectory("graft_qas0")
+    val out = dir.resolve("admitted").toString
+    try {
+      val mem = MemoryStream[TDoc]
+      mem.addData(b1: _*)
+      val q = Streams.qualityAdmitSink(mem.toDF(), "doc_id", "text",
+        out, dir.resolve("ckpt").toString)
+      try {
+        q.processAllAvailable()
+        mem.addData(b2: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      val got = spark.read.parquet(out).select($"id").collect()
+        .map(_.getLong(0)).toSet
+      val union = (b1 ++ b2).toDF()
+      val quality = graft.ext.TextAnalysis
+        .gopherQuality(union, "doc_id", "text")
+        .where($"gopher_pass").select($"id")
+      val batchKept = union.select($"doc_id".as("id"), $"text")
+        .join(quality, Seq("id"))
+        .withColumn("fp", graft.ext.TextAnalysis.fingerprint($"text"))
+        .groupBy($"fp").agg(min($"id").as("id"))
+        .select($"id").collect().map(_.getLong(0)).toSet
+      assert(got == batchKept && got == Set(3L))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
