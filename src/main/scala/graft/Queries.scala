@@ -4363,14 +4363,12 @@ object Queries {
     val f = graft.sources.WeekliesCsv.readFile(s,
       resPath("weeklies/weeklyoptions.2024-01-15.csv"),
       java.sql.Date.valueOf("2024-01-15"))
-    val dedup = Upsert.lastWins(f, Seq("act_symbol"),
-      Seq(col("effective_date")))
     val existing = Seq(("AAPL", "2023-12-01", "2023-12-01"),
       ("OLD", "2023-01-01", "2023-01-01"))
       .toDF("s", "e", "l")
       .select(col("s").as("act_symbol"), to_date(col("e")).as("effective_date"),
         to_date(col("l")).as("last_seen"))
-    graft.sources.WeekliesCsv.upsertRoster(existing, dedup)
+    graft.sources.WeekliesCsv.upsertRoster(existing, f)
       .orderBy("act_symbol")
   }
 
@@ -4385,11 +4383,9 @@ object Queries {
     * pipeline, like all d*). */
   val q36WeekliesAsof: Q = (s, _) => {
     import s.implicits._
-    def day(f: String, d: String): DataFrame = {
-      val raw = graft.sources.WeekliesCsv.readFile(s,
-        resPath(s"weeklies/$f"), java.sql.Date.valueOf(d))
-      Upsert.lastWins(raw, Seq("act_symbol"), Seq(col("effective_date")))
-    }
+    def day(f: String, d: String): DataFrame =
+      graft.sources.WeekliesCsv.readFile(s, resPath(s"weeklies/$f"),
+        java.sql.Date.valueOf(d))
     val empty = Seq.empty[(String, java.sql.Date, java.sql.Date)]
       .toDF("act_symbol", "effective_date", "last_seen")
     val roster = Seq(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.expressions.VectorExpressions
+import graft.operators.Upsert
 
 /** Deduplication family for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard. Designed shuffle-minimal:
@@ -416,22 +417,27 @@ object Dedup {
     * their own cluster and always survive).
     *
     * Scale shape: LSH pairs + label propagation as in [[dedupCorpus]]
-    * (shuffles (id, label) pairs only), then one row_number window per
-    * cluster — WindowGroupLimit-truncated map-side, and cluster sizes
-    * are near-dup groups (small by construction). */
+    * (shuffles (id, label) pairs only), then [[bestPerCluster]]. */
   def canonicalSelect(docs: DataFrame, idCol: String, shinglesCol: String,
       score: Column, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pairs = minhashLsh(docs, idCol, shinglesCol, numHashes, bands,
-      threshold)
+      threshold: Double = 0.6): DataFrame =
+    bestPerCluster(docs, idCol, score,
+      minhashLsh(docs, idCol, shinglesCol, numHashes, bands, threshold))
+
+  /** The survivor rule of [[canonicalSelect]] and
+    * [[Similarity.canonicalSelectEmbeddings]]: label each row of `docs`
+    * with its near-dup cluster over `pairs` (a singleton is its own
+    * cluster), then keep the highest-`score` row per cluster, ties to
+    * the smallest id. One top-1 pick per cluster — WindowGroupLimit
+    * truncates it map-side, and near-dup clusters are small by
+    * construction. */
+  private[ext] def bestPerCluster(docs: DataFrame, idCol: String,
+      score: Column, pairs: DataFrame): DataFrame = {
     val comp = clusters(pairs).withColumnRenamed("id", idCol)
     val assigned = docs.join(comp, Seq(idCol), "left")
       .withColumn("cluster", coalesce(col("cluster"), col(idCol)))
-    val w = Window.partitionBy(col("cluster"))
-      .orderBy(score.desc, col(idCol))
-    assigned.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
+    Upsert.firstPerKey(assigned, Seq(col("cluster")),
+      Seq(score.desc, col(idCol).asc))
   }
 
   /** Duplicate-span fraction — the exact-substring duplication signal
@@ -1344,10 +1350,8 @@ object Dedup {
       .groupBy("__idb").agg(count(lit(1)).as("n_hit"))
     val shared = tsh.join(broadcast(bsh), Seq("h"))
       .groupBy("__idb", "__idt").agg(count(lit(1)).as("__shared"))
-    val wTop = Window.partitionBy("__idb")
-      .orderBy(col("__shared").desc, col("__idt").asc)
-    val top = shared.withColumn("__rk", row_number().over(wTop))
-      .where(col("__rk") === 1)
+    val top = Upsert.firstPerKey(shared, Seq(col("__idb")),
+        Seq(col("__shared").desc, col("__idt").asc))
       .select(col("__idb"), col("__idt").as("top_train_doc"),
         col("__shared").as("top_shared"))
     bench.select(col(idCol).as("__idb")).distinct()
@@ -1565,25 +1569,28 @@ object Dedup {
     val base = df.select(col(idCol).as("id"), col(strCol).as("s"))
       .where(length(col("s")) >= minLen)
       .localCheckpoint(true) // feeds the strings table AND the expansion
-    val nRecords = base.count() // checkpointed — one cheap job
-    val buckets = if (nBuckets > 0) nBuckets
-      else math.min(4096L, math.max(1L, nRecords / 50000L + 1L)).toInt
-    base.write.mode("overwrite").parquet(s"$path/strings")
-    val expanded = deleteNeighborhood(base, maxDist)
-      .withColumn("bucket", variantBucket(col("v"), buckets))
-    // an EMPTY vocabulary must still round-trip: a dynamic-partition
-    // writer emits no schema-bearing part file for zero rows (the
-    // loader would then fail schema inference), so write the empty
-    // frame unpartitioned — same columns, zero rows, loadable
-    if (nRecords == 0L)
-      expanded.write.mode("overwrite").parquet(s"$path/variants")
-    else
-      expanded.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/variants")
-    import spark.implicits._
-    Seq((maxDist, minLen, buckets))
-      .toDF("max_dist", "min_len", "n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    // the writes below are the checkpoint's only readers
+    try {
+      val nRecords = base.count() // checkpointed — one cheap job
+      val buckets = if (nBuckets > 0) nBuckets
+        else math.min(4096L, math.max(1L, nRecords / 50000L + 1L)).toInt
+      base.write.mode("overwrite").parquet(s"$path/strings")
+      val expanded = deleteNeighborhood(base, maxDist)
+        .withColumn("bucket", variantBucket(col("v"), buckets))
+      // an EMPTY vocabulary must still round-trip: a dynamic-partition
+      // writer emits no schema-bearing part file for zero rows (the
+      // loader would then fail schema inference), so write the empty
+      // frame unpartitioned — same columns, zero rows, loadable
+      if (nRecords == 0L)
+        expanded.write.mode("overwrite").parquet(s"$path/variants")
+      else
+        expanded.write.mode("overwrite").partitionBy("bucket")
+          .parquet(s"$path/variants")
+      import spark.implicits._
+      Seq((maxDist, minLen, buckets))
+        .toDF("max_dist", "min_len", "n_buckets")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    } finally Memo.release(base)
   }
 
   /** Link `incoming` records against a [[saveVariantIndex]] directory:

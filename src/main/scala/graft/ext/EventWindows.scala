@@ -3,23 +3,13 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Upsert
 
 /** Event-stream windowing in batch form (the streaming forms live in
   * graft.streaming). Gap comparisons are done in integer MICROSECONDS
   * (`unix_micros`) — bit-exact, no floating-point epoch math.
   */
 object EventWindows {
-
-  /** Free the checkpoint blocks of an eagerly localCheckpoint-ed frame
-    * (the Memo race-loser discipline): Dataset.unpersist is a
-    * CacheManager no-op for checkpoints — the blocks hang off the
-    * plan's LogicalRDD leaf, so unpersist THAT. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Tumbling window aggregation; `width` e.g. "1 hour". */
   def tumbling(df: DataFrame, ts: Column, width: String, keys: Seq[Column],
@@ -271,11 +261,8 @@ object EventWindows {
           col("__i").cast("double") +
           (col("__sr").cast(N) * col("__sr").cast(N)).cast("double") /
             col("__nr").cast("double"))
-    val wBest = Window.partitionBy("key")
-      .orderBy(col("gain").desc, col("ws").asc)
-    splits
-      .withColumn("__rk", row_number().over(wBest))
-      .where(col("__rk") === 1)
+    Upsert.firstPerKey(splits, Seq(col("key")),
+        Seq(col("gain").desc, col("ws").asc))
       .select(col("key"), col("__next").as("split_ws"),
         col("__i").as("n_left"), col("__nr").as("n_right"),
         (col("__cs").cast("double") / col("__i").cast("double"))
@@ -804,7 +791,7 @@ object EventWindows {
           (coalesce(col("cj"), lit(0L)).cast("double") /
             col("T").cast("double")).as("r"))
         .localCheckpoint(true)
-      if (prevCp != null) unpersistCheckpoint(prevCp)
+      if (prevCp != null) Memo.release(prevCp)
       prevCp = rank
     }
     rank.select(col("state").as("event_type"),

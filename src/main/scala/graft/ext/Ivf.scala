@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 import graft.functions.expressions.VectorExpressions
+import graft.operators.Upsert
 
 /** IVF (inverted-file) approximate nearest neighbor: partition the corpus
   * into `nlist` coarse cells, search only the `nprobe` cells nearest each
@@ -250,12 +251,11 @@ object Ivf {
         VectorOps.norm2(col(vecCol)).as("n2"))
       .withColumn("ccid", VectorExpressions.nearestCell(col("v"),
         col("n2"), coarseVecs, coarseNorms, coarseIds))
-    val w = Window.partitionBy(col("neighbor_id"))
-      .orderBy(col("__cos").desc, col("fid").asc)
-    coarseOnly.join(fine, Seq("ccid"))
+    val scored = coarseOnly.join(fine, Seq("ccid"))
       .withColumn("__cos", VectorOps.cosineWithNorms(
         VectorOps.dot(col("v"), col("fv")), col("n2"), col("fn")))
-      .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
+    Upsert.firstPerKey(scored, Seq(col("neighbor_id")),
+        Seq(col("__cos").desc, col("fid").asc))
       .select(col("neighbor_id"), col("v"), col("n2"),
         col("fid").as("cid"))
   }
@@ -415,16 +415,14 @@ object Ivf {
           .select(col("cid"), col("sub"),
             col("neighbor_id").as("fid"), col("v").as("fv"),
             col("n2").as("fn"))
-        val wPick = Window.partitionBy(col("neighbor_id"))
-          .orderBy(col("__cos").desc, col("fid").asc)
-        val split = hotRows
+        val scored = hotRows
           .select(col("neighbor_id"), col("v"), col("n2"), col("cid"),
             col("sub"))
           .join(seeds, Seq("cid", "sub"))
           .withColumn("__cos", VectorOps.cosineWithNorms(
             VectorOps.dot(col("v"), col("fv")), col("n2"), col("fn")))
-          .withColumn("__rn", row_number().over(wPick))
-          .where(col("__rn") === 1)
+        val split = Upsert.firstPerKey(scored, Seq(col("neighbor_id")),
+            Seq(col("__cos").desc, col("fid").asc))
           .select(col("neighbor_id"), col("cid"),
             col("fid").as("sub"))
         labels = cold.unionByName(split).localCheckpoint()

@@ -90,19 +90,24 @@ object Memo {
       if (prior != null) {
         // lost the cold-key race: free the duplicate's checkpoint
         // blocks (eagerly materialized above) instead of pinning
-        // them until application end. Dataset.unpersist would be a
-        // CacheManager no-op here — a localCheckpoint's blocks hang
-        // off the underlying RDD (the plan's LogicalRDD leaf), so
-        // unpersist THAT.
-        computed.queryExecution.analyzed.collectLeaves().foreach {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(blocking = false)
-          case _ => ()
-        }
+        // them until application end
+        release(computed)
         prior
       } else computed
     }
   }
+
+  /** Free the blocks of an eagerly localCheckpoint-ed frame now, not
+    * when a driver GC happens to run `ContextCleaner`. Only for a frame
+    * nothing will read again. Dataset.unpersist is a CacheManager no-op
+    * for checkpoints — the blocks hang off the plan's LogicalRDD leaf,
+    * so unpersist THAT. */
+  private[graft] def release(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** Visible for tests: number of live entries. */
   private[graft] def size: Int = { sweepStopped(); cache.size() }

@@ -33,8 +33,7 @@ object Pipeline {
     * near_dup, contamination, contaminated, z, len_outlier, kept). */
   def corpusPrep(train: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, langCol: String, contaminationMax: Double = 0.2,
-      winnowMinShared: Long = 2L, winnowMaxDf: Long = 50L,
-      doubling: Boolean = false): DataFrame = {
+      winnowMinShared: Long = 2L, winnowMaxDf: Long = 50L): DataFrame = {
     val base = train.select(col(idCol).as("id"), col(langCol).as("lang"),
       TextAnalysis.tokenCount(col(textCol)).as("n_tokens"),
       col(textCol).as("__text"))
@@ -65,8 +64,7 @@ object Pipeline {
       s2.select(col("id").as(idCol), col("__text").as(textCol)),
       idCol, textCol, k = 3, w = 4, minShared = winnowMinShared,
       maxDf = winnowMaxDf)
-    val comp =
-      if (doubling) Dedup.clustersDoubling(pairs) else Dedup.clusters(pairs)
+    val comp = Dedup.clusters(pairs)
     val nearFlag = s2.select(col("id"))
       .join(comp.select(col("id"), col("cluster")), Seq("id"), "left")
       .select(col("id"),
@@ -126,15 +124,15 @@ object Pipeline {
   def corpusPrepCached(cacheKey: String, train: DataFrame,
       bench: DataFrame, idCol: String, textCol: String, langCol: String,
       contaminationMax: Double = 0.2, winnowMinShared: Long = 2L,
-      winnowMaxDf: Long = 50L, doubling: Boolean = false): DataFrame = {
+      winnowMaxDf: Long = 50L): DataFrame = {
     val inputFp = // canonicalized-plan fingerprint of BOTH inputs
       s"${train.queryExecution.analyzed.semanticHash()}|" +
         s"${bench.queryExecution.analyzed.semanticHash()}"
     Memo.cached(train.sparkSession,
       s"corpusPrep|$cacheKey|$inputFp|$idCol|$textCol|$langCol|" +
-        s"$contaminationMax|$winnowMinShared|$winnowMaxDf|$doubling")(
+        s"$contaminationMax|$winnowMinShared|$winnowMaxDf")(
       corpusPrep(train, bench, idCol, textCol, langCol, contaminationMax,
-        winnowMinShared, winnowMaxDf, doubling))
+        winnowMinShared, winnowMaxDf))
   }
 
   /** The manifest columns a [[saveManifest]]/[[loadManifest]] round

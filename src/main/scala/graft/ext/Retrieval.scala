@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.VectorOps
+import graft.operators.Upsert
 
 /** Retrieval scoring over the document corpus — the targeted-curation
   * primitive: score every document against a fixed query-term profile
@@ -146,9 +147,8 @@ object Retrieval {
       .select(struct(col("id").as("doc_id"), col("chunk_id")).as("cid"),
         col("chunk_text"))
     val scored = bm25Score(chunks, "cid", "chunk_text", terms, k1, b)
-    val w = Window.partitionBy(col("id.doc_id"))
-      .orderBy(col("bm25").desc, col("id.chunk_id").asc)
-    scored.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
+    Upsert.firstPerKey(scored, Seq(col("id.doc_id")),
+        Seq(col("bm25").desc, col("id.chunk_id").asc))
       .select(col("id.doc_id").as("doc_id"),
         col("id.chunk_id").as("best_chunk"), col("bm25").as("maxp"))
       .orderBy(col("maxp").desc, col("doc_id").asc).limit(k)

@@ -695,23 +695,15 @@ object Similarity {
     * their own cluster and always survive).
     *
     * Scale shape: adaptive-LSH pairs + (id, label)-only propagation, then
-    * one row_number window per cluster — WindowGroupLimit truncates it
-    * map-side and near-dup clusters are small by construction. */
+    * [[Dedup.bestPerCluster]]. */
   def canonicalSelectEmbeddings(df: DataFrame, idCol: String,
       vecCol: String, score: Column, threshold: Double, bands: Int = 4,
       bitsPerBand: Option[Int] = None, maxDim: Int = 512,
       targetOccupancy: Long = 16L, hotFactor: Long = 8L,
-      maxExtraBits: Int = 16): DataFrame = {
-    val pairs = lshNearDupPairsAdaptive(df, idCol, vecCol, threshold,
-      bands, bitsPerBand, maxDim, targetOccupancy, hotFactor, maxExtraBits)
-    val comp = Dedup.clusters(pairs).withColumnRenamed("id", idCol)
-    val assigned = df.join(comp, Seq(idCol), "left")
-      .withColumn("cluster", coalesce(col("cluster"), col(idCol)))
-    val w = Window.partitionBy(col("cluster"))
-      .orderBy(score.desc, col(idCol))
-    assigned.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-  }
+      maxExtraBits: Int = 16): DataFrame =
+    Dedup.bestPerCluster(df, idCol, score, lshNearDupPairsAdaptive(df, idCol,
+      vecCol, threshold, bands, bitsPerBand, maxDim, targetOccupancy,
+      hotFactor, maxExtraBits))
 
   /** SSL-prototype / D4 prototypicality ranking (Sorscher et al. 2022
     * "Beyond neural scaling laws"; Tirumala et al. 2023 "D4"): each

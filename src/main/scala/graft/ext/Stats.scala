@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.operators.Upsert
 
 /** Classical per-group statistics from EXACT moments — the analytics
   * rows (trend slope, correlation) a pipeline owner reads next to the
@@ -500,10 +501,8 @@ object Stats {
           col("__cw").cast("double") +
           (col("__sr").cast(N) * col("__sr").cast(N)).cast("double") /
             col("__wr").cast("double"))
-    val wBest = Window.partitionBy("g")
-      .orderBy(col("gain").desc, col("v").asc)
-    splits.withColumn("__rk", row_number().over(wBest))
-      .where(col("__rk") === 1)
+    Upsert.firstPerKey(splits, Seq(col("g")),
+        Seq(col("gain").desc, col("v").asc))
       .select(col("g").as("group"), col("__next").as("threshold"),
         col("__cw").as("w_left"), col("__wr").as("w_right"),
         (col("__cs").cast("double") / col("__cw").cast("double"))
@@ -1514,7 +1513,6 @@ object Stats {
   def bestCutByGroup(units: DataFrame, group: Column, score: Column,
       label: Column, wTp: Long, wFp: Long, wFn: Long,
       maxGridValues: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val N = DecimalType(38, 0)
     require(wTp >= 0L && wTp <= 1000000L && wFp >= 0L &&
       wFp <= 1000000L && wFn >= 0L && wFn <= 1000000L,
@@ -1526,10 +1524,8 @@ object Stats {
         (lit(wTp).cast(N) * col("tp").cast(N) -
           lit(wFp).cast(N) * col("fp").cast(N) -
           lit(wFn).cast(N) * col("fn").cast(N)).cast("long"))
-    val wBest = Window.partitionBy("group")
-      .orderBy(col("utility").desc, col("threshold").asc)
-    sweep.withColumn("__rk", row_number().over(wBest))
-      .where(col("__rk") === 1)
+    Upsert.firstPerKey(sweep, Seq(col("group")),
+        Seq(col("utility").desc, col("threshold").asc))
       .select(col("group"), col("threshold"), col("tp"), col("fp"),
         col("fn"), col("tn"), col("utility"))
   }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** As-of (point-in-time) join — the reference's correlated scalar subquery
@@ -9,25 +8,20 @@ import org.apache.spark.sql.functions._
   * (reference: transform-load.2025-08-19.rkt:104-113).
   *
   * Spark-first design: instead of a correlated subquery (which Catalyst
-  * decorrelates into join+agg+join), resolve the argmax with one window
-  * pass. One shuffle on the key; ties broken deterministically — the
-  * reference's fold keeps the first-encountered element on ties
-  * (transform-load.2025-08-19.rkt:51-66), which we model with explicit
-  * secondary sort keys.
+  * decorrelates into join+agg+join), resolve the argmax with one
+  * [[Upsert.firstPerKey]] pass. One shuffle on the key; ties broken
+  * deterministically — the reference's fold keeps the first-encountered
+  * element on ties (transform-load.2025-08-19.rkt:51-66), which we model
+  * with explicit secondary sort keys.
   */
 object AsOf {
 
   /** Latest row per key with `timeCol <= cutoff`. `tieBreak` columns are
     * sorted DESC after the time column, making the pick deterministic. */
   def latestPerKeyUpTo(df: DataFrame, keys: Seq[String], timeCol: Column,
-      cutoff: Column, tieBreak: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy((timeCol.desc +: tieBreak.map(_.desc)): _*)
-    df.where(timeCol <= cutoff)
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
-  }
+      cutoff: Column, tieBreak: Seq[Column]): DataFrame =
+    Upsert.firstPerKey(df.where(timeCol <= cutoff), keys.map(col),
+      timeCol.desc +: tieBreak.map(_.desc))
 
   /** Generic as-of join, join+window form: for every left row, attach the
     * latest right row with `rightTime <= leftTime` on equal `keys`.
@@ -51,10 +45,8 @@ object AsOf {
     val joined = keys.foldLeft(withId.join(rightRenamed, cond, "left")) {
       (acc, k) => acc.drop(rightRenamed(k))
     }
-    val w = Window.partitionBy(col("__lid")).orderBy(rightTime.desc_nulls_last)
-    joined.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn", "__lid")
+    Upsert.firstPerKey(joined, Seq(col("__lid")), Seq(rightTime.desc_nulls_last))
+      .drop("__lid")
   }
 
   /** Generic as-of join, sort-merge form — the big×big scale path.

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
@@ -10,79 +9,66 @@ import graft.sources.ChainJson
 
 /** The flagship E2 path — the reference's daily chain transform+load
   * (reference: transform-load.2025-08-19.rkt:102-152, orchestrated at
-  * :158-225) re-expressed as ONE distributed dataflow:
+  * :158-225) re-expressed as ONE distributed dataflow composed of the
+  * operators:
   *
-  *   read day folder → as-of mark price → target grid → closest
-  *   expiration → closest strike (keep both sides) → PK dedup
+  *   read day folder → [[AsOf]] mark price → [[NearestSelect]] closest
+  *   expiration → [[NearestSelect]] closest strike (keep both sides) →
+  *   [[Upsert]] PK dedup
   *
-  * Shuffle budget: everything partitions by `act_symbol` (the window
-  * passes and the final PK dedup); the target grids are broadcast. At
-  * 100 TB the day folder is a partition-pruned scan, prices-per-day are
-  * small (one row per symbol → broadcast), and AQE handles symbol skew.
+  * Shuffle budget, measured on the d01 fixture's final (AQE) plan: 6
+  * shuffle exchanges — the distinct (symbol, expiration) list, the
+  * expiration pick, the as-of mark pick, the strike pick, the PK dedup
+  * and the export sort; the target grids and the picked strikes are
+  * broadcast. The picks partition by (symbol, target), not by symbol
+  * alone, so the day is not yet one pass per symbol. At 100 TB the day
+  * folder is a partition-pruned scan, prices-per-day are small (one row
+  * per symbol), and AQE handles symbol skew.
   *
   * Selection semantics (:147-152): for each of 4 target expirations pick
   * the nearest REAL expiration; within it, for each of 27 target strikes
-  * pick the nearest REAL strike and keep ALL rows (both sides) at it.
-  * Duplicates across targets collapse in the PK dedup, exactly like the
-  * reference's ON CONFLICT DO NOTHING (:209). Ties: the reference's fold
-  * keeps the first-seen element; we break ties deterministically toward
-  * the SMALLER expiration/strike and document that choice.
+  * pick the nearest REAL strike and keep ALL rows (both sides) at it. A
+  * row picked by several targets is kept once; duplicate PKs collapse in
+  * the PK dedup, like the reference's ON CONFLICT DO NOTHING (:209).
+  * Ties: the reference's fold keeps the first-seen element; we break
+  * ties deterministically toward the SMALLER expiration/strike and
+  * document that choice.
   */
 object ChainPipeline {
 
   /** As-of mark price per symbol: close at the latest date ≤ folderDate
-    * (reference: :104-113, the correlated subquery — here one window
-    * pass, no correlated join). */
+    * (reference: :104-113, the correlated subquery — here one top-1
+    * pick, no correlated join). */
   def markPrices(prices: DataFrame, folderDate: java.sql.Date): DataFrame =
     AsOf.latestPerKeyUpTo(prices, Seq("act_symbol"), col("date"),
         lit(folderDate), Seq.empty)
       .select(col("act_symbol"), col("close").cast(Schemas.Dec).as("mark"))
 
-  /** Target-grid selection over a loaded option_chain DataFrame. */
+  /** Target-grid selection over a loaded option_chain DataFrame: two
+    * [[NearestSelect]] picks, expirations then strikes. */
   def selectNearTheMoney(chain: DataFrame, marks: DataFrame,
       folderDate: java.sql.Date): DataFrame = {
     // 4 target expirations: folderDate + {2,4,6,8} weeks (:123-126)
-    val targetExps = Seq(2, 4, 6, 8)
-      .map(w => date_add(lit(folderDate), 7 * w).as("t_exp"))
-    val teDf = chain.sparkSession.range(1).select(
-      explode(array(targetExps: _*)).as("t_exp"))
+    val targetExps = chain.sparkSession.range(1).select(explode(array(
+      Seq(2, 4, 6, 8).map(w => date_add(lit(folderDate), 7 * w)): _*))
+      .as("t_exp"))
+    // closest listed expiration per (symbol, target) (:51-58)
+    val exps = NearestSelect.nearest(
+      chain.select("act_symbol", "expiration").distinct(), Seq("act_symbol"),
+      targetExps, abs(datediff(col("expiration"), col("t_exp"))),
+      Seq(col("expiration")))
 
-    // closest real expiration per (symbol, target) (:51-58)
-    val exps = chain.select("act_symbol", "expiration").distinct()
-    val wExp = Window.partitionBy("act_symbol", "t_exp")
-      .orderBy(abs(datediff(col("expiration"), col("t_exp"))).asc,
-        col("expiration").asc)
-    val bestExp = exps.crossJoin(broadcast(teDf))
-      .withColumn("__rn", row_number().over(wExp)).where(col("__rn") === 1)
-      .select(col("act_symbol"), col("t_exp"),
-        col("expiration").as("sel_exp"))
+    // 27 target strikes = mark × multipliers (:114-122) at each selected
+    // expiration of the symbol
+    val targetStrikes = exps.select("act_symbol", "expiration")
+      .join(marks.select(col("act_symbol"), explode(array(
+          NearestSelect.strikeMultipliers.map(m => col("mark") * lit(m)): _*))
+        .as("t_strike")), "act_symbol")
 
-    // 27 target strikes = mark × multipliers (:114-122), per symbol
-    val ts = marks.select(col("act_symbol"), explode(array(
-        NearestSelect.strikeMultipliers.map(m =>
-          (col("mark") * lit(m)).as("t")): _*)).as("t_strike"))
-
-    // closest real strike per (symbol, selected expiration, target strike)
-    // over the strikes actually listed at that expiration (:60-66, :147-152)
-    val strikes = chain.join(bestExp, Seq("act_symbol"))
-      .where(col("expiration") === col("sel_exp"))
-      .select("act_symbol", "t_exp", "sel_exp", "strike").distinct()
-    val wStrike = Window.partitionBy("act_symbol", "t_exp", "t_strike")
-      .orderBy(abs(col("strike") - col("t_strike")).asc, col("strike").asc)
-    val bestStrike = strikes.join(ts, Seq("act_symbol"))
-      .withColumn("__rn", row_number().over(wStrike)).where(col("__rn") === 1)
-      .select(col("act_symbol"), col("t_exp"), col("sel_exp"),
-        col("strike").as("sel_strike")).distinct()
-
-    // keep ALL chain rows (both sides) at each selected (expiration, strike)
-    val sel = bestStrike
-      .select(col("act_symbol").as("s_sym"), col("sel_exp"), col("sel_strike"))
-      .distinct()
-    chain.join(broadcast(sel),
-        chain("act_symbol") === sel("s_sym") &&
-          chain("expiration") === sel("sel_exp") &&
-          chain("strike") === sel("sel_strike"))
-      .select(chain.columns.toIndexedSeq.map(chain(_)): _*)
+    // closest listed strike per (symbol, selected expiration, target
+    // strike), keeping ALL chain rows (both sides) at it (:60-66, :147-152)
+    NearestSelect.nearestValueAll(chain, Seq("act_symbol", "expiration"),
+      targetStrikes, abs(col("strike") - col("t_strike")), col("strike"))
   }
 
   /** Full day pipeline: JSON folder → selected, PK-deduped option_chain

@@ -19,8 +19,8 @@ import graft.operators.Upsert
   * Deliberate determinism deviation: when one file lists a symbol more
   * than once, the reference's last PHYSICAL row wins (sequential
   * ON CONFLICT DO UPDATE, :52-64). File order is not stable in a
-  * distributed read, so callers dedup with `Upsert.lastWins` on the
-  * max `effective_date` instead — value-determined, order-free (same
+  * distributed read, so [[upsertRoster]] keeps the row with the max
+  * `effective_date` instead — value-determined, order-free (same
   * policy as the other tie-break deviations, SURVEY §5).
   */
 object WeekliesCsv {
@@ -37,10 +37,16 @@ object WeekliesCsv {
   }
 
   /** Merge a day's file into the roster: ON CONFLICT DO UPDATE — the new
-    * row wins (reference: :52-64). */
+    * row wins (reference: :52-64), and among a symbol's rows within the
+    * file the latest `effective_date` wins. One pick per symbol:
+    * incoming before existing, then `effective_date` DESC. */
   def upsertRoster(existing: DataFrame, incoming: DataFrame): DataFrame =
-    Upsert.upsert(existing, incoming, Seq("act_symbol"),
-      preferExisting = false)
+    Upsert.firstPerKey(
+        existing.withColumn("__src", lit(1))
+          .unionByName(incoming.withColumn("__src", lit(0))),
+        Seq(col("act_symbol")),
+        Seq(col("__src").asc, col("effective_date").desc))
+      .drop("__src")
 
   /** SCD read side of the roster: which weeklies were listed on each
     * `as_of` date — `effective_date ≤ as_of ≤ last_seen` on the current

@@ -48,4 +48,25 @@ class HarnessSpec extends SparkSpec {
       .toSeq
     assert(hits == Seq("Streams.scala"), hits)
   }
+
+  test("a row_number top-1 filter occurs once in code under " +
+      "src/main/scala: every keep-the-first-row pick runs through " +
+      "Upsert.firstPerKey") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val ranked = """withColumn\("(\w+)",\s*row_number\(\)""".r
+    val hits = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val code = Files.readAllLines(p).asScala.map(_.trim)
+          .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
+            l.startsWith("//"))
+          .mkString("\n")
+        ranked.findAllMatchIn(code).map(_.group(1)).toSeq.distinct
+          .flatMap(c => raw"""col\("$c"\)\s*===\s*1\b""".r.findAllIn(code))
+          .map(_ => p.getFileName.toString)
+      }
+      .toSeq
+    assert(hits == Seq("Upsert.scala"), hits)
+  }
 }

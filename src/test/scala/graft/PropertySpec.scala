@@ -93,6 +93,90 @@ class PropertySpec extends SparkSpec {
     val bad = got.join(minDist, Seq("grp", "target"))
       .where(abs($"x" - $"target") =!= $"md")
     assert(bad.count() == 0)
+
+    // the top-1 primitive under it against a driver-side pick: few `a`
+    // values and some nulls so ties are common, `b` unique so each
+    // order is total
+    val r2 = new scala.util.Random(7)
+    val recs = (1 to 300).map { b =>
+      (r2.nextInt(12), if (r2.nextInt(5) == 0) None else Some(r2.nextInt(4)),
+        b)
+    }
+    val rdf = recs.toDF("k", "a", "b")
+    type R = (Int, Option[Int], Int)
+    val orders: Seq[(Seq[org.apache.spark.sql.Column], R => (Int, Int))] =
+      Seq(
+        // ASC puts nulls first, DESC puts them last
+        Seq($"a".asc, $"b".asc) -> (r => (r._2.getOrElse(Int.MinValue), r._3)),
+        Seq($"a".desc, $"b".asc) -> (r => (r._2.fold(Int.MaxValue)(-_), r._3)),
+        Seq($"a".asc_nulls_last, $"b".desc) ->
+          (r => (r._2.getOrElse(Int.MaxValue), -r._3)))
+    orders.foreach { case (order, key) =>
+      val want = recs.groupBy(_._1).map { case (k, rs) => k -> rs.minBy(key)._3 }
+      val picked = rows(Upsert.firstPerKey(rdf, Seq($"k"), order))
+        .map(r => r.getInt(0) -> r.getInt(2))
+      assert(picked.size == want.size && picked.toMap == want, order)
+    }
+  }
+
+  test("property: selectNearTheMoney equals a driver-side fold of the " +
+      "reference's closest-expiration / closest-strike selection") {
+    val day = java.time.LocalDate.of(2024, 1, 15)
+    val r2 = new scala.util.Random(11)
+    // (symbol, mark, expiration day offsets, listed strikes); marks have
+    // 2 decimals so every mark × multiplier target is exact
+    val syms = (1 to 25).map { i =>
+      (s"S$i", Option(BigDecimal(2000 + r2.nextInt(18000)) / 100),
+        Seq.fill(2 + r2.nextInt(6))(1 + r2.nextInt(80)).distinct,
+        Seq.fill(4 + r2.nextInt(12))(BigDecimal(20 + r2.nextInt(500)) / 2)
+          .distinct)
+    } ++ Seq(
+      // the 8-week target (day+56) is equidistant from +53 and +59, and
+      // the 1.30 target (130) from strikes 129 and 131; no other target
+      // picks +59 or 131, so either shows only if the larger won the tie
+      ("TIE", Some(BigDecimal(100)), Seq(53, 59),
+        Seq(80, 100, 129, 131).map(BigDecimal(_))),
+      ("NOMARK", None, Seq(14), Seq(BigDecimal(10))))
+    // random symbols list each strike at some expirations only, and one
+    // or both sides
+    val chain = for {
+      (s, _, exps, strikes) <- syms; e <- exps; k <- strikes
+      if s == "TIE" || r2.nextInt(4) > 0
+      side <- Seq("Call", "Put") if side == "Call" || r2.nextInt(3) > 0
+    } yield (s, day.plusDays(e.toLong), k, side)
+
+    val want = syms.flatMap { case (s, mark, _, _) =>
+      val mine = chain.filter(_._1 == s)
+      val listed = mine.map(_._2).distinct
+      val exps = Seq(2, 4, 6, 8).map(w => day.plusDays(7L * w)).map { t =>
+        listed.minBy(e => (math.abs(e.toEpochDay - t.toEpochDay), e.toEpochDay))
+      }.distinct
+      val picks = for {
+        m <- mark.toSeq; e <- exps
+        ks = mine.filter(_._2 == e).map(_._3).distinct
+        k <- graft.operators.NearestSelect.strikeMultipliers
+          .map(mu => ks.minBy(k => ((k - m * mu).abs, k))).distinct
+      } yield (e, k)
+      mine.filter(r => picks.contains((r._2, r._3)))
+    }
+
+    def show(s: String, e: java.time.LocalDate, k: BigDecimal, side: String) =
+      s"$s|$e|${k.setScale(4)}|$side"
+    val chainDf = chain
+      .map { case (s, e, k, side) => (s, java.sql.Date.valueOf(e), k, side) }
+      .toDF("act_symbol", "expiration", "strike", "call_put")
+      .withColumn("strike", $"strike".cast(graft.model.Schemas.Dec))
+    val marks = syms.flatMap { case (s, m, _, _) => m.map(s -> _) }
+      .toDF("act_symbol", "mark")
+      .withColumn("mark", $"mark".cast(graft.model.Schemas.Dec))
+    val got = rows(graft.plans.ChainPipeline.selectNearTheMoney(chainDf, marks,
+        java.sql.Date.valueOf(day)))
+      .map(r => show(r.getString(0), r.getDate(1).toLocalDate,
+        BigDecimal(r.getDecimal(2)), r.getString(3))).sorted
+    assert(got == want.map((show _).tupled).sorted)
+    val tie = got.filter(_.startsWith("TIE|"))
+    assert(tie.nonEmpty && tie.forall(_.startsWith(s"TIE|${day.plusDays(53)}|")) &&
+      !tie.exists(_.contains("|131.0000|")), tie)
   }
 
   test("property: sort-merge as-of join equals the join+window form") {

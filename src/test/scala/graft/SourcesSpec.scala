@@ -120,9 +120,7 @@ class SourcesSpec extends SparkSpec {
       .toDF("s", "e", "l")
       .select($"s".as("act_symbol"), to_date($"e").as("effective_date"),
         to_date($"l").as("last_seen"))
-    val dedupFile = graft.operators.Upsert.lastWins(f, Seq("act_symbol"),
-      Seq(col("effective_date")))
-    val roster = WeekliesCsv.upsertRoster(existing, dedupFile)
+    val roster = WeekliesCsv.upsertRoster(existing, f)
     val aapl = rows(roster.where($"act_symbol" === "AAPL")).head
     // incoming wins; within the file the later effective date wins
     assert(aapl.getAs[java.sql.Date]("effective_date") == d("2024-01-13"))
