@@ -5,8 +5,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.expressions._
+import graft.plans.{AsOfJoinPushdown, AsOfJoinStrategy}
 
-/** SQL surface for the engine's custom expressions.
+/** Session extensions: the SQL surface for the engine's custom
+  * expressions, and the planner hooks of the as-of join operator
+  * ([[graft.plans.AsOfJoinStrategy]], [[graft.plans.AsOfJoinPushdown]]).
   *
   * Two registration paths:
   *  - `spark.sql.extensions=graft.GraftExtensions` (or
@@ -19,11 +22,14 @@ import graft.functions.expressions._
   * `graft_media_meta(binary)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.all.foreach { case (name, builder) =>
       e.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
     }
+    e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    e.injectOptimizerRule(_ => AsOfJoinPushdown)
+  }
 }
 
 object GraftExtensions {
@@ -63,9 +69,18 @@ object GraftExtensions {
     "graft_media_meta" ->
       ((c: Seq[Expression]) => MediaMetaExpr(c.head)))
 
-  /** Register every graft function on an existing session. */
-  def register(spark: SparkSession): Unit =
+  /** Install everything [[GraftExtensions]] injects on an already-running
+    * session. Idempotent: functions are replaced in place, and the
+    * strategy and rule (always installed together) are added only when
+    * the planner lacks the strategy. */
+  def register(spark: SparkSession): Unit = {
+    val bridge = org.apache.spark.sql.graft.Bridge
     all.foreach { case (name, builder) =>
-      org.apache.spark.sql.graft.Bridge.registerFunction(spark, name, builder)
+      bridge.registerFunction(spark, name, builder)
     }
+    if (!bridge.plannerStrategies(spark).contains(AsOfJoinStrategy)) {
+      spark.experimental.extraStrategies :+= AsOfJoinStrategy
+      spark.experimental.extraOptimizations :+= AsOfJoinPushdown
+    }
+  }
 }

@@ -33,7 +33,8 @@ import graft.sources.Tables
 object Harness {
 
   /** `local[$SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
-    * partitions, UTC session time zone, UI off. Logging is ERROR to
+    * partitions, UTC session time zone, UI off, and [[GraftExtensions]]
+    * (the SQL functions and the as-of join planner hooks). Logging is ERROR to
     * stderr from JVM start (`log4j2.properties` on the main classpath):
     * INFO startup lines and WARN scan stack traces would bury the
     * one-line JSON outputs. */
@@ -44,6 +45,7 @@ object Harness {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
   }
 

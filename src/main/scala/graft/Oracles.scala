@@ -4806,7 +4806,7 @@ object Oracles {
 
     // x127: last-touch attribution — the q02 as-of oracle shape on
     // events; ties at equal click ts resolve to the greatest click id
-    // (the sorted-scan's greatest-tuple rule)
+    // (AsOfJoinExec's greatest-tuple rule)
     "x127_last_touch" ->
       """WITH p AS (
         |  SELECT event_id, user_id, ts FROM events

@@ -1052,7 +1052,8 @@ object Queries {
     * this plan carries one exchange per side here and ZERO when the
     * inputs are bucketed (PlansSpec asserts both); execution is a
     * streaming sorted merge — no |L|×|R| intermediate, no buffering
-    * beyond one right row. Same semantics as AsOf.asOfJoinSorted. */
+    * beyond one right row. Orders with a null customer or date never
+    * match, as in the oracle's `=`/`<=` join. */
   val q28AsofPlanned: Q = (s, dir) => {
     val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
       col("ts"))
@@ -3970,16 +3971,17 @@ object Queries {
   /** x127 — last-touch attribution: every purchase joined to the
     * latest click of the same user at-or-before it — the reference's
     * flagship as-of semantics applied to the events table through the
-    * SORT-MERGE scale path (one shuffle per side, linear scan, no
-    * quadratic intermediate). Purchases with no prior click keep
-    * null attribution. */
+    * as-of join operator (plans.AsOfJoin: one exchange per side, a
+    * streaming sorted merge, no quadratic intermediate). Ties at equal
+    * click time go to the greatest click id. Purchases with no prior
+    * click keep null attribution. */
   val x127LastTouch: Q = (s, dir) => {
     val ev = Tables.events(s, dir)
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"))
     val clicks = ev.where(col("event_type") === "click")
       .select(col("user_id"), col("ts"), col("event_id"))
-    AsOf.asOfJoinSorted(purchases, clicks, Seq("user_id"), "ts", "ts")
+    graft.plans.AsOfJoin(purchases, clicks, Seq("user_id"), "ts", "ts")
       .orderBy("event_id")
   }
 

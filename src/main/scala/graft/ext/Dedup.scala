@@ -232,7 +232,11 @@ object Dedup {
     * (4 plain + `maxIters` doubling) — `maxIters` bounds the DOUBLING
     * tier, not the whole loop, so callers budgeting wall-clock per
     * round should count 4 + maxIters; a warning (stderr) fires only
-    * if even doubling exhausts its budget (diameter > ~2^maxIters). */
+    * if even doubling exhausts its budget (diameter > ~2^maxIters).
+    *
+    * Storage: each round's checkpoint is freed once the next one is
+    * materialized, and the edge sets once nothing returned reads them,
+    * so the call leaves exactly the returned labels pinned. */
   def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
       maxIters: Int = 10): DataFrame = {
     // materialize the edge set ONCE — the pair plan upstream (LSH
@@ -265,13 +269,16 @@ object Dedup {
         .join(labels, edges("b") === labels("id"))
         .groupBy(col("a").as("id2")).agg(min(col("cluster")).as("nmin"))
       val obs = org.apache.spark.sql.Observation()
-      labels = labels.join(neighborMin, labels("id") === col("id2"), "left")
+      val next = labels.join(neighborMin, labels("id") === col("id2"), "left")
         .select(col("id"),
           least(col("cluster"), coalesce(col("nmin"), col("cluster")))
             .as("cluster"))
         .observe(obs,
           coalesce(sum(col("id") - col("cluster")), lit(0L)).as("p"))
         .localCheckpoint(true)
+      // round 0's input is the identity labels, a plan over `edges`
+      if (i > 0) Memo.release(labels)
+      labels = next
       val p = obs.get("p").asInstanceOf[Long]
       converged = p == prevProgress
       prevProgress = p
@@ -303,8 +310,13 @@ object Dedup {
         .where(col("a") =!= col("b"))
         .distinct()
         .localCheckpoint(true)
-      labels = doublingRounds(edgesC, labels, maxIters, prevProgress)
-    }
+      // after any plain round the labels are a checkpoint of their own;
+      // with none (maxIters = 0) they are the identity plan over `edges`
+      if (i > 0) Memo.release(edges)
+      labels = doublingRounds(edgesC, labels, maxIters, prevProgress,
+        ownsStart = i > 0)
+      Memo.release(edgesC)
+    } else Memo.release(edges)
     labels
   }
 
@@ -312,9 +324,10 @@ object Dedup {
     * the shared tail of [[clustersDoubling]] and [[clusters]]'
     * escalation path. Same convergence detection; warns (stderr —
     * Bench's stdout must stay one JSON line) only if even doubling
-    * exhausts its budget (diameter > ~2^maxIters). */
+    * exhausts its budget (diameter > ~2^maxIters). Frees each
+    * superseded round's checkpoint, `labels0` too when `ownsStart`. */
   private def doublingRounds(edges: DataFrame, labels0: DataFrame,
-      maxIters: Int, progress0: Long): DataFrame = {
+      maxIters: Int, progress0: Long, ownsStart: Boolean): DataFrame = {
     // `edges` may be the CONTRACTED quotient graph (the clusters()
     // escalation): the neighbor-min arm then only updates nodes that
     // are quotient vertices, and every other node converges through
@@ -346,13 +359,15 @@ object Dedup {
       val ptr = stepped.select(col("id").as("pid"),
         col("cluster").as("pcluster"))
       val obs = org.apache.spark.sql.Observation()
-      labels = stepped.join(ptr, stepped("cluster") === ptr("pid"), "left")
+      val next = stepped.join(ptr, stepped("cluster") === ptr("pid"), "left")
         .select(stepped("id"),
           least(stepped("cluster"),
             coalesce(col("pcluster"), stepped("cluster"))).as("cluster"))
         .observe(obs,
           coalesce(sum(col("id") - col("cluster")), lit(0L)).as("p"))
         .localCheckpoint(true)
+      if (i > 0 || ownsStart) Memo.release(labels)
+      labels = next
       val p = obs.get("p").asInstanceOf[Long]
       converged = p == prevProgress
       prevProgress = p
@@ -390,7 +405,11 @@ object Dedup {
       .localCheckpoint(true)
     val labels = edges.select(col("a").as("id")).distinct()
       .withColumn("cluster", col("id"))
-    doublingRounds(edges, labels, maxIters, progress0 = 0L)
+    val out = doublingRounds(edges, labels, maxIters, progress0 = 0L,
+      ownsStart = false)
+    // with no round (maxIters = 0) `out` is the identity plan over `edges`
+    if (maxIters > 0) Memo.release(edges)
+    out
   }
 
   /** End-to-end near-dedup of a corpus: MinHash+LSH pairs → connected

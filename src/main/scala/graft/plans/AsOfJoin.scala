@@ -8,16 +8,17 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
-/** As-of join as a first-class Catalyst operator — the SURVEY §2.9
-  * "whole-operator" extension path (logical node + planner strategy +
-  * physical plan), built because Spark genuinely lacks the operator and
-  * composing it costs something real at 100 TB:
+/** As-of join as a first-class Catalyst operator — the engine's one
+  * general as-of join, built on the SURVEY §2.9 "whole-operator"
+  * extension path (logical node + planner strategy + physical plan)
+  * because Spark lacks the operator and composing it costs something
+  * real at 100 TB:
   *
-  *  - the join+window form materializes |L|·|matching R| rows;
-  *  - the union+mapPartitions form ([[graft.operators.AsOf.asOfJoinSorted]])
-  *    is linear but ALWAYS repartitions both sides — it cannot tell
-  *    Catalyst "I need clustering on the keys and (key, time) order",
-  *    so pre-bucketed/sorted inputs pay two avoidable exchanges.
+  *  - a join+window form materializes |L|·|matching R| rows;
+  *  - a union+mapPartitions form is linear but ALWAYS repartitions both
+  *    sides and round-trips every row through `Row` objects — it cannot
+  *    tell Catalyst "I need clustering on the keys and (key, time)
+  *    order", so pre-bucketed/sorted inputs pay two avoidable exchanges.
   *
   * [[AsOfJoinExec]] declares those requirements instead and lets
   * EnsureRequirements plan them: unpartitioned children get one exchange
@@ -25,10 +26,15 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * asserted in PlansSpec. Execution is a single streaming merge of the
   * two sorted partitions: O(|L|+|R|), no buffering beyond one right row.
   *
-  * Semantics match `asOfJoinSorted`: inclusive `rightTime <= leftTime`,
-  * unmatched left rows survive with nulls, ties at equal (key, time)
-  * resolve to the sort-greatest right row (the required right ordering
-  * appends every orderable right column, making the pick deterministic).
+  * Semantics (the SQL `r.key = l.key AND r.time <= l.time` match): the
+  * comparison is inclusive, unmatched left rows survive with nulls, a
+  * right row with a null key or a null time never matches (filtered out
+  * in [[AsOfJoin.apply]]), and ties at equal (key, time) resolve to the
+  * sort-greatest right row (the required right ordering appends every
+  * orderable right column, making the pick deterministic).
+  *
+  * The strategy and the pushdown rule register through
+  * [[graft.GraftExtensions]].
   */
 case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
     leftKeys: Seq[Expression], rightKeys: Seq[Expression],
@@ -40,9 +46,8 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Registered per-session via
-  * `spark.experimental.extraStrategies` (see [[AsOfJoin.ensureStrategy]]),
-  * the public hook for exactly this. */
+/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Injected by
+  * [[graft.GraftExtensions]], at session build or on a running session. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt) =>
@@ -202,37 +207,35 @@ object AsOfJoinPushdown
 /** DataFrame-level entry point. */
 object AsOfJoin {
 
-  /** Idempotently add the planner strategy and optimizer rule to the
-    * session (the public post-construction hooks for both). */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-    }
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(AsOfJoinPushdown)) {
-      spark.experimental.extraOptimizations = opts :+ AsOfJoinPushdown
-    }
-  }
-
-  /** As-of join with the same surface as `AsOf.asOfJoinSorted`: for every
-    * left row, the latest right row with `rightTime <= leftTime` on equal
-    * keys; right non-key columns come back `prefix`ed. Pass column NAMES —
-    * they resolve against each side unambiguously. */
+  /** For every left row, the latest right row with `rightTime <= leftTime`
+    * on equal keys; right non-key columns come back `prefix`ed. Pass
+    * column NAMES — they resolve against each side unambiguously. The
+    * session must carry [[graft.GraftExtensions]] (`Harness.session` does;
+    * elsewhere build with `.withExtensions(new GraftExtensions)` or call
+    * `GraftExtensions.register`). */
   def apply(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTimeCol: String, rightTimeCol: String, rightPrefix: String = "asof_")
       : DataFrame = {
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    val bridge = org.apache.spark.sql.graft.Bridge
+    require(bridge.plannerStrategies(spark).contains(AsOfJoinStrategy),
+      "graft.plans.AsOfJoin needs its planner strategy: build the session " +
+        "with .withExtensions(new graft.GraftExtensions) or call " +
+        "graft.GraftExtensions.register(spark)")
     // keep ONE copy of the key columns (the left one) in the output:
     // right keys go out under reserved names and are dropped afterwards
     val rightRenamed = right.columns.foldLeft(right) { (acc, c) =>
       if (keys.contains(c)) acc.withColumnRenamed(c, "__asof_k_" + c)
       else acc.withColumnRenamed(c, rightPrefix + c)
     }
-    val bridge = org.apache.spark.sql.graft.Bridge
+    // `=` and `<=` never match a null: drop such right rows here, once
+    // (the merge orders nulls first and would otherwise pick them); the
+    // filter pushes into the scan and keeps the child's partitioning
+    val rightMatchable = rightRenamed.where(
+      (keys.map("__asof_k_" + _) :+ (rightPrefix + rightTimeCol))
+        .map(c => rightRenamed(c).isNotNull).reduce(_ && _))
     val lPlan = bridge.analyzedPlan(left)
-    val rPlan = bridge.analyzedPlan(rightRenamed)
+    val rPlan = bridge.analyzedPlan(rightMatchable)
     def resolve(plan: LogicalPlan, name: String): Attribute =
       plan.output.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(

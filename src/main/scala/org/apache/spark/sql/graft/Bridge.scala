@@ -57,4 +57,11 @@ object Bridge {
     classic.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "built-in")
   }
+
+  /** The session planner's strategies, extension-injected ones included
+    * (SessionState is private[sql]). */
+  def plannerStrategies(spark: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.planner.strategies
 }

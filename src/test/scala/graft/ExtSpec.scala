@@ -125,6 +125,29 @@ class ExtSpec extends SparkSpec {
     assert(kept == Seq(1L, 3L, 5L))
   }
 
+  test("clusters frees every superseded round: a chain that escalates to " +
+      "doubling leaves only the returned labels pinned") {
+    // a 24-edge chain: the 4 plain rounds cannot close it, so the
+    // contraction and the doubling tier run too
+    val pairs = (0L until 24L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def pinnedBy(body: => org.apache.spark.sql.DataFrame) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val labels = body
+      val leaves = labels.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+      (labels, spark.sparkContext.getPersistentRDDs.keySet -- before, leaves)
+    }
+    val (labels, newIds, leaves) = pinnedBy(Dedup.clusters(pairs))
+    assert(rows(labels).map(r => r.getLong(1)).toSet == Set(0L))
+    assert(leaves.size == 1 && newIds == leaves,
+      s"new persistent RDDs $newIds, returned frame reads $leaves")
+    // no rounds at all: the identity labels still read the edge set
+    val (none, noneIds, noneLeaves) = pinnedBy(Dedup.clusters(pairs, maxIters = 0))
+    assert(rows(none).size == 25)
+    assert(noneIds == noneLeaves, s"$noneIds != $noneLeaves")
+  }
+
   test("similarity: brute top-k exact against hand-computed cosine") {
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.9f, 0.1f)),

@@ -37,6 +37,35 @@ class ExtensionsSpec extends SparkSpec {
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
   }
 
+  test("GraftExtensions injects the as-of strategy and pushdown rule; " +
+      "register adds them once") {
+    import org.apache.spark.sql.graft.{Bridge, ExtensionsProbe}
+    import graft.plans.{AsOfJoinPushdown, AsOfJoinStrategy}
+    val e = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(e)
+    assert(ExtensionsProbe.strategies(e, spark) == Seq(AsOfJoinStrategy))
+    assert(ExtensionsProbe.optimizerRules(e, spark) == Seq(AsOfJoinPushdown))
+    // the shared session is built with the extension; registering on top
+    // of it must not plan the operator twice
+    GraftExtensions.register(spark)
+    GraftExtensions.register(spark)
+    assert(Bridge.plannerStrategies(spark).count(_ == AsOfJoinStrategy) == 1)
+  }
+
+  test("AsOfJoin on a session without GraftExtensions fails before " +
+      "planning, naming it; register installs the hooks") {
+    val bare = org.apache.spark.sql.graft.ExtensionsProbe.withoutExtensions(spark)
+    bare.conf.set("spark.sql.shuffle.partitions", "4")
+    val l = bare.range(3).selectExpr("id AS k", "id AS t")
+    val r = bare.range(3).selectExpr("id AS k", "id AS t", "id * 10 AS v")
+    val e = intercept[IllegalArgumentException](
+      graft.plans.AsOfJoin(l, r, Seq("k"), "t", "t"))
+    assert(e.getMessage.contains("GraftExtensions"), e.getMessage)
+    GraftExtensions.register(bare)
+    assert(rows(graft.plans.AsOfJoin(l, r, Seq("k"), "t", "t").orderBy("k")
+      .select("asof_v")).map(_.getLong(0)) == Seq(0L, 10L, 20L))
+  }
+
   test("graft_media_meta parses headers from SQL; agrees with decodeMeta") {
     GraftExtensions.register(spark)
     // PNG 16x32 (FIXTURES.md §C byte layout)

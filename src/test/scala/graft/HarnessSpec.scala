@@ -49,6 +49,18 @@ class HarnessSpec extends SparkSpec {
     assert(hits == Seq("Streams.scala"), hits)
   }
 
+  test(".experimental occurs only in GraftExtensions.scala: the planner " +
+      "hooks register through the session extension") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val hits = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains(".experimental"))
+      .map(_.getFileName.toString)
+      .toSeq
+    assert(hits == Seq("GraftExtensions.scala"), hits)
+  }
+
   test("a row_number top-1 filter occurs once in code under " +
       "src/main/scala: every keep-the-first-row pick runs through " +
       "Upsert.firstPerKey") {

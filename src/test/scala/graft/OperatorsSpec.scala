@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{AsOf, NearestSelect, Upsert}
+import graft.plans.AsOfJoin
 
 /** As-of join (J2), nearest-select argmin (A3/A4), upsert dedup (A5/S10)
   * — including the reference's edge cases: no row before the cutoff,
@@ -27,7 +28,7 @@ class OperatorsSpec extends SparkSpec {
       .toDF("k", "ls").withColumn("lt", to_date($"ls"))
     val right = Seq(("A", "2024-01-10", 1.0), ("A", "2024-01-12", 2.0))
       .toDF("k", "rs", "v").withColumn("rt", to_date($"rs"))
-    val got = AsOf.asOfJoin(left, right, Seq("k"), col("lt"), col("asof_rt"))
+    val got = AsOfJoin(left, right, Seq("k"), "lt", "rt")
     val r = rows(got.select($"k", $"ls", $"asof_v").orderBy("k", "ls"))
     assert(r(0).getString(1) == "2024-01-11" && r(0).getDouble(2) == 1.0)
     assert(r(1).getString(1) == "2024-01-15" && r(1).getDouble(2) == 2.0)

@@ -1,11 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.AsOf
 import graft.plans.AsOfJoin
 
-/** The custom-Catalyst as-of join: semantics ≡ the mapPartitions form,
-  * and the plan-shape claims (exchanges only when needed) hold. */
+/** The custom-Catalyst as-of join: semantics ≡ the driver-side brute
+  * force (SparkSpec.asOfBruteForce), and the plan-shape claims
+  * (exchanges only when needed) hold. */
 class PlansSpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,10 +30,10 @@ class PlansSpec extends SparkSpec {
     rows(df.select(cols.map(col).toIndexedSeq: _*)).map(_.toString).sorted
   }
 
-  test("planned as-of join ≡ sorted mapPartitions form, incl. ties and misses") {
+  test("planned as-of join ≡ brute force, incl. ties and misses") {
     val planned = AsOfJoin(left, right, Seq("k"), "lt", "rt")
-    val sorted = AsOf.asOfJoinSorted(left, right, Seq("k"), "lt", "rt")
-    assert(canon(planned) == canon(sorted))
+    assert(canon(planned) ==
+      canon(asOfBruteForce(left, right, Seq("k"), "lt", "rt")))
     // spot-check semantics directly
     val byTag = rows(planned).map(r =>
       r.getString(planned.columns.indexOf("tag")) ->
@@ -44,6 +44,26 @@ class PlansSpec extends SparkSpec {
     assert(byTag("e4") == None)       // right rows all later
     assert(byTag("e5") == None)       // no such key
     assert(byTag("e6") == Some(400L)) // inclusive ≤ at equal timestamps
+  }
+
+  test("null keys and null right times never match, as in SQL's = and <=") {
+    val l = Seq[(Option[Long], Option[String], String)](
+      (Some(1L), Some("2024-01-03"), "n1"), // only candidates: null time, later
+      (Some(1L), None, "n2"),               // null left time
+      (Some(2L), Some("2024-01-10"), "n3"), // only candidate has a null time
+      (None, Some("2024-01-10"), "n4"),     // null key on both sides
+      (Some(1L), Some("2024-01-06"), "n5")) // the one real match
+      .toDF("k", "lt", "tag").withColumn("lt", to_timestamp($"lt"))
+    val r = Seq[(Option[Long], Option[String], Long)](
+      (Some(1L), None, 100L), (Some(1L), Some("2024-01-05"), 101L),
+      (Some(2L), None, 200L), (None, Some("2024-01-01"), 300L))
+      .toDF("k", "rt", "seq").withColumn("rt", to_timestamp($"rt"))
+    val planned = AsOfJoin(l, r, Seq("k"), "lt", "rt")
+    val byTag = rows(planned).map(x => x.getAs[String]("tag") ->
+      Option(x.getAs[Any]("asof_seq"))).toMap
+    assert(byTag == Map("n1" -> None, "n2" -> None, "n3" -> None,
+      "n4" -> None, "n5" -> Some(101L)), byTag)
+    assert(canon(planned) == canon(asOfBruteForce(l, r, Seq("k"), "lt", "rt")))
   }
 
   test("unpartitioned inputs plan one exchange per side; exec node present") {
@@ -64,8 +84,8 @@ class PlansSpec extends SparkSpec {
       assert(plan.contains("AsOfJoin"), s"exec node missing:\n$plan")
       assert(!plan.contains("Exchange hashpartitioning"),
         s"unexpected shuffle on bucketed inputs:\n$plan")
-      assert(canon(planned) == canon(AsOf.asOfJoinSorted(left, right,
-        Seq("k"), "lt", "rt")))
+      assert(canon(planned) ==
+        canon(asOfBruteForce(left, right, Seq("k"), "lt", "rt")))
     } finally {
       spark.sql("DROP TABLE IF EXISTS b_asof_l")
       spark.sql("DROP TABLE IF EXISTS b_asof_r")
@@ -89,7 +109,7 @@ class PlansSpec extends SparkSpec {
     val pushed = "PushedFilters: \\[[^\\]]*LessThan".r.findAllIn(exec).size
     assert(pushed == 2, s"expected key filter pushed to both scans:\n$exec")
     // results are unchanged by the rewrite
-    val expect = AsOf.asOfJoinSorted(ev, ord, Seq("user_id"), "ts", "o_orderdate")
+    val expect = asOfBruteForce(ev, ord, Seq("user_id"), "ts", "o_orderdate")
       .where($"user_id" < 50 && $"event_id" % 2 === 0)
     assert(canon(filtered) == canon(expect))
     // a predicate over an asof_ (right result) column must NOT push below
@@ -100,7 +120,7 @@ class PlansSpec extends SparkSpec {
       s"asof_ filter moved unexpectedly:\n$opt2")
   }
 
-  test("planned as-of ≡ sorted form on the events×orders corpus slice") {
+  test("planned as-of ≡ brute force on the events×orders corpus slice") {
     val dir = "/root/testdata/sf0.001"
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"event_id", $"user_id", $"ts")
@@ -108,9 +128,8 @@ class PlansSpec extends SparkSpec {
       .select($"o_custkey".as("user_id"), $"o_orderdate", $"o_orderkey",
         $"o_totalprice")
     val planned = AsOfJoin(ev, ord, Seq("user_id"), "ts", "o_orderdate")
-    val sorted = AsOf.asOfJoinSorted(ev, ord, Seq("user_id"), "ts",
-      "o_orderdate")
-    assert(canon(planned) == canon(sorted))
+    assert(canon(planned) ==
+      canon(asOfBruteForce(ev, ord, Seq("user_id"), "ts", "o_orderdate")))
     assert(planned.count() == ev.count())
   }
 }

@@ -11,6 +11,7 @@ trait SparkSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -32,4 +33,38 @@ trait SparkSpec extends AnyFunSuite {
 
   def rows(df: DataFrame): Seq[org.apache.spark.sql.Row] =
     df.collect().toSeq
+
+  /** Driver-side reference for [[graft.plans.AsOfJoin]]: for each left row,
+    * among right rows with an equal non-null key and a non-null time ≤ the
+    * left time, the greatest (time, remaining right columns) tuple wins,
+    * nulls ordering first. Right non-key columns come back `prefix`ed, null
+    * when nothing matches. Values compare through `Comparable`. */
+  def asOfBruteForce(left: DataFrame, right: DataFrame, keys: Seq[String],
+      leftTime: String, rightTime: String, prefix: String = "asof_")
+      : DataFrame = {
+    import org.apache.spark.sql.Row
+    def cmp(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    }
+    val rest = right.columns.filterNot(keys.contains).toSeq
+    val tuple = rightTime +: rest.filterNot(_ == rightTime)
+    def tupleCmp(a: Row, b: Row): Int = tuple.iterator
+      .map(c => cmp(a.getAs[Any](c), b.getAs[Any](c))).find(_ != 0).getOrElse(0)
+    val byKey = rows(right)
+      .filter(r => (keys :+ rightTime).forall(c => r.getAs[Any](c) != null))
+      .groupBy(r => keys.map(r.getAs[Any]))
+    val joined = rows(left).map { l =>
+      val t = l.getAs[Any](leftTime)
+      val best = byKey.getOrElse(keys.map(l.getAs[Any]), Nil)
+        .filter(r => t != null && cmp(r.getAs[Any](rightTime), t) <= 0)
+        .reduceOption((a, b) => if (tupleCmp(a, b) >= 0) a else b)
+      Row.fromSeq(l.toSeq ++ rest.map(c => best.map(_.getAs[Any](c)).orNull))
+    }
+    val schema = org.apache.spark.sql.types.StructType(left.schema.fields ++
+      rest.map(c => right.schema(c).copy(name = prefix + c, nullable = true)))
+    spark.createDataFrame(spark.sparkContext.parallelize(joined, 1), schema)
+  }
 }
