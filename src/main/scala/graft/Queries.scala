@@ -4336,8 +4336,8 @@ object Queries {
   private def resPath(p: String): String = graft.sources.Fixtures.path(p)
 
   /** d01 — flagship E2 chain pipeline: day folder JSON → as-of mark →
-    * 27×4 grid selection → PK dedup (reference:
-    * transform-load.2025-08-19.rkt:102-225). */
+    * 27×4 grid selection → PK dedup, in the export order (reference:
+    * transform-load.2025-08-19.rkt:102-225; dump-dat.rkt:66-76). */
   val d01ChainPipeline: Q = (s, _) => {
     import s.implicits._
     val prices = Seq(("AAA", "2024-01-12", 101.0), ("AAA", "2024-01-20", 150.0),
@@ -4345,7 +4345,8 @@ object Queries {
       .toDF("act_symbol", "ds", "close")
       .select(col("act_symbol"), to_date(col("ds")).as("date"), col("close"))
     graft.plans.ChainPipeline.loadDay(s, resPath("chain/2024-01-15"), prices,
-      java.sql.Date.valueOf("2024-01-15"))
+        java.sql.Date.valueOf("2024-01-15"))
+      .orderBy("act_symbol", "expiration", "strike", "call_put")
   }
 
   /** d02 — volatility HTML extraction incl. sentinel quarantine and year

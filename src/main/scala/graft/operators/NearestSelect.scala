@@ -8,61 +8,52 @@ import org.apache.spark.sql.functions._
   * (reference: transform-load.2025-08-19.rkt:51-66 argmin folds;
   * :114-126 builds 27 strikes × 4 expirations; :147-152 applies them).
   *
-  * Spark-first: broadcast the (tiny) target grid beside the candidates,
-  * then one [[Upsert.firstPerKey]] pick per (group, target) ordered by
-  * distance with deterministic tie-breaks. The reference's fold keeps the
-  * first-seen element on equal distance — callers pass `tieBreak` columns
-  * that reproduce its iteration order.
-  *
-  * The grid is joined on the target columns that are also group columns
-  * (a per-group grid: the per-symbol `mark × multiplier` strikes), and
-  * cross joined when there are none (one grid for every group: the
-  * folder date's target expirations).
-  *
-  * At scale: the grid blowup is a constant factor (|targets| per group);
-  * the one shuffle is on (group, target) and is unavoidable for a global
-  * argmin; AQE handles skewed groups.
+  * Two shapes of one pick by distance; the reference's fold keeps the
+  * first-seen element on equal distance, and both shapes break ties
+  * deterministically instead:
+  *  - [[nearest]], over rows: broadcast the (tiny) target grid beside the
+  *    candidates, then one [[Upsert.firstPerKey]] pick per (group, target),
+  *    ties going to the smallest caller-given `tieBreak` tuple. The grid
+  *    is joined on the target columns that are also group columns (a
+  *    per-group grid), and cross joined when there are none (one grid for
+  *    every group). The one shuffle is on (group, target); the grid
+  *    blowup is a constant factor (|targets| per group).
+  *  - [[nearestIn]], over arrays inside one row, ties going to the
+  *    smaller value: when a group's candidates are already collected into
+  *    one row (one aggregate per group), the picks are array expressions
+  *    and need no shuffle of their own. The daily chain job picks this way
+  *    ([[graft.plans.ChainPipeline.selectNearTheMoney]]).
   */
 object NearestSelect {
-
-  /** `df` beside every target row of its group, and the (group × target)
-    * key the pick partitions by. */
-  private def withTargets(df: DataFrame, groupCols: Seq[String],
-      targets: DataFrame): (DataFrame, Seq[Column]) = {
-    val shared = targets.columns.toSeq.filter(groupCols.contains)
-    val grid =
-      if (shared.isEmpty) df.crossJoin(broadcast(targets))
-      else df.join(broadcast(targets), shared)
-    (grid, (groupCols ++ targets.columns.filterNot(shared.contains)).map(col))
-  }
 
   /** For each (group × target row), keep the df row minimizing
     * `distance(dfRow, target)`. `targets` must be small (broadcast). */
   def nearest(df: DataFrame, groupCols: Seq[String], targets: DataFrame,
       distance: Column, tieBreak: Seq[Column]): DataFrame = {
-    val (grid, key) = withTargets(df, groupCols, targets)
+    val shared = targets.columns.toSeq.filter(groupCols.contains)
+    val grid =
+      if (shared.isEmpty) df.crossJoin(broadcast(targets))
+      else df.join(broadcast(targets), shared)
+    val key = (groupCols ++ targets.columns.filterNot(shared.contains)).map(col)
     Upsert.firstPerKey(grid, key, distance.asc +: tieBreak.map(_.asc))
   }
 
-  /** For each (group × target), compute the argmin VALUE of `valueCol`
-    * (ties: smallest value wins), then keep ALL df rows whose `valueCol`
-    * equals it — the reference selects the closest strike and then keeps
-    * every option (both sides) at that strike
-    * (transform-load.2025-08-19.rkt:147-152). Each df row comes back
-    * once, with df's columns, however many targets picked its value. */
-  def nearestValueAll(df: DataFrame, groupCols: Seq[String], targets: DataFrame,
-      distance: Column, valueCol: Column): DataFrame = {
-    val (grid, key) = withTargets(df, groupCols, targets)
-    // the winners' group columns are renamed so the semi join's condition
-    // resolves each side by name
-    val g = groupCols.indices.map(i => s"__g$i")
-    val winners = Upsert.firstPerKey(grid, key, Seq(distance.asc, valueCol.asc))
-      .select((groupCols.zip(g).map { case (c, n) => col(c).as(n) } :+
-        valueCol.as("__win")): _*)
-    df.join(broadcast(winners), groupCols.zip(g)
-        .map { case (c, n) => col(c) === col(n) }
-        .foldLeft(valueCol === col("__win"))(_ && _), "left_semi")
-  }
+  /** Per row: for each element of the array `targets`, the element of the
+    * array `cands` nearest to it, and the distinct winners as an array.
+    * The pick is the smallest `struct(distance, candidate)`, so ties go to
+    * the smaller candidate. A null candidate or a null distance is no
+    * candidate, so a target with no real distance picks nothing (a null
+    * would otherwise sort first and win).
+    *
+    * `cands` is evaluated once per target: pass a column or a lambda
+    * variable, not an expression that recomputes the array. */
+  def nearestIn(cands: Column, targets: Column,
+      distance: (Column, Column) => Column): Column =
+    array_distinct(filter(
+      transform(targets, t => array_min(filter(
+          transform(cands, c => struct(distance(c, t).as("d"), c.as("v"))),
+          p => p("d").isNotNull && p("v").isNotNull))("v")),
+      _.isNotNull))
 
   /** The reference's default target strike multipliers — 27 points spanning
     * 70%..130% of the as-of close (transform-load.2025-08-19.rkt:114-122). */

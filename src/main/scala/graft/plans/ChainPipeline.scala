@@ -12,18 +12,22 @@ import graft.sources.ChainJson
   * :158-225) re-expressed as ONE distributed dataflow composed of the
   * operators:
   *
-  *   read day folder → [[AsOf]] mark price → [[NearestSelect]] closest
-  *   expiration → [[NearestSelect]] closest strike (keep both sides) →
-  *   [[Upsert]] PK dedup
+  *   read day folder → [[AsOf]] mark price → per symbol, [[NearestSelect]]
+  *   closest expirations, then closest strikes → semi-join back (keep
+  *   both sides) → [[Upsert]] PK dedup
   *
-  * Shuffle budget, measured on the d01 fixture's final (AQE) plan: 6
-  * shuffle exchanges — the distinct (symbol, expiration) list, the
-  * expiration pick, the as-of mark pick, the strike pick, the PK dedup
-  * and the export sort; the target grids and the picked strikes are
-  * broadcast. The picks partition by (symbol, target), not by symbol
-  * alone, so the day is not yet one pass per symbol. At 100 TB the day
-  * folder is a partition-pruned scan, prices-per-day are small (one row
-  * per symbol), and AQE handles symbol skew.
+  * Shuffle budget, measured on the d01 fixture's final (AQE) plan: 3
+  * shuffle exchanges — the chain's per-symbol aggregate, the as-of mark
+  * pick on prices, and the PK dedup — and 2 Window operators (the mark
+  * pick and the PK dedup); the marks and the picked (symbol, expiration,
+  * strike) winners are broadcast. The selection itself is one pass per
+  * symbol: the aggregate collects the symbol's listed (expiration,
+  * strike) pairs into one row and both picks are array expressions on
+  * it. The PK dedup cannot reuse the aggregate's shuffle, which carries
+  * collected pairs rather than chain rows. At 100 TB the day folder is a
+  * partition-pruned scan, prices-per-day are small (one row per symbol),
+  * the winners are at most 4 × 27 rows per symbol, and AQE handles
+  * symbol skew.
   *
   * Selection semantics (:147-152): for each of 4 target expirations pick
   * the nearest REAL expiration; within it, for each of 27 target strikes
@@ -32,7 +36,8 @@ import graft.sources.ChainJson
   * the PK dedup, like the reference's ON CONFLICT DO NOTHING (:209).
   * Ties: the reference's fold keeps the first-seen element; we break
   * ties deterministically toward the SMALLER expiration/strike and
-  * document that choice.
+  * document that choice. A null expiration or strike is never a
+  * candidate, and a symbol whose as-of close is null picks no strike.
   */
 object ChainPipeline {
 
@@ -44,35 +49,46 @@ object ChainPipeline {
         lit(folderDate), Seq.empty)
       .select(col("act_symbol"), col("close").cast(Schemas.Dec).as("mark"))
 
-  /** Target-grid selection over a loaded option_chain DataFrame: two
-    * [[NearestSelect]] picks, expirations then strikes. */
+  /** Target-grid selection over a loaded option_chain DataFrame: the rows
+    * of `chain`, in its column order, at each symbol's picked
+    * (expiration, strike) pairs. Symbols without a mark select nothing. */
   def selectNearTheMoney(chain: DataFrame, marks: DataFrame,
       folderDate: java.sql.Date): DataFrame = {
     // 4 target expirations: folderDate + {2,4,6,8} weeks (:123-126)
-    val targetExps = chain.sparkSession.range(1).select(explode(array(
-      Seq(2, 4, 6, 8).map(w => date_add(lit(folderDate), 7 * w)): _*))
-      .as("t_exp"))
-    // closest listed expiration per (symbol, target) (:51-58)
-    val exps = NearestSelect.nearest(
-      chain.select("act_symbol", "expiration").distinct(), Seq("act_symbol"),
-      targetExps, abs(datediff(col("expiration"), col("t_exp"))),
-      Seq(col("expiration")))
-
-    // 27 target strikes = mark × multipliers (:114-122) at each selected
-    // expiration of the symbol
-    val targetStrikes = exps.select("act_symbol", "expiration")
-      .join(marks.select(col("act_symbol"), explode(array(
-          NearestSelect.strikeMultipliers.map(m => col("mark") * lit(m)): _*))
-        .as("t_strike")), "act_symbol")
-
-    // closest listed strike per (symbol, selected expiration, target
-    // strike), keeping ALL chain rows (both sides) at it (:60-66, :147-152)
-    NearestSelect.nearestValueAll(chain, Seq("act_symbol", "expiration"),
-      targetStrikes, abs(col("strike") - col("t_strike")), col("strike"))
+    val targetExps = array(Seq(2, 4, 6, 8)
+      .map(w => date_add(lit(folderDate), 7 * w)): _*)
+    // 27 target strikes = mark × multipliers (:114-122)
+    val targetStrikes = array(
+      NearestSelect.strikeMultipliers.map(m => col("mark") * lit(m)): _*)
+    // one row per symbol: its listed expirations and (expiration, strike)
+    // pairs, beside its mark
+    val listed = chain.groupBy("act_symbol")
+      .agg(collect_set(col("expiration")).as("exps"),
+        collect_set(struct(col("expiration"), col("strike"))).as("pairs"))
+      .join(broadcast(marks), "act_symbol")
+    // closest listed expirations (:51-58), each with its own strikes —
+    // filtered once per expiration — then the closest strikes at each
+    // (:60-66)
+    val picked = transform(
+      NearestSelect.nearestIn(col("exps"), targetExps,
+        (e, t) => abs(datediff(e, t))),
+      e => struct(e.as("e"), transform(
+        filter(col("pairs"), p => p("expiration") === e), _("strike")).as("ks")))
+    val winners = listed
+      .select(col("act_symbol").as("__s"), explode(transform(picked,
+        x => struct(x("e").as("e"), NearestSelect.nearestIn(x("ks"),
+          targetStrikes, (k, t) => abs(k - t)).as("ks")))).as("x"))
+      .select(col("__s"), col("x.e").as("__e"), explode(col("x.ks")).as("__k"))
+    // ALL chain rows (both sides) at a picked strike (:147-152)
+    chain.join(broadcast(winners), col("act_symbol") === col("__s") &&
+      col("expiration") === col("__e") && col("strike") === col("__k"),
+      "left_semi")
   }
 
   /** Full day pipeline: JSON folder → selected, PK-deduped option_chain
-    * rows, ordered like the export (Q3 sort, dump-dat.rkt:66-76). */
+    * rows. The rows come in no particular order: callers that need one
+    * sort where they consume (the export order is act_symbol,
+    * expiration, strike, call_put — dump-dat.rkt:66-76). */
   def loadDay(spark: SparkSession, dayDir: String, prices: DataFrame,
       folderDate: java.sql.Date, allOptions: Boolean = false): DataFrame = {
     val chain = ChainJson.toOptionChain(
@@ -85,6 +101,5 @@ object ChainPipeline {
     // would nest and kick the sort out of codegen.
     Upsert.keepFirst(selected, Schemas.optionChainPk,
         Seq(col("bid").isNull, col("bid")))
-      .orderBy("act_symbol", "expiration", "strike", "call_put")
   }
 }

@@ -27,7 +27,10 @@ object WeekliesCsv {
 
   def readFile(spark: SparkSession, path: String, fileDate: java.sql.Date)
       : DataFrame = {
-    val raw = spark.read.option("header", "false").csv(path)
+    // three positional columns by schema, not inferred from line 1: short
+    // rows read as nulls (and drop below), long rows lose the extra fields
+    val raw = spark.read.schema("_c0 STRING, _c1 STRING, _c2 STRING")
+      .option("header", "false").csv(path)
     raw.select(
         Cleansing.remapSymbol(trim(col("_c0"))).as("act_symbol"),
         expr("try_to_date(trim(_c2))").as("effective_date"),

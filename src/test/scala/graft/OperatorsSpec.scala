@@ -46,14 +46,33 @@ class OperatorsSpec extends SparkSpec {
     assert(r.map(_.getLong(0)) == Seq(1L))
   }
 
-  test("nearestValueAll keeps every row at the winning value") {
-    val cand = Seq(("g", 8.0, "call"), ("g", 8.0, "put"), ("g", 30.0, "x"))
-      .toDF("grp", "x", "side")
-    val targets = Seq(10.0).toDF("target")
-    val got = NearestSelect.nearestValueAll(cand, Seq("grp"), targets,
-      abs(col("x") - col("target")), col("x"))
-    assert(rows(got.select("side")).map(_.getString(0)).sorted ==
-      Seq("call", "put"))
+  test("nearestIn: per-row array pick, ties to the smaller, nulls never win") {
+    val df = Seq(
+      (Seq[Option[Double]](Some(8.0), Some(12.0), Some(30.0), None), 10.0),
+      (Seq[Option[Double]](None), 10.0),
+      (Seq[Option[Double]](Some(29.0), Some(31.0), Some(50.0)), 30.0))
+      .toDF("cands", "t")
+    val got = rows(df.select(NearestSelect.nearestIn(col("cands"),
+        array(col("t"), col("t") + 22), (c, t) => abs(c - t))))
+      .map(_.getSeq[Double](0))
+    // 8 and 12 tie for 10 → 8; 30 for 32; the null candidate loses; the
+    // all-null row picks nothing
+    assert(got == Seq(Seq(8.0, 30.0), Seq(), Seq(29.0, 50.0)), got)
+  }
+
+  test("near-the-money pick keeps both sides at the winning strike") {
+    val chain = Seq(("g", "2024-01-29", 8.0, "Call"), ("g", "2024-01-29", 8.0, "Put"),
+      ("g", "2024-01-29", 30.0, "Call"))
+      .toDF("act_symbol", "e", "k", "call_put")
+      .select($"act_symbol", to_date($"e").as("expiration"),
+        $"k".cast(graft.model.Schemas.Dec).as("strike"), $"call_put")
+    val marks = Seq(("g", 10.0)).toDF("act_symbol", "m")
+      .select($"act_symbol", $"m".cast(graft.model.Schemas.Dec).as("mark"))
+    val got = graft.plans.ChainPipeline.selectNearTheMoney(chain, marks,
+      d("2024-01-15"))
+    assert(got.columns.toSeq == chain.columns.toSeq)
+    assert(rows(got.select("call_put")).map(_.getString(0)).sorted ==
+      Seq("Call", "Put"))
   }
 
   test("keepFirst/lastWins: precedence and idempotence") {

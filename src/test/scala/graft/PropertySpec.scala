@@ -144,16 +144,28 @@ class PropertySpec extends SparkSpec {
       if s == "TIE" || r2.nextInt(4) > 0
       side <- Seq("Call", "Put") if side == "Call" || r2.nextInt(3) > 0
     } yield (s, day.plusDays(e.toLong), k, side)
+    // nulls are no candidates: NULLEXP's null-expiration row and NULLK's
+    // null-strike row must not hide their symbol's real picks, and
+    // NULLCLOSE (an as-of close that is null) selects nothing
+    val nullSyms = Seq(("NULLEXP", Option(BigDecimal(100)), Seq(14), Seq(BigDecimal(100))),
+      ("NULLK", Some(BigDecimal(100)), Seq(14), Seq(BigDecimal(100))),
+      ("NULLCLOSE", None, Seq(14), Seq(BigDecimal(100))))
+    val nullChain = nullSyms.flatMap { case (s, _, exps, ks) =>
+      for (e <- exps; k <- ks; side <- Seq("Call", "Put"))
+        yield (s, day.plusDays(e.toLong), k, side)
+    } ++ Seq(("NULLEXP", null, BigDecimal(100), "Put"),
+      ("NULLK", day.plusDays(14), null, "Call"))
+    val allChain = chain ++ nullChain
 
-    val want = syms.flatMap { case (s, mark, _, _) =>
-      val mine = chain.filter(_._1 == s)
-      val listed = mine.map(_._2).distinct
+    val want = (syms ++ nullSyms).flatMap { case (s, mark, _, _) =>
+      val mine = allChain.filter(_._1 == s)
+      val listed = mine.map(_._2).filter(_ != null).distinct
       val exps = Seq(2, 4, 6, 8).map(w => day.plusDays(7L * w)).map { t =>
         listed.minBy(e => (math.abs(e.toEpochDay - t.toEpochDay), e.toEpochDay))
       }.distinct
       val picks = for {
         m <- mark.toSeq; e <- exps
-        ks = mine.filter(_._2 == e).map(_._3).distinct
+        ks = mine.filter(_._2 == e).map(_._3).filter(_ != null).distinct
         k <- graft.operators.NearestSelect.strikeMultipliers
           .map(mu => ks.minBy(k => ((k - m * mu).abs, k))).distinct
       } yield (e, k)
@@ -162,11 +174,13 @@ class PropertySpec extends SparkSpec {
 
     def show(s: String, e: java.time.LocalDate, k: BigDecimal, side: String) =
       s"$s|$e|${k.setScale(4)}|$side"
-    val chainDf = chain
-      .map { case (s, e, k, side) => (s, java.sql.Date.valueOf(e), k, side) }
+    val chainDf = allChain
+      .map { case (s, e, k, side) =>
+        (s, Option(e).map(java.sql.Date.valueOf).orNull, k, side) }
       .toDF("act_symbol", "expiration", "strike", "call_put")
       .withColumn("strike", $"strike".cast(graft.model.Schemas.Dec))
-    val marks = syms.flatMap { case (s, m, _, _) => m.map(s -> _) }
+    val marks = ((syms ++ nullSyms).flatMap { case (s, m, _, _) => m.map(s -> _) } :+
+        ("NULLCLOSE" -> null))
       .toDF("act_symbol", "mark")
       .withColumn("mark", $"mark".cast(graft.model.Schemas.Dec))
     val got = rows(graft.plans.ChainPipeline.selectNearTheMoney(chainDf, marks,
@@ -177,6 +191,8 @@ class PropertySpec extends SparkSpec {
     val tie = got.filter(_.startsWith("TIE|"))
     assert(tie.nonEmpty && tie.forall(_.startsWith(s"TIE|${day.plusDays(53)}|")) &&
       !tie.exists(_.contains("|131.0000|")), tie)
+    assert(Seq("NULLEXP", "NULLK").forall(s => got.count(_.startsWith(s + "|")) == 2) &&
+      !got.exists(_.startsWith("NULLCLOSE|")), got.filter(_.startsWith("NULL")))
   }
 
   test("property: as-of join equals a brute force, random keys with ties") {

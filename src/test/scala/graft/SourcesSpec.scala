@@ -56,9 +56,34 @@ class SourcesSpec extends SparkSpec {
     // PK-dedup: no duplicate PKs even though multiple targets select the
     // same (expiration, strike)
     assert(got.distinct.length == got.length)
-    // idempotence: re-running the pipeline yields identical output
+    // idempotence: re-running the pipeline yields identical output (loadDay
+    // promises no order, so compare PK-ordered rows)
     val again = ChainPipeline.loadDay(spark, chainDir, prices, day)
-    assert(rows(again).toString == rows(out).toString)
+    val pk = graft.model.Schemas.optionChainPk.map(col)
+    assert(rows(again.orderBy(pk: _*)).toString == rows(out.orderBy(pk: _*)).toString)
+  }
+
+  test("chain pipeline: loadDay plans 3 shuffles, 2 windows, no range sort") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    val prices = Seq(("AAA", "2024-01-12", 101.0), ("AAA", "2024-01-20", 150.0),
+      ("BBB", "2024-01-10", 6.0))
+      .toDF("act_symbol", "ds", "close").withColumn("date", to_date($"ds"))
+    val out = ChainPipeline.loadDay(spark, chainDir, prices, day)
+    assert(out.count() == 12)
+    out.collect() // the final AQE plan is the one that ran
+    val plan = out.queryExecution.executedPlan
+    val h = new AdaptiveSparkPlanHelper {}
+    val shuffles = h.collect(plan) { case e: ShuffleExchangeExec => e }
+    val windows = h.collect(plan) { case w: WindowExec => w }
+    // chain by symbol, prices by symbol, PK dedup
+    assert(shuffles.size <= 3, plan.toString)
+    assert(!shuffles.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+      plan.toString)
+    // as-of mark and PK dedup
+    assert(windows.size == 2, plan.toString)
   }
 
   test("chain html: positional call/put projection + OCC onmouseover decode") {
@@ -126,5 +151,19 @@ class SourcesSpec extends SparkSpec {
     assert(aapl.getAs[java.sql.Date]("effective_date") == d("2024-01-13"))
     assert(aapl.getAs[java.sql.Date]("last_seen") == day)
     assert(roster.count() == 4) // AAPL, BRK.B, RDS.A, OLD (XYZ row dropped)
+  }
+
+  test("weeklies csv: a one-field title line reads as a dropped short row") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_weeklies")
+    val f = dir.resolve("weeklyoptions.2024-01-15.csv")
+    java.nio.file.Files.write(f, ("List of Available Weeklys\n" +
+      "Symbol,Name,Date\nAAPL , Apple Inc , 2024-01-12\nMSFT , Microsoft\n" +
+      "BRKB , Berkshire B , 2024-01-12 , extra\n").getBytes("UTF-8"))
+    val got = rows(WeekliesCsv.readFile(spark, f.toString, day)
+        .orderBy("act_symbol"))
+      .map(r => (r.getString(0), r.getDate(1).toString))
+    // the title, the header and the short MSFT row drop; the extra field
+    // is ignored
+    assert(got == Seq(("AAPL", "2024-01-12"), ("BRK.B", "2024-01-12")), got)
   }
 }
