@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.Upsert
@@ -23,6 +24,9 @@ import graft.operators.Upsert
 object Stats {
 
   private val D = DecimalType(18, 4)
+  // exact integer sums; quantized double terms that sum exactly
+  private val N = DecimalType(38, 0)
+  private val L = DecimalType(28, 12)
 
   /** Per-group simple linear regression y ~ x and Pearson correlation:
     * (keys..., n, slope, intercept, r). slope/r null when x (or, for
@@ -544,184 +548,105 @@ object Stats {
           disc.cast("double")).as("chi2_cc"))
   }
 
-  /** Exact ROC-AUC of a SCORE against a binary label, via the
-    * Mann–Whitney U identity AUC = P(s⁺ > s⁻) + ½P(s⁺ = s⁻) — the
-    * one-number read on "does the cheap score actually order
-    * documents by quality" before a classifier threshold ships into
-    * a curation gate. Computed entirely on the per-score COUNT GRID
-    * (the [[mannWhitneyU]] discrete-value contract — quantize a
-    * continuous score first): with negBelow(v) = Σ_{u<v} neg_u, the
-    * doubled numerator 2·Σ_v pos_v·(2·negBelow + neg_v) and the
-    * denominator 2·n⁺·n⁻ are exact DECIMAL(38,0) integers; ONE double
-    * division at the boundary. AUC is NULL when either class is
-    * empty (nothing to rank against). The discrete-score contract is
-    * ENFORCED loudly via `maxGridValues` (a measured count off the
-    * checkpointed score grid, the quantileNormalize discipline): the
-    * cumulative window is GLOBAL and unpartitioned, so a raw
-    * unquantized double score would silently plan a row-cardinality
-    * single-task sort — quantize first. Scale shape: one (score)
-    * combiner agg, one grid-bounded cumulative window, one-row out:
-    * (n_pos, n_neg, auc). */
-  def rocAuc(units: DataFrame, score: Column, label: Column,
-      maxGridValues: Long = 10000000L): DataFrame =
-    rocAucFromCounts(units.select(score.as("v"), label.as("y"))
-      .groupBy("v", "y").agg(count(lit(1)).as("c")), maxGridValues)
+  // ---- Classifier evaluation. Every metric below is ONE private kernel
+  // over the per-(keys…, v) positive/negative count grid — a mergeable
+  // summary, so the pooled form (keys = ∅), the per-group form
+  // (keys = g) and the bootstrap replicate (keys = __b) all run the same
+  // arithmetic on the same grid shape. The public forms only build the
+  // grid, guard it, and name the key column.
 
-  /** [[rocAuc]] over PRE-AGGREGATED (v, y, c) counts — the form a
-    * streaming additive ledger folds to (the ksDriftFromCounts
-    * discipline), so classifier evaluation has streaming views
-    * bit-equal to the batch operators over everything ingested
-    * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). Same loud
-    * `maxGridValues` guard as the units form — a streaming ledger
-    * keyed by an unquantized score would otherwise grow the global
-    * window without bound. */
-  def rocAucFromCounts(counts: DataFrame,
-      maxGridValues: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val N = DecimalType(38, 0)
-    val grid = counts.select(col("v").as("__v"), col("y").as("__y"),
-        col("c").as("__c"))
-      .groupBy("__v").agg(
-        sum(when(col("__y"), col("__c")).otherwise(0L)).as("__pos"),
-        sum(when(!col("__y"), col("__c")).otherwise(0L)).as("__neg"))
-    // measured fail-fast guard on the LAZY grid (r15): the count costs
-    // one extra aggregation pass at consumption time, but nothing is
-    // checkpointed — the former localCheckpoint(true) guard pinned one
-    // MEMORY_AND_DISK RDD per call for the application lifetime (a
-    // leak for monitors that rebuild the streaming views per refresh).
-    // The guard still runs BEFORE the global window is planned, which
-    // is its purpose: failing ahead of a row-cardinality single-task
-    // sort. NOTE: this makes the constructor eager (it runs one Spark
-    // job); streaming-view builders inherit that eagerness.
-    val nGrid = grid.count()
-    require(nGrid <= maxGridValues,
-      s"rocAuc: $nGrid distinct score values exceeds " +
-        s"maxGridValues=$maxGridValues — the score must be discrete " +
-        "(quantize a raw double first; the cumulative window is " +
-        "global and grid-sized)")
-    val wv = Window.orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // grid-bounded window (the discrete-value contract, enforced above)
-    grid
-      .withColumn("__nb", coalesce(sum(col("__neg")).over(wv), lit(0L)))
-      .agg(sum(col("__pos")).as("n_pos"), sum(col("__neg")).as("n_neg"),
-        sum(col("__pos").cast(N) *
-          (lit(2L) * col("__nb") + col("__neg")).cast(N)).as("__num2"))
-      .select(col("n_pos"), col("n_neg"),
-        when(col("n_pos") > 0 && col("n_neg") > 0,
-          col("__num2").cast("double") /
-            (lit(2.0) * col("n_pos").cast("double") *
-              col("n_neg").cast("double"))).as("auc"))
+  /** units → the (g?, v, y, c) count grid the `*FromCounts` forms
+    * read: one combiner agg. */
+  private def vyCounts(units: DataFrame, group: Option[Column],
+      score: Column, label: Column): DataFrame = {
+    val keys = group.map(_ => "g").toSeq ++ Seq("v", "y")
+    units.select(group.map(_.as("g")).toSeq ++
+        Seq(score.as("v"), label.as("y")): _*)
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
   }
 
-  /** [[rocAuc]] PER GROUP — "does the cheap score order documents by
-    * quality IN EVERY SOURCE/LANGUAGE, or only on average": a score
-    * can carry a healthy pooled AUC while being anti-predictive
-    * inside a minority slice (the Simpson-style failure x213 audits
-    * for rates, here for rankings). Same exact U-identity arithmetic
-    * on the per-(group, score) count grid; the cumulative window is
-    * PARTITIONED by group (parallel across groups, grid-bounded
-    * within). The discrete-score contract is enforced via
-    * `maxGridValues` on the POOLED (group, score) cell count — a
-    * bound on every per-group window at the price of one measured
-    * count. Output: (group, n_pos, n_neg, auc) — auc NULL where a
-    * group has an empty class. */
-  def rocAucByGroup(units: DataFrame, group: Column, score: Column,
-      label: Column, maxGridValues: Long = 10000000L): DataFrame =
-    rocAucByGroupFromCounts(units
-      .select(group.as("g"), score.as("v"), label.as("y"))
-      .groupBy("g", "v", "y").agg(count(lit(1)).as("c")), maxGridValues)
-
-  /** [[rocAucByGroup]] over PRE-AGGREGATED (g, v, y, c) counts — the
-    * streaming-ledger form. Same pooled-cell `maxGridValues` guard as
-    * the units form. */
-  def rocAucByGroupFromCounts(counts: DataFrame,
-      maxGridValues: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val N = DecimalType(38, 0)
-    val grid = counts.select(col("g"), col("v").as("__v"),
-        col("y").as("__y"), col("c").as("__c"))
-      .groupBy("g", "__v").agg(
+  /** (keys…, v, y, c) counts → the per-(keys…, __v) grid of positive
+    * and negative counts (__pos, __neg) every kernel folds. */
+  private def posNegGrid(counts: DataFrame, keys: Seq[String])
+      : DataFrame =
+    counts.select(keys.map(col) ++ Seq(col("v").as("__v"),
+        col("y").as("__y"), col("c").as("__c")): _*)
+      .groupBy((keys :+ "__v").map(col): _*).agg(
         sum(when(col("__y"), col("__c")).otherwise(0L)).as("__pos"),
         sum(when(!col("__y"), col("__c")).otherwise(0L)).as("__neg"))
-    // lazy-grid measured guard — the rocAucFromCounts r15 discipline
-    // (one extra agg pass, no checkpoint pinned)
-    val nCells = grid.count()
-    require(nCells <= maxGridValues,
-      s"rocAucByGroup: $nCells pooled (group, score) cells exceeds " +
-        s"maxGridValues=$maxGridValues — the score must be discrete " +
-        "(quantize a raw double first; each group's window is " +
-        "grid-sized)")
-    val wv = Window.partitionBy("g").orderBy("__v")
+
+  /** The measured discrete-grid guard (r15): one count of the LAZY
+    * grid, then a loud require naming the public function `fn`. The
+    * count costs one extra aggregation pass at construction time (the
+    * caller becomes eager — one Spark job; streaming-view builders
+    * inherit that), but nothing is checkpointed — the former
+    * localCheckpoint(true) guard pinned one RDD per call for the
+    * application lifetime. It runs BEFORE the grid-sized windows are
+    * planned, failing ahead of a row-cardinality single-task sort.
+    * Returns the grid. */
+  private def guardGrid(grid: DataFrame, limit: Long, fn: String,
+      what: String, limitName: String = "maxGridValues",
+      hint: String = "the score must be discrete (quantize a raw " +
+        "double first)"): DataFrame = {
+    val n = grid.count()
+    require(n <= limit, s"$fn: $n $what exceeds $limitName=$limit — $hint")
+    grid
+  }
+
+  /** [[posNegGrid]] behind [[guardGrid]]: the bound is on distinct
+    * score values pooled, on pooled (group, score) cells per group —
+    * a bound on every per-group window at the price of one count. */
+  private def checkedGrid(counts: DataFrame, keys: Seq[String],
+      fn: String, maxGridValues: Long): DataFrame =
+    guardGrid(posNegGrid(counts, keys), maxGridValues, fn,
+      if (keys.isEmpty) "distinct score values"
+      else "pooled (group, score) cells")
+
+  /** The per-key window over the grid's score order. */
+  private def scoreWindow(keys: Seq[String], v: Column) =
+    Window.partitionBy(keys.map(col): _*).orderBy(v)
+
+  /** ROC-AUC per key: with negBelow(v) = Σ_{u<v} neg_u (a grid-bounded
+    * cumulative window per key), the doubled numerator
+    * 2·Σ_v pos_v·(2·negBelow + neg_v) is an exact DECIMAL(38,0) sum;
+    * ONE double division by 2·n⁺·n⁻. Output (keys…, n_pos, n_neg,
+    * auc), auc NULL where a class is empty. */
+  private def aucKernel(grid: DataFrame, keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
+    val wv = scoreWindow(keys, col("__v"))
       .rowsBetween(Window.unboundedPreceding, -1)
     grid
       .withColumn("__nb", coalesce(sum(col("__neg")).over(wv), lit(0L)))
-      .groupBy("g")
+      .groupBy(k: _*)
       .agg(sum(col("__pos")).as("n_pos"), sum(col("__neg")).as("n_neg"),
         sum(col("__pos").cast(N) *
           (lit(2L) * col("__nb") + col("__neg")).cast(N)).as("__num2"))
-      .select(col("g").as("group"), col("n_pos"), col("n_neg"),
+      .select(k ++ Seq(col("n_pos"), col("n_neg"),
         when(col("n_pos") > 0 && col("n_neg") > 0,
           col("__num2").cast("double") /
             (lit(2.0) * col("n_pos").cast("double") *
-              col("n_neg").cast("double"))).as("auc"))
+              col("n_neg").cast("double"))).as("auc")): _*)
   }
 
-  /** Confusion-matrix THRESHOLD SWEEP — precision/recall/F1/FPR at
-    * every distinct score cut (predict positive iff score ≥ t) as ONE
-    * grid query, no driver loop (the x158 sweep discipline with a
-    * LABEL): the operating-point table a gate owner reads next to
-    * [[rocAuc]]'s single number before picking the cut. From the
-    * per-score count grid: tp/fp are suffix sums over the grid
-    * (cumulative from the top — a grid-bounded window), fn/tn the
-    * complements against the 1-row totals; every count exact, the
-    * four ratios one double division each (NULL-guarded: precision
-    * NULL when nothing is predicted positive, recall/FPR NULL when
-    * the class is empty). Same discrete-score contract as [[rocAuc]],
-    * enforced by the same measured `maxGridValues` guard (the suffix
-    * window is global and grid-sized).
-    * Output per threshold: (threshold, tp, fp, fn, tn, precision,
-    * recall, f1, fpr). */
-  def thresholdSweep(units: DataFrame, score: Column, label: Column,
-      maxGridValues: Long = 10000000L): DataFrame =
-    thresholdSweepFromCounts(units.select(score.as("v"), label.as("y"))
-      .groupBy("v", "y").agg(count(lit(1)).as("c")), maxGridValues)
-
-  /** [[thresholdSweep]] over PRE-AGGREGATED (v, y, c) counts — the
-    * streaming-ledger form
-    * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). Same loud
-    * `maxGridValues` guard as the units form. */
-  def thresholdSweepFromCounts(counts: DataFrame,
-      maxGridValues: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val grid = counts.select(col("v").as("threshold"), col("y").as("__y"),
-        col("c").as("__c"))
-      .groupBy("threshold").agg(
-        sum(when(col("__y"), col("__c")).otherwise(0L)).as("__pos"),
-        sum(when(!col("__y"), col("__c")).otherwise(0L)).as("__neg"))
-    // lazy-grid measured guard — the rocAucFromCounts r15 discipline
-    // (one extra agg pass, no checkpoint pinned)
-    val nGrid = grid.count()
-    require(nGrid <= maxGridValues,
-      s"thresholdSweep: $nGrid distinct score values exceeds " +
-        s"maxGridValues=$maxGridValues — the score must be discrete " +
-        "(quantize a raw double first; the suffix window is global " +
-        "and grid-sized)")
-    val wDesc = Window.orderBy(col("threshold").desc)
+  /** Threshold sweep per key: tp/fp are suffix sums from the top
+    * score, the class totals FULL-FRAME sums over the SAME window order
+    * (r15: one WindowExec computes both — no separate totals agg and
+    * join back); fn/tn the complements, each ratio one NULL-guarded
+    * double division. Output (keys…, threshold, tp, fp, fn, tn,
+    * precision, recall, f1, fpr). */
+  private def sweepKernel(grid: DataFrame, keys: Seq[String])
+      : DataFrame = {
+    val wDesc = scoreWindow(keys, col("__v").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
-    // r15: the class totals are FULL-FRAME sums over the SAME window
-    // order — one WindowExec computes suffix sums and totals in one
-    // pass, replacing the former separate 1-row agg + BroadcastExchange
-    // + CrossJoin (a third consumer of the grid). Exact-integer sums,
-    // identical values.
-    val wAll = Window.orderBy(col("threshold").desc)
+    val wAll = scoreWindow(keys, col("__v").desc)
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     grid
       .withColumn("tp", sum(col("__pos")).over(wDesc))
       .withColumn("fp", sum(col("__neg")).over(wDesc))
       .withColumn("__np", sum(col("__pos")).over(wAll))
       .withColumn("__nn", sum(col("__neg")).over(wAll))
-      .select(col("threshold"), col("tp"), col("fp"),
+      .select(keys.map(col) ++ Seq(col("__v").as("threshold"), col("tp"),
+        col("fp"),
         (col("__np") - col("tp")).as("fn"),
         (col("__nn") - col("fp")).as("tn"),
         when(col("tp") + col("fp") > 0, col("tp").cast("double") /
@@ -736,8 +661,184 @@ object Stats {
           .as("f1"),
         when(col("__nn") > 0,
           col("fp").cast("double") / col("__nn").cast("double"))
-          .as("fpr"))
+          .as("fpr")): _*)
   }
+
+  /** Step-interpolated average precision per key: each descending
+    * score block contributes pos_k·tp_k/(tp_k+fp_k) — one double chain
+    * quantized to DECIMAL(28,12) so the terms SUM exactly under any
+    * partitioning; AP = Σterms / n_pos. A block with no positives has
+    * ΔR = 0 — a zero term. Output (keys…, n_pos, n_neg, ap), ap NULL
+    * where there are no positives. */
+  private def apKernel(grid: DataFrame, keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
+    val wDesc = scoreWindow(keys, col("__v").desc)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    grid
+      .withColumn("__tp", sum(col("__pos")).over(wDesc))
+      .withColumn("__fp", sum(col("__neg")).over(wDesc))
+      .withColumn("__term",
+        when(col("__pos") > 0,
+          (col("__pos").cast("double") * col("__tp").cast("double") /
+            (col("__tp") + col("__fp")).cast("double")).cast(L))
+          .otherwise(lit(0).cast(L)))
+      .groupBy(k: _*)
+      .agg(sum(col("__pos")).as("n_pos"), sum(col("__neg")).as("n_neg"),
+        sum(col("__term")).as("__ts"))
+      .select(k ++ Seq(col("n_pos"), col("n_neg"),
+        when(col("n_pos") > 0,
+          col("__ts").cast("double") / col("n_pos").cast("double"))
+          .as("ap")): _*)
+  }
+
+  /** Reliability bins per key over (keys…, v, y, c) counts with v the
+    * ppm probability: bin = min(bins−1, p·bins div 1e6) in exact
+    * integer arithmetic (the Export trunc discipline: the subtraction
+    * makes the dividend an exact multiple, so the double division is
+    * exact — ppm·bins ≤ 1e9 is far inside 2^53). The [0, 1e6] range
+    * contract is loud: raise_error sits INSIDE the bin expression, so
+    * column pruning cannot drop the check, and a negative or >1e6
+    * value never bins silently. Output (keys…, bin, p_lo_ppm, n,
+    * mean_p, rate, gap). */
+  private def calibrationKernel(counts: DataFrame, keys: Seq[String],
+      bins: Int, fn: String): DataFrame = {
+    require(bins >= 2 && bins <= 1000, s"$fn: bins=$bins outside [2,1000]")
+    def floorDiv(a: Column, d: Long): Column =
+      ((a - pmod(a, lit(d))) / lit(d)).cast("long")
+    val k = keys.map(col)
+    val pb = col("__p") * lit(bins.toLong)
+    val binChecked = when(col("__p").between(0L, 1000000L),
+      least(lit(bins - 1L), floorDiv(pb, 1000000L)))
+      .otherwise(raise_error(concat(
+        lit(s"$fn: ppm probability out of [0, 1e6]: "),
+        col("__p").cast("string"))).cast("long"))
+    counts.select(k ++ Seq(col("v").cast("long").as("__p"),
+        col("y").as("__y"), col("c").as("__c")): _*)
+      .withColumn("bin", binChecked)
+      .groupBy(k :+ col("bin"): _*).agg(sum(col("__c")).as("n"),
+        sum(col("__p") * col("__c")).as("__sp"),
+        sum(when(col("__y"), col("__c")).otherwise(0L)).as("__ny"))
+      .select(k ++ Seq(col("bin"),
+        floorDiv(col("bin") * lit(1000000L), bins.toLong).as("p_lo_ppm"),
+        col("n"),
+        (col("__sp").cast("double") / col("n").cast("double") /
+          lit(1e6)).as("mean_p"),
+        (col("__ny").cast("double") / col("n").cast("double")).as("rate"),
+        (col("__ny").cast("double") / col("n").cast("double") -
+          col("__sp").cast("double") / col("n").cast("double") / lit(1e6))
+          .as("gap")): _*)
+  }
+
+  /** Brier score per `group` (pooled when None) straight off the units:
+    * Σ(p − y·10⁶)² in DECIMAL(38,0), ȳ terms from exact counts, two
+    * double divisions at the boundary; one combiner agg. Output
+    * (group?, n, brier, brier_ref, skill), skill NULL where the
+    * outcome is constant. */
+  private def brierKernel(units: DataFrame, group: Option[Column],
+      probPpm: Column, label: Column): DataFrame = {
+    val k = group.map(_ => col("group")).toSeq
+    val e = col("__p") - when(col("__y"), 1000000L).otherwise(0L)
+    val ybar = col("__ny").cast("double") / col("n").cast("double")
+    val brier = col("__se").cast("double") /
+      (col("n").cast("double") * lit(1e12))
+    units.select(group.map(_.as("group")).toSeq ++
+        Seq(probPpm.cast("long").as("__p"), label.as("__y")): _*)
+      .groupBy(k: _*).agg(count(lit(1)).as("n"),
+        sum(when(col("__y"), 1L).otherwise(0L)).as("__ny"),
+        sum(e.cast(N) * e.cast(N)).as("__se"))
+      .select(k ++ Seq(col("n"), brier.as("brier"),
+        (ybar * (lit(1.0) - ybar)).as("brier_ref"),
+        when(col("__ny") > 0 && col("__ny") < col("n"),
+          lit(1.0) - brier / (ybar * (lit(1.0) - ybar))).as("skill")): _*)
+  }
+
+  /** Exact ROC-AUC of a SCORE against a binary label, via the
+    * Mann–Whitney U identity AUC = P(s⁺ > s⁻) + ½P(s⁺ = s⁻) — the
+    * one-number read on "does the cheap score actually order
+    * documents by quality" before a classifier threshold ships into
+    * a curation gate. Computed entirely on the per-score COUNT GRID
+    * (the [[mannWhitneyU]] discrete-value contract — quantize a
+    * continuous score first): with negBelow(v) = Σ_{u<v} neg_u, the
+    * doubled numerator 2·Σ_v pos_v·(2·negBelow + neg_v) and the
+    * denominator 2·n⁺·n⁻ are exact DECIMAL(38,0) integers; ONE double
+    * division at the boundary. AUC is NULL when either class is
+    * empty (nothing to rank against). The discrete-score contract is
+    * ENFORCED loudly via `maxGridValues` (a measured count off the
+    * lazy score grid, [[guardGrid]]): the
+    * cumulative window is GLOBAL and unpartitioned, so a raw
+    * unquantized double score would silently plan a row-cardinality
+    * single-task sort — quantize first. Scale shape: one (score)
+    * combiner agg, one grid-bounded cumulative window, one-row out:
+    * (n_pos, n_neg, auc). */
+  def rocAuc(units: DataFrame, score: Column, label: Column,
+      maxGridValues: Long = 10000000L): DataFrame =
+    rocAucFromCounts(vyCounts(units, None, score, label), maxGridValues)
+
+  /** [[rocAuc]] over PRE-AGGREGATED (v, y, c) counts — the form a
+    * streaming additive ledger folds to (the ksDriftFromCounts
+    * discipline), so classifier evaluation has streaming views
+    * bit-equal to the batch operators over everything ingested
+    * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). Same loud
+    * `maxGridValues` guard as the units form — a streaming ledger
+    * keyed by an unquantized score would otherwise grow the global
+    * window without bound. */
+  def rocAucFromCounts(counts: DataFrame,
+      maxGridValues: Long = 10000000L): DataFrame =
+    aucKernel(checkedGrid(counts, Nil, "rocAuc", maxGridValues), Nil)
+
+  /** [[rocAuc]] PER GROUP — "does the cheap score order documents by
+    * quality IN EVERY SOURCE/LANGUAGE, or only on average": a score
+    * can carry a healthy pooled AUC while being anti-predictive
+    * inside a minority slice (the Simpson-style failure x213 audits
+    * for rates, here for rankings). Same exact U-identity kernel
+    * on the per-(group, score) count grid; the cumulative window is
+    * PARTITIONED by group (parallel across groups, grid-bounded
+    * within). The discrete-score contract is enforced via
+    * `maxGridValues` on the POOLED (group, score) cell count — a
+    * bound on every per-group window at the price of one measured
+    * count. Output: (group, n_pos, n_neg, auc) — auc NULL where a
+    * group has an empty class. */
+  def rocAucByGroup(units: DataFrame, group: Column, score: Column,
+      label: Column, maxGridValues: Long = 10000000L): DataFrame =
+    rocAucByGroupFromCounts(vyCounts(units, Some(group), score, label),
+      maxGridValues)
+
+  /** [[rocAucByGroup]] over PRE-AGGREGATED (g, v, y, c) counts — the
+    * streaming-ledger form. Same pooled-cell `maxGridValues` guard as
+    * the units form. */
+  def rocAucByGroupFromCounts(counts: DataFrame,
+      maxGridValues: Long = 10000000L): DataFrame =
+    aucKernel(checkedGrid(counts, Seq("g"), "rocAucByGroup",
+      maxGridValues), Seq("g")).withColumnRenamed("g", "group")
+
+  /** Confusion-matrix THRESHOLD SWEEP — precision/recall/F1/FPR at
+    * every distinct score cut (predict positive iff score ≥ t) as ONE
+    * grid query, no driver loop (the x158 sweep discipline with a
+    * LABEL): the operating-point table a gate owner reads next to
+    * [[rocAuc]]'s single number before picking the cut. From the
+    * per-score count grid: tp/fp are suffix sums over the grid
+    * (cumulative from the top — a grid-bounded window), fn/tn the
+    * complements against the class totals; every count exact, the
+    * four ratios one double division each (NULL-guarded: precision
+    * NULL when nothing is predicted positive, recall/FPR NULL when
+    * the class is empty). Same discrete-score contract as [[rocAuc]],
+    * enforced by the same measured `maxGridValues` guard (the suffix
+    * window is global and grid-sized).
+    * Output per threshold: (threshold, tp, fp, fn, tn, precision,
+    * recall, f1, fpr). */
+  def thresholdSweep(units: DataFrame, score: Column, label: Column,
+      maxGridValues: Long = 10000000L): DataFrame =
+    thresholdSweepFromCounts(vyCounts(units, None, score, label),
+      maxGridValues)
+
+  /** [[thresholdSweep]] over PRE-AGGREGATED (v, y, c) counts — the
+    * streaming-ledger form
+    * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). Same loud
+    * `maxGridValues` guard as the units form. */
+  def thresholdSweepFromCounts(counts: DataFrame,
+      maxGridValues: Long = 10000000L): DataFrame =
+    sweepKernel(checkedGrid(counts, Nil, "thresholdSweep", maxGridValues),
+      Nil)
 
   /** Exact AVERAGE PRECISION (step-interpolated PR-AUC, the TREC /
     * standard-IR convention: AP = Σ_k P(k)·ΔR(k) over the distinct
@@ -762,54 +863,24 @@ object Stats {
     * [[rocAuc]]. One row out: (n_pos, n_neg, ap). */
   def averagePrecision(units: DataFrame, score: Column, label: Column,
       maxGridValues: Long = 10000000L): DataFrame =
-    averagePrecisionFromCounts(units.select(score.as("v"), label.as("y"))
-      .groupBy("v", "y").agg(count(lit(1)).as("c")), maxGridValues)
+    averagePrecisionFromCounts(vyCounts(units, None, score, label),
+      maxGridValues)
 
   /** [[averagePrecision]] over PRE-AGGREGATED (v, y, c) counts — the
     * streaming-ledger form ([[graft.streaming.Streams.sumView]] of a
     * (v, y) ledger): the SAME (v, y) additive ledger that serves rocAuc /
     * thresholdSweep / calibration also folds to exact AP. */
   def averagePrecisionFromCounts(counts: DataFrame,
-      maxGridValues: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val L = DecimalType(28, 12)
-    val grid = counts.select(col("v").as("__v"), col("y").as("__y"),
-        col("c").as("__c"))
-      .groupBy("__v").agg(
-        sum(when(col("__y"), col("__c")).otherwise(0L)).as("__pos"),
-        sum(when(!col("__y"), col("__c")).otherwise(0L)).as("__neg"))
-    // lazy-grid measured guard — the rocAucFromCounts r15 discipline
-    val nGrid = grid.count()
-    require(nGrid <= maxGridValues,
-      s"averagePrecision: $nGrid distinct score values exceeds " +
-        s"maxGridValues=$maxGridValues — the score must be discrete " +
-        "(quantize a raw double first; the suffix window is global " +
-        "and grid-sized)")
-    val wDesc = Window.orderBy(col("__v").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    grid
-      .withColumn("__tp", sum(col("__pos")).over(wDesc))
-      .withColumn("__fp", sum(col("__neg")).over(wDesc))
-      // P(k) at a block with no positives gets ΔR = 0 — zero term
-      .withColumn("__term",
-        when(col("__pos") > 0,
-          (col("__pos").cast("double") * col("__tp").cast("double") /
-            (col("__tp") + col("__fp")).cast("double")).cast(L))
-          .otherwise(lit(0).cast(L)))
-      .agg(sum(col("__pos")).as("n_pos"), sum(col("__neg")).as("n_neg"),
-        sum(col("__term")).as("__ts"))
-      .select(col("n_pos"), col("n_neg"),
-        when(col("n_pos") > 0,
-          col("__ts").cast("double") / col("n_pos").cast("double"))
-          .as("ap"))
-  }
+      maxGridValues: Long = 10000000L): DataFrame =
+    apKernel(checkedGrid(counts, Nil, "averagePrecision", maxGridValues),
+      Nil)
 
   /** [[averagePrecision]] PER GROUP — the per-source ranking audit in
     * PRECISION-RECALL space (x244's Simpson lesson, third dial: AUC
     * ranks, calibration reads probabilities, AP weights the kept
     * positives — a proxy can hold a healthy pooled AP while retrieving
     * garbage inside one source whose prevalence differs). Same exact
-    * per-term arithmetic as the pooled form on the per-(group, score)
+    * per-term kernel as the pooled form on the per-(group, score)
     * grid; suffix windows PARTITIONED by group, terms
     * DECIMAL(28,12)-quantized then summed per group. Guard on the
     * pooled (group, score) cell count. Output: (group, n_pos, n_neg,
@@ -817,46 +888,16 @@ object Stats {
   def averagePrecisionByGroup(units: DataFrame, group: Column,
       score: Column, label: Column, maxGridValues: Long = 10000000L)
       : DataFrame =
-    averagePrecisionByGroupFromCounts(units
-      .select(group.as("g"), score.as("v"), label.as("y"))
-      .groupBy("g", "v", "y").agg(count(lit(1)).as("c")), maxGridValues)
+    averagePrecisionByGroupFromCounts(
+      vyCounts(units, Some(group), score, label), maxGridValues)
 
   /** [[averagePrecisionByGroup]] over PRE-AGGREGATED (g, v, y, c)
     * counts — the (g, v, y) grouped-ledger form
     * ([[graft.streaming.Streams.sumView]] of a (g, v, y) ledger). */
   def averagePrecisionByGroupFromCounts(counts: DataFrame,
-      maxGridValues: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val L = DecimalType(28, 12)
-    val grid = counts.select(col("g"), col("v").as("__v"),
-        col("y").as("__y"), col("c").as("__c"))
-      .groupBy("g", "__v").agg(
-        sum(when(col("__y"), col("__c")).otherwise(0L)).as("__pos"),
-        sum(when(!col("__y"), col("__c")).otherwise(0L)).as("__neg"))
-    // lazy-grid measured guard — the rocAucFromCounts r15 discipline
-    val nCells = grid.count()
-    require(nCells <= maxGridValues,
-      s"averagePrecisionByGroup: $nCells pooled (group, score) cells " +
-        s"exceeds maxGridValues=$maxGridValues — the score must be " +
-        "discrete (quantize a raw double first)")
-    val wDesc = Window.partitionBy("g").orderBy(col("__v").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    grid
-      .withColumn("__tp", sum(col("__pos")).over(wDesc))
-      .withColumn("__fp", sum(col("__neg")).over(wDesc))
-      .withColumn("__term",
-        when(col("__pos") > 0,
-          (col("__pos").cast("double") * col("__tp").cast("double") /
-            (col("__tp") + col("__fp")).cast("double")).cast(L))
-          .otherwise(lit(0).cast(L)))
-      .groupBy("g")
-      .agg(sum(col("__pos")).as("n_pos"), sum(col("__neg")).as("n_neg"),
-        sum(col("__term")).as("__ts"))
-      .select(col("g").as("group"), col("n_pos"), col("n_neg"),
-        when(col("n_pos") > 0,
-          col("__ts").cast("double") / col("n_pos").cast("double"))
-          .as("ap"))
-  }
+      maxGridValues: Long = 10000000L): DataFrame =
+    apKernel(checkedGrid(counts, Seq("g"), "averagePrecisionByGroup",
+      maxGridValues), Seq("g")).withColumnRenamed("g", "group")
 
   /** MATTHEWS CORRELATION COEFFICIENT at every distinct score cut
     * (Matthews 1975) — the single balanced confusion-matrix number per
@@ -874,15 +915,13 @@ object Stats {
     * (threshold, tp, fp, fn, tn, mcc). */
   def mccSweep(units: DataFrame, score: Column, label: Column,
       maxGridValues: Long = 10000000L): DataFrame =
-    mccSweepFromCounts(units.select(score.as("v"), label.as("y"))
-      .groupBy("v", "y").agg(count(lit(1)).as("c")), maxGridValues)
+    mccSweepFromCounts(vyCounts(units, None, score, label), maxGridValues)
 
   /** [[mccSweep]] over PRE-AGGREGATED (v, y, c) counts — the SAME
     * (v, y) ledger as the rest of the classifier-eval family
     * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). */
   def mccSweepFromCounts(counts: DataFrame,
       maxGridValues: Long = 10000000L): DataFrame = {
-    val N = DecimalType(38, 0)
     val d = (c: Column) => c.cast("double")
     val sweep = thresholdSweepFromCounts(counts, maxGridValues)
     val pp = col("tp") + col("fp"); val ap = col("tp") + col("fn")
@@ -910,15 +949,13 @@ object Stats {
     * gain, lift). */
   def gainsCurve(units: DataFrame, score: Column, label: Column,
       maxGridValues: Long = 10000000L): DataFrame =
-    gainsCurveFromCounts(units.select(score.as("v"), label.as("y"))
-      .groupBy("v", "y").agg(count(lit(1)).as("c")), maxGridValues)
+    gainsCurveFromCounts(vyCounts(units, None, score, label), maxGridValues)
 
   /** [[gainsCurve]] over PRE-AGGREGATED (v, y, c) counts — the SAME
     * (v, y) ledger as the rest of the family
     * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). */
   def gainsCurveFromCounts(counts: DataFrame,
       maxGridValues: Long = 10000000L): DataFrame = {
-    val N = DecimalType(38, 0)
     val sweep = thresholdSweepFromCounts(counts, maxGridValues)
     val n = col("tp") + col("fp") + col("fn") + col("tn")
     val np = col("tp") + col("fn")
@@ -1040,6 +1077,39 @@ object Stats {
           col(valueCol))).as("hi95"))
   }
 
+  /** The shared scaffold of [[aucBootstrapCI]] and [[apBootstrapCI]]:
+    * the checkpointed (unit, score, label) base feeds the point form
+    * `point` (over the base's own (v, y, c) counts) AND one ×B explode
+    * whose Poisson(1) weights fold ADDITIVELY into B copies of the
+    * (b, v) pos/neg grid (the resample never materializes; cells whose
+    * weights are all zero drop). The metric's `kernel` keyed by __b
+    * yields one `stat` per replicate, NULL exactly where the replicate
+    * is degenerate (an empty class) — those drop, and
+    * [[ceilRankBounds]] reports the survivors. Output one row:
+    * (n_units, n_pos, n_neg, stat, lo95, hi95, n_replicates). */
+  private def bootstrapCI(fn: String, units: DataFrame, unitId: Column,
+      score: Column, label: Column, b: Int, stat: String)(
+      point: DataFrame => DataFrame,
+      kernel: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+    require(b >= 40 && b <= 10000, s"$fn: b=$b outside [40,10000]")
+    val base = units.select(unitId.as("__u"), score.as("__v"),
+        label.as("__y"))
+      .localCheckpoint(true) // feeds the point estimate AND ×B explode
+    val pointRow = point(vyCounts(base, None, col("__v"), col("__y")))
+    val nUnits = broadcast(base.agg(count(lit(1)).as("n_units")))
+    val grid = posNegGrid(base
+        .withColumn("__b", explode(sequence(lit(0L), lit(b - 1L))))
+        .select(col("__b"), col("__v").as("v"), col("__y").as("y"),
+          poissonWeight(col("__u"), col("__b")).as("c")), Seq("__b"))
+      .where(col("__pos") > 0 || col("__neg") > 0)
+    val reps = kernel(grid, Seq("__b")).where(col(stat).isNotNull)
+      .select(col("__b"), col(stat).as("__a"))
+    pointRow.crossJoin(nUnits)
+      .crossJoin(broadcast(ceilRankBounds(reps, "__a", "__b")))
+      .select(col("n_units"), col("n_pos"), col("n_neg"), col(stat),
+        col("lo95"), col("hi95"), col("n_replicates"))
+  }
+
   /** BOOTSTRAP confidence interval for ROC-AUC — the error bars the
     * x240 point estimate deserves before a gate ships on it ("is
     * 0.71 vs 0.69 a real ranking difference or noise"), RNG-FREE via
@@ -1061,44 +1131,9 @@ object Stats {
     * n_neg, auc, lo95, hi95, n_replicates). */
   def aucBootstrapCI(units: DataFrame, unitId: Column, score: Column,
       label: Column, b: Int = 200, maxGridValues: Long = 10000000L)
-      : DataFrame = {
-    require(b >= 40 && b <= 10000, s"aucBootstrapCI: b=$b outside " +
-      "[40,10000]")
-    import org.apache.spark.sql.expressions.Window
-    val N = DecimalType(38, 0)
-    val base = units.select(unitId.as("__u"), score.as("__v"),
-        label.as("__y"))
-      .localCheckpoint(true) // feeds the point estimate AND ×B explode
-    val point = rocAucFromCounts(base.groupBy("__v", "__y")
-      .agg(count(lit(1)).as("c"))
-      .select(col("__v").as("v"), col("__y").as("y"), col("c")),
-      maxGridValues)
-    val nUnits = broadcast(base.agg(count(lit(1)).as("n_units")))
-    val grid = base
-      .withColumn("__b", explode(sequence(lit(0L), lit(b - 1L))))
-      .withColumn("__w", poissonWeight(col("__u"), col("__b")))
-      .groupBy("__b", "__v").agg(
-        sum(when(col("__y"), col("__w")).otherwise(0L)).as("__pos"),
-        sum(when(!col("__y"), col("__w")).otherwise(0L)).as("__neg"))
-      .where(col("__pos") > 0 || col("__neg") > 0)
-    val wv = Window.partitionBy("__b").orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val aucs = grid
-      .withColumn("__nb", coalesce(sum(col("__neg")).over(wv), lit(0L)))
-      .groupBy("__b")
-      .agg(sum(col("__pos")).as("__np"), sum(col("__neg")).as("__nn"),
-        sum(col("__pos").cast(N) *
-          (lit(2L) * col("__nb") + col("__neg")).cast(N)).as("__num2"))
-      .where(col("__np") > 0 && col("__nn") > 0)
-      .select(col("__b"),
-        (col("__num2").cast("double") /
-          (lit(2.0) * col("__np").cast("double") *
-            col("__nn").cast("double"))).as("__a"))
-    point.crossJoin(nUnits)
-      .crossJoin(broadcast(ceilRankBounds(aucs, "__a", "__b")))
-      .select(col("n_units"), col("n_pos"), col("n_neg"), col("auc"),
-        col("lo95"), col("hi95"), col("n_replicates"))
-  }
+      : DataFrame =
+    bootstrapCI("aucBootstrapCI", units, unitId, score, label, b, "auc")(
+      rocAucFromCounts(_, maxGridValues), aucKernel)
 
   /** DeLONG paired AUC comparison (DeLong, DeLong & Clarke-Pearson
     * 1988) — "does score A rank the SAME units better than score B,
@@ -1129,8 +1164,6 @@ object Stats {
     * Output one row: (n_pos, n_neg, auc_a, auc_b, z). */
   def deLongTest(units: DataFrame, scoreA: Column, scoreB: Column,
       label: Column, maxGridValues: Long = 10000000L): DataFrame = {
-    val N = DecimalType(38, 0)
-    import org.apache.spark.sql.expressions.Window
     // NULL check lives INSIDE the used expression (pruning-proof)
     def nn(c: Column, name: String): Column =
       when(c.isNotNull, c).otherwise(raise_error(lit(
@@ -1144,15 +1177,12 @@ object Stats {
     // 2·negBelow(v) + negAt(v); for a negative at v, the mirror
     // 2·posAbove(v) + posAt(v) (placements against the other class)
     def placements(score: String): DataFrame = {
-      val grid = base.groupBy(col(score).as("__v")).agg(
-        sum(when(col("__y"), 1L).otherwise(0L)).as("__pos"),
-        sum(when(!col("__y"), 1L).otherwise(0L)).as("__neg"))
-      // lazy-grid measured guard — the rocAucFromCounts r15 discipline
-      // (grid recomputes from the checkpointed base, never the corpus)
-      val nGrid = grid.count()
-      require(nGrid <= maxGridValues,
-        s"deLongTest: $nGrid distinct values of $score exceeds " +
-          s"maxGridValues=$maxGridValues — quantize the score first")
+      // the grid recomputes from the checkpointed base, never the corpus
+      val grid = guardGrid(base.groupBy(col(score).as("__v")).agg(
+          sum(when(col("__y"), 1L).otherwise(0L)).as("__pos"),
+          sum(when(!col("__y"), 1L).otherwise(0L)).as("__neg")),
+        maxGridValues, "deLongTest", s"distinct values of $score",
+        hint = "quantize the score first")
       val wAsc = Window.orderBy("__v")
         .rowsBetween(Window.unboundedPreceding, -1)
       val wDesc = Window.orderBy(col("__v").desc)
@@ -1249,47 +1279,9 @@ object Stats {
     * row: (n_units, n_pos, n_neg, ap, lo95, hi95, n_replicates). */
   def apBootstrapCI(units: DataFrame, unitId: Column, score: Column,
       label: Column, b: Int = 200, maxGridValues: Long = 10000000L)
-      : DataFrame = {
-    require(b >= 40 && b <= 10000, s"apBootstrapCI: b=$b outside " +
-      "[40,10000]")
-    import org.apache.spark.sql.expressions.Window
-    val L = DecimalType(28, 12)
-    val base = units.select(unitId.as("__u"), score.as("__v"),
-        label.as("__y"))
-      .localCheckpoint(true) // feeds the point estimate AND ×B explode
-    val point = averagePrecisionFromCounts(base.groupBy("__v", "__y")
-      .agg(count(lit(1)).as("c"))
-      .select(col("__v").as("v"), col("__y").as("y"), col("c")),
-      maxGridValues)
-    val nUnits = broadcast(base.agg(count(lit(1)).as("n_units")))
-    val grid = base
-      .withColumn("__b", explode(sequence(lit(0L), lit(b - 1L))))
-      .withColumn("__w", poissonWeight(col("__u"), col("__b")))
-      .groupBy("__b", "__v").agg(
-        sum(when(col("__y"), col("__w")).otherwise(0L)).as("__pos"),
-        sum(when(!col("__y"), col("__w")).otherwise(0L)).as("__neg"))
-      .where(col("__pos") > 0 || col("__neg") > 0)
-    val wDesc = Window.partitionBy("__b").orderBy(col("__v").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val aps = grid
-      .withColumn("__tp", sum(col("__pos")).over(wDesc))
-      .withColumn("__fp", sum(col("__neg")).over(wDesc))
-      .withColumn("__term",
-        when(col("__pos") > 0,
-          (col("__pos").cast("double") * col("__tp").cast("double") /
-            (col("__tp") + col("__fp")).cast("double")).cast(L))
-          .otherwise(lit(0).cast(L)))
-      .groupBy("__b")
-      .agg(sum(col("__pos")).as("__np"), sum(col("__term")).as("__ts"))
-      .where(col("__np") > 0)
-      .select(col("__b"),
-        (col("__ts").cast("double") / col("__np").cast("double"))
-          .as("__a"))
-    point.crossJoin(nUnits)
-      .crossJoin(broadcast(ceilRankBounds(aps, "__a", "__b")))
-      .select(col("n_units"), col("n_pos"), col("n_neg"), col("ap"),
-        col("lo95"), col("hi95"), col("n_replicates"))
-  }
+      : DataFrame =
+    bootstrapCI("apBootstrapCI", units, unitId, score, label, b, "ap")(
+      averagePrecisionFromCounts(_, maxGridValues), apKernel)
 
   /** FLEISS' KAPPA multi-rater agreement (Fleiss 1971) — [[cohenKappa]]
     * generalized past two raters: m gates/models/annotators each
@@ -1439,9 +1431,9 @@ object Stats {
   }
 
   /** [[thresholdSweep]] PER GROUP — every source's own operating
-    * table: suffix sums on windows PARTITIONED by group, per-group
-    * totals joined back (group-keyed equi-join, never a broadcast of
-    * a group-sized frame). The input to [[bestCutByGroup]] — the
+    * table: the pooled sweep's kernel with its suffix sums and
+    * full-frame totals on windows PARTITIONED by group (one WindowExec,
+    * no join back). The input to [[bestCutByGroup]] — the
     * per-source operating point x250's audit motivates (when a proxy
     * is mis-calibrated differently per source, ONE global cut is the
     * wrong ship decision). Same discrete-score contract, pooled-cell
@@ -1450,56 +1442,16 @@ object Stats {
   def thresholdSweepByGroup(units: DataFrame, group: Column,
       score: Column, label: Column, maxGridValues: Long = 10000000L)
       : DataFrame =
-    thresholdSweepByGroupFromCounts(units
-      .select(group.as("g"), score.as("v"), label.as("y"))
-      .groupBy("g", "v", "y").agg(count(lit(1)).as("c")), maxGridValues)
+    thresholdSweepByGroupFromCounts(
+      vyCounts(units, Some(group), score, label), maxGridValues)
 
   /** [[thresholdSweepByGroup]] over PRE-AGGREGATED (g, v, y, c)
     * counts — the (g, v, y) grouped-ledger form
     * ([[graft.streaming.Streams.sumView]] of a (g, v, y) ledger). */
   def thresholdSweepByGroupFromCounts(counts: DataFrame,
-      maxGridValues: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val grid = counts.select(col("g"), col("v").as("threshold"),
-        col("y").as("__y"), col("c").as("__c"))
-      .groupBy("g", "threshold").agg(
-        sum(when(col("__y"), col("__c")).otherwise(0L)).as("__pos"),
-        sum(when(!col("__y"), col("__c")).otherwise(0L)).as("__neg"))
-    // lazy-grid measured guard — the rocAucFromCounts r15 discipline
-    val nCells = grid.count()
-    require(nCells <= maxGridValues,
-      s"thresholdSweepByGroup: $nCells pooled (group, score) cells " +
-        s"exceeds maxGridValues=$maxGridValues — the score must be " +
-        "discrete (quantize a raw double first)")
-    val wDesc = Window.partitionBy("g").orderBy(col("threshold").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    // r15: per-group totals as FULL-FRAME sums on the same partitioned
-    // window — one WindowExec, no separate groupBy + equi-join back
-    // (the thresholdSweepFromCounts discipline, partitioned by g)
-    val wAll = Window.partitionBy("g").orderBy(col("threshold").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    grid
-      .withColumn("tp", sum(col("__pos")).over(wDesc))
-      .withColumn("fp", sum(col("__neg")).over(wDesc))
-      .withColumn("__np", sum(col("__pos")).over(wAll))
-      .withColumn("__nn", sum(col("__neg")).over(wAll))
-      .select(col("g").as("group"), col("threshold"), col("tp"),
-        col("fp"),
-        (col("__np") - col("tp")).as("fn"),
-        (col("__nn") - col("fp")).as("tn"),
-        when(col("tp") + col("fp") > 0, col("tp").cast("double") /
-          (col("tp") + col("fp")).cast("double")).as("precision"),
-        when(col("__np") > 0,
-          col("tp").cast("double") / col("__np").cast("double"))
-          .as("recall"),
-        when(col("tp") + col("fp") + col("__np") > 0,
-          lit(2.0) * col("tp").cast("double") /
-            (col("tp") + col("fp") + col("__np")).cast("double"))
-          .as("f1"),
-        when(col("__nn") > 0,
-          col("fp").cast("double") / col("__nn").cast("double"))
-          .as("fpr"))
-  }
+      maxGridValues: Long = 10000000L): DataFrame =
+    sweepKernel(checkedGrid(counts, Seq("g"), "thresholdSweepByGroup",
+      maxGridValues), Seq("g")).withColumnRenamed("g", "group")
 
   /** The per-group OPTIMAL OPERATING POINT under explicit unit costs
     * — the ship decision [[thresholdSweepByGroup]] feeds: for every
@@ -1513,7 +1465,6 @@ object Stats {
   def bestCutByGroup(units: DataFrame, group: Column, score: Column,
       label: Column, wTp: Long, wFp: Long, wFn: Long,
       maxGridValues: Long = 10000000L): DataFrame = {
-    val N = DecimalType(38, 0)
     require(wTp >= 0L && wTp <= 1000000L && wFp >= 0L &&
       wFp <= 1000000L && wFn >= 0L && wFn <= 1000000L,
       s"bestCutByGroup: costs (wTp=$wTp, wFp=$wFp, wFn=$wFn) outside " +
@@ -1548,48 +1499,15 @@ object Stats {
     * Output: (bin, p_lo_ppm, n, mean_p, rate, gap). */
   def calibrationBins(units: DataFrame, probPpm: Column, label: Column,
       bins: Int = 10): DataFrame =
-    calibrationBinsFromCounts(units
-      .select(probPpm.cast("long").as("v"), label.as("y"))
-      .groupBy("v", "y").agg(count(lit(1)).as("c")), bins)
+    calibrationBinsFromCounts(
+      vyCounts(units, None, probPpm.cast("long"), label), bins)
 
   /** [[calibrationBins]] over PRE-AGGREGATED (v, y, c) counts with
     * v the ppm probability — the streaming-ledger form
     * ([[graft.streaming.Streams.sumView]] of a (v, y) ledger). */
   def calibrationBinsFromCounts(counts: DataFrame, bins: Int = 10)
-      : DataFrame = {
-    require(bins >= 2 && bins <= 1000,
-      s"calibrationBins: bins=$bins outside [2,1000]")
-    // exact integer floor-division (the Export trunc discipline: the
-    // subtraction makes the dividend an exact multiple, so the double
-    // division is exact — ppm·bins ≤ 1e9 is far inside 2^53)
-    def floorDiv(a: Column, d: Long): Column =
-      ((a - pmod(a, lit(d))) / lit(d)).cast("long")
-    val pb = col("__p") * lit(bins.toLong)
-    // loud range contract: a ppm probability lives in [0, 1e6] — a
-    // negative or >1e6 value would otherwise bin silently (negative
-    // bin ids with nonsensical p_lo_ppm); raise_error sits INSIDE the
-    // bin expression so column pruning cannot drop the check
-    val binChecked = when(col("__p").between(0L, 1000000L),
-      least(lit(bins - 1L), floorDiv(pb, 1000000L)))
-      .otherwise(raise_error(concat(
-        lit("calibrationBins: ppm probability out of [0, 1e6]: "),
-        col("__p").cast("string"))).cast("long"))
-    counts.select(col("v").cast("long").as("__p"), col("y").as("__y"),
-        col("c").as("__c"))
-      .withColumn("bin", binChecked)
-      .groupBy("bin").agg(sum(col("__c")).as("n"),
-        sum(col("__p") * col("__c")).as("__sp"),
-        sum(when(col("__y"), col("__c")).otherwise(0L)).as("__ny"))
-      .select(col("bin"),
-        floorDiv(col("bin") * lit(1000000L), bins.toLong).as("p_lo_ppm"),
-        col("n"),
-        (col("__sp").cast("double") / col("n").cast("double") /
-          lit(1e6)).as("mean_p"),
-        (col("__ny").cast("double") / col("n").cast("double")).as("rate"),
-        (col("__ny").cast("double") / col("n").cast("double") -
-          col("__sp").cast("double") / col("n").cast("double") / lit(1e6))
-          .as("gap"))
-  }
+      : DataFrame =
+    calibrationKernel(counts, Nil, bins, "calibrationBins")
 
   /** [[calibrationBins]] PER GROUP — "is the probability calibrated
     * in EVERY source/language, or only on average" (the x244
@@ -1601,9 +1519,8 @@ object Stats {
     * Output: (group, bin, p_lo_ppm, n, mean_p, rate, gap). */
   def calibrationBinsByGroup(units: DataFrame, group: Column,
       probPpm: Column, label: Column, bins: Int = 10): DataFrame =
-    calibrationBinsByGroupFromCounts(units
-      .select(group.as("g"), probPpm.cast("long").as("v"), label.as("y"))
-      .groupBy("g", "v", "y").agg(count(lit(1)).as("c")), bins)
+    calibrationBinsByGroupFromCounts(
+      vyCounts(units, Some(group), probPpm.cast("long"), label), bins)
 
   /** [[calibrationBinsByGroup]] over PRE-AGGREGATED (g, v, y, c)
     * counts — the streaming-ledger form: the same (g, v, y) additive
@@ -1611,34 +1528,9 @@ object Stats {
     * per-group reliability bins
     * ([[graft.streaming.Streams.sumView]] of a (g, v, y) ledger). */
   def calibrationBinsByGroupFromCounts(counts: DataFrame,
-      bins: Int = 10): DataFrame = {
-    require(bins >= 2 && bins <= 1000,
-      s"calibrationBinsByGroup: bins=$bins outside [2,1000]")
-    def floorDiv(a: Column, d: Long): Column =
-      ((a - pmod(a, lit(d))) / lit(d)).cast("long")
-    val pb = col("__p") * lit(bins.toLong)
-    // the calibrationBins loud range contract, inside the expression
-    val binChecked = when(col("__p").between(0L, 1000000L),
-      least(lit(bins - 1L), floorDiv(pb, 1000000L)))
-      .otherwise(raise_error(concat(
-        lit("calibrationBinsByGroup: ppm probability out of [0, 1e6]: "),
-        col("__p").cast("string"))).cast("long"))
-    counts.select(col("g"), col("v").cast("long").as("__p"),
-        col("y").as("__y"), col("c").as("__c"))
-      .withColumn("bin", binChecked)
-      .groupBy("g", "bin").agg(sum(col("__c")).as("n"),
-        sum(col("__p") * col("__c")).as("__sp"),
-        sum(when(col("__y"), col("__c")).otherwise(0L)).as("__ny"))
-      .select(col("g").as("group"), col("bin"),
-        floorDiv(col("bin") * lit(1000000L), bins.toLong).as("p_lo_ppm"),
-        col("n"),
-        (col("__sp").cast("double") / col("n").cast("double") /
-          lit(1e6)).as("mean_p"),
-        (col("__ny").cast("double") / col("n").cast("double")).as("rate"),
-        (col("__ny").cast("double") / col("n").cast("double") -
-          col("__sp").cast("double") / col("n").cast("double") / lit(1e6))
-          .as("gap"))
-  }
+      bins: Int = 10): DataFrame =
+    calibrationKernel(counts, Seq("g"), bins, "calibrationBinsByGroup")
+      .withColumnRenamed("g", "group")
 
   /** BRIER SCORE of a ppm-quantized probability against a binary
     * outcome (Brier 1950) — the strictly-proper companion to
@@ -1652,57 +1544,19 @@ object Stats {
     * when the outcome is constant (bs_ref = 0 — nothing to beat).
     * One combiner agg, one row out: (n, brier, brier_ref, skill). */
   def brierScore(units: DataFrame, probPpm: Column, label: Column)
-      : DataFrame = {
-    val N = DecimalType(38, 0)
-    val e = probPpm.cast("long") -
-      when(label, 1000000L).otherwise(0L)
-    units.agg(count(lit(1)).as("n"),
-        sum(when(label, 1L).otherwise(0L)).as("__ny"),
-        sum(e.cast(N) * e.cast(N)).as("__se"))
-      .select(col("n"),
-        (col("__se").cast("double") /
-          (col("n").cast("double") * lit(1e12))).as("brier"),
-        (col("__ny").cast("double") / col("n").cast("double") *
-          (lit(1.0) - col("__ny").cast("double") / col("n").cast("double")))
-          .as("brier_ref"),
-        when(col("__ny") > 0 && col("__ny") < col("n"),
-          lit(1.0) - (col("__se").cast("double") /
-            (col("n").cast("double") * lit(1e12))) /
-            (col("__ny").cast("double") / col("n").cast("double") *
-              (lit(1.0) -
-                col("__ny").cast("double") / col("n").cast("double"))))
-          .as("skill"))
-  }
+      : DataFrame =
+    brierKernel(units, None, probPpm, label)
 
   /** [[brierScore]] PER GROUP — the probability-quality audit per
     * source/language: each group's Brier, climatology reference and
-    * skill from the same exact-integer arithmetic (Σ(p − y·10⁶)² in
+    * skill from the same exact-integer kernel (Σ(p − y·10⁶)² in
     * DECIMAL(38,0) per group, two double divisions at the boundary).
     * skill NULL where a group's outcome is constant. One combiner
     * agg keyed by group; output: (group, n, brier, brier_ref,
     * skill). */
   def brierByGroup(units: DataFrame, group: Column, probPpm: Column,
-      label: Column): DataFrame = {
-    val N = DecimalType(38, 0)
-    val e = probPpm.cast("long") -
-      when(label, 1000000L).otherwise(0L)
-    units.groupBy(group.as("group")).agg(count(lit(1)).as("n"),
-        sum(when(label, 1L).otherwise(0L)).as("__ny"),
-        sum(e.cast(N) * e.cast(N)).as("__se"))
-      .select(col("group"), col("n"),
-        (col("__se").cast("double") /
-          (col("n").cast("double") * lit(1e12))).as("brier"),
-        (col("__ny").cast("double") / col("n").cast("double") *
-          (lit(1.0) - col("__ny").cast("double") / col("n").cast("double")))
-          .as("brier_ref"),
-        when(col("__ny") > 0 && col("__ny") < col("n"),
-          lit(1.0) - (col("__se").cast("double") /
-            (col("n").cast("double") * lit(1e12))) /
-            (col("__ny").cast("double") / col("n").cast("double") *
-              (lit(1.0) -
-                col("__ny").cast("double") / col("n").cast("double"))))
-          .as("skill"))
-  }
+      label: Column): DataFrame =
+    brierKernel(units, Some(group), probPpm, label)
 
   /** DECISION-CURVE / utility sweep — the operating-point CHOOSER the
     * [[thresholdSweep]] table feeds: with integer unit costs (what a
@@ -1731,7 +1585,6 @@ object Stats {
     * is bit-equal to batch over everything ingested. */
   def decisionCurveFromCounts(counts: DataFrame, wTp: Long, wFp: Long,
       wFn: Long, maxGridValues: Long = 10000000L): DataFrame = {
-    val N = DecimalType(38, 0)
     require(wTp >= 0L && wTp <= 1000000L && wFp >= 0L &&
       wFp <= 1000000L && wFn >= 0L && wFn <= 1000000L,
       s"decisionCurve: costs (wTp=$wTp, wFp=$wFp, wFn=$wFn) outside " +
@@ -1765,15 +1618,11 @@ object Stats {
     * Output: (n, s_stat, tau_b). */
   def kendallTauB(units: DataFrame, x: Column, y: Column,
       maxGridCells: Long = 20000L): DataFrame = {
-    val N = DecimalType(38, 0)
-    val grid = units.select(x.as("__x"), y.as("__y"))
-      .groupBy("__x", "__y").agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true) // feeds the pair join twice + 3 marginals
-    val cells = grid.count()
-    require(cells <= maxGridCells,
-      s"kendallTauB: $cells distinct (x, y) cells exceeds " +
-        s"maxGridCells=$maxGridCells — quantize the axes first (the " +
-        "pairwise stage is |grid|² comparisons)")
+    val grid = guardGrid(units.select(x.as("__x"), y.as("__y"))
+        .groupBy("__x", "__y").agg(count(lit(1)).as("__c"))
+        .localCheckpoint(true), // feeds the pair join twice + 3 marginals
+      maxGridCells, "kendallTauB", "distinct (x, y) cells", "maxGridCells",
+      "quantize the axes first (the pairwise stage is |grid|² comparisons)")
     val a = grid.select(col("__x").as("__xa"), col("__y").as("__ya"),
       col("__c").as("__ca"))
     val b = grid.select(col("__x").as("__xb"), col("__y").as("__yb"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Snapshot diff — the relational core of a versioned table history
@@ -22,24 +22,14 @@ object Diff {
     * (pk…, change ∈ added|removed|changed, old_<c>…, new_<c>…). */
   def snapshotDiff(oldDf: DataFrame, newDf: DataFrame, pk: Seq[String])
       : DataFrame = {
-    val vals = oldDf.columns.filterNot(pk.contains).toSeq
-    require(newDf.columns.filterNot(pk.contains).toSeq == vals,
-      "snapshots must share one schema")
-    val o = vals.foldLeft(oldDf.withColumn("__in_old", lit(1))) { (d, c) =>
-      d.withColumnRenamed(c, "old_" + c)
-    }
-    val n = vals.foldLeft(newDf.withColumn("__in_new", lit(1))) { (d, c) =>
-      d.withColumnRenamed(c, "new_" + c)
-    }
-    val oldT = struct(vals.map(c => col("old_" + c)): _*)
-    val newT = struct(vals.map(c => col("new_" + c)): _*)
-    o.join(n, pk, "full_outer")
+    val (joined, vals) = alignOnPk(oldDf, newDf, pk)
+    joined
       .withColumn("change",
         when(col("__in_old").isNull, "added")
           .when(col("__in_new").isNull, "removed")
           .otherwise("changed"))
       .where(col("__in_old").isNull || col("__in_new").isNull ||
-        !(oldT <=> newT))
+        !(tuple("old_", vals) <=> tuple("new_", vals)))
       .select((pk.map(col) :+ col("change")) ++
         vals.map(c => col("old_" + c)) ++ vals.map(c => col("new_" + c)): _*)
   }
@@ -57,18 +47,10 @@ object Diff {
     * schema order. */
   def diffSummary(oldDf: DataFrame, newDf: DataFrame, pk: Seq[String])
       : DataFrame = {
-    val vals = oldDf.columns.filterNot(pk.contains).toSeq
-    require(newDf.columns.filterNot(pk.contains).toSeq == vals,
-      "snapshots must share one schema")
-    val o = vals.foldLeft(oldDf.withColumn("__in_old", lit(1))) { (d, c) =>
-      d.withColumnRenamed(c, "old_" + c)
-    }
-    val n = vals.foldLeft(newDf.withColumn("__in_new", lit(1))) { (d, c) =>
-      d.withColumnRenamed(c, "new_" + c)
-    }
+    val (joined, vals) = alignOnPk(oldDf, newDf, pk)
     val both = col("__in_old").isNotNull && col("__in_new").isNotNull
-    val oldT = struct(vals.map(c => col("old_" + c)): _*)
-    val newT = struct(vals.map(c => col("new_" + c)): _*)
+    val oldT = tuple("old_", vals)
+    val newT = tuple("new_", vals)
     val aggs =
       sum(when(col("__in_old").isNull, 1L).otherwise(0L)).as("__a") +:
       sum(when(col("__in_new").isNull, 1L).otherwise(0L)).as("__r") +:
@@ -77,7 +59,7 @@ object Diff {
       vals.map(c => sum(when(both &&
         !(col("old_" + c) <=> col("new_" + c)), 1L).otherwise(0L))
         .as("__col_" + c))
-    val wide = o.join(n, pk, "full_outer").agg(aggs.head, aggs.tail: _*)
+    val wide = joined.agg(aggs.head, aggs.tail: _*)
     val pairs =
       Seq("rows_added" -> "__a", "rows_removed" -> "__r",
         "rows_changed" -> "__c", "rows_unchanged" -> "__u") ++
@@ -86,6 +68,27 @@ object Diff {
         struct(lit(m).as("metric"), col(c0).as("n")) }: _*)).as("kv"))
       .select(col("kv.metric").as("metric"), col("kv.n").as("n"))
   }
+
+  /** The two snapshots side by side: each tagged (__in_old / __in_new
+    * = 1, so a NULL tag marks the side a key is missing from), its
+    * value columns renamed old_<c> / new_<c>, and the pair FULL OUTER
+    * joined on the PK. Returns the join and the value columns. */
+  private def alignOnPk(oldDf: DataFrame, newDf: DataFrame,
+      pk: Seq[String]): (DataFrame, Seq[String]) = {
+    val vals = oldDf.columns.filterNot(pk.contains).toSeq
+    require(newDf.columns.filterNot(pk.contains).toSeq == vals,
+      "snapshots must share one schema")
+    def side(df: DataFrame, tag: String, prefix: String): DataFrame =
+      vals.foldLeft(df.withColumn(tag, lit(1))) { (d, c) =>
+        d.withColumnRenamed(c, prefix + c)
+      }
+    (side(oldDf, "__in_old", "old_")
+      .join(side(newDf, "__in_new", "new_"), pk, "full_outer"), vals)
+  }
+
+  /** One side's value tuple, for the null-safe whole-row comparison. */
+  private def tuple(prefix: String, vals: Seq[String]): Column =
+    struct(vals.map(c => col(prefix + c)): _*)
 
   /** Replay a [[snapshotDiff]] onto the old snapshot: drop removed and
     * changed keys, append the new tuples of added and changed keys.

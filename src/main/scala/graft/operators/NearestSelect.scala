@@ -27,7 +27,10 @@ import org.apache.spark.sql.functions._
 object NearestSelect {
 
   /** For each (group × target row), keep the df row minimizing
-    * `distance(dfRow, target)`. `targets` must be small (broadcast). */
+    * `distance(dfRow, target)`. `targets` must be small (broadcast). A
+    * row whose distance is null is no candidate (the [[nearestIn]]
+    * rule): under `distance.asc` a null would sort first and win, so a
+    * (group, target) with no real distance picks nothing. */
   def nearest(df: DataFrame, groupCols: Seq[String], targets: DataFrame,
       distance: Column, tieBreak: Seq[Column]): DataFrame = {
     val shared = targets.columns.toSeq.filter(groupCols.contains)
@@ -35,7 +38,8 @@ object NearestSelect {
       if (shared.isEmpty) df.crossJoin(broadcast(targets))
       else df.join(broadcast(targets), shared)
     val key = (groupCols ++ targets.columns.filterNot(shared.contains)).map(col)
-    Upsert.firstPerKey(grid, key, distance.asc +: tieBreak.map(_.asc))
+    Upsert.firstPerKey(grid.where(distance.isNotNull), key,
+      distance.asc +: tieBreak.map(_.asc))
   }
 
   /** Per row: for each element of the array `targets`, the element of the

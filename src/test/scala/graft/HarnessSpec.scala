@@ -81,4 +81,22 @@ class HarnessSpec extends SparkSpec {
       .toSeq
     assert(hits == Seq("Upsert.scala"), hits)
   }
+
+  test("each classifier metric's arithmetic occurs once in code under " +
+      "src/main/scala: the pooled, per-group and bootstrap forms share " +
+      "one kernel") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val code = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => Files.readAllLines(p).asScala.map(_.trim)
+        .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
+          l.startsWith("//")))
+      .toSeq
+    // the AUC numerator, the AP term, the calibration range check
+    for (marker <- Seq(""".as("__num2")""", """.withColumn("__term"""",
+        "val binChecked"))
+      assert(code.map(_.sliding(marker.length).count(_ == marker)).sum == 1,
+        marker)
+  }
 }

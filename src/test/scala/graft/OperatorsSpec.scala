@@ -46,6 +46,20 @@ class OperatorsSpec extends SparkSpec {
     assert(r.map(_.getLong(0)) == Seq(1L))
   }
 
+  test("nearest: a null distance is no candidate and never beats a real " +
+      "one") {
+    // group g holds a null-valued candidate (null distance) and a real
+    // one; group h holds only the null one and so picks nothing
+    val cand = Seq(("g", None, 1L), ("g", Some(30.0), 2L),
+        ("h", None, 3L))
+      .toDF("grp", "x", "id")
+    val targets = Seq(10.0).toDF("target")
+    val got = NearestSelect.nearest(cand, Seq("grp"), targets,
+      abs(col("x") - col("target")), Seq(col("id")))
+    val r = rows(got.select("grp", "id").orderBy("grp"))
+    assert(r.map(x => (x.getString(0), x.getLong(1))) == Seq(("g", 2L)), r)
+  }
+
   test("nearestIn: per-row array pick, ties to the smaller, nulls never win") {
     val df = Seq(
       (Seq[Option[Double]](Some(8.0), Some(12.0), Some(30.0), None), 10.0),

@@ -503,6 +503,53 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("property: each classifier metric's ByGroup row is BIT-identical " +
+      "to its pooled form run on that group's rows alone (AUC, AP, " +
+      "threshold sweep, calibration bins, Brier)") {
+    import graft.ext.Stats
+    import org.apache.spark.sql.{DataFrame, Row}
+    val r = new scala.util.Random(11)
+    def bits(rs: Seq[Row]): Seq[Seq[Any]] = rs.map(_.toSeq.map {
+      case x: Double => java.lang.Double.doubleToRawLongBits(x)
+      case o => o
+    })
+    for (_ <- 1 to 3) {
+      // ppm scores on a 9-point grid, so values tie within and across
+      // classes; g4 holds only positives, g5 only negatives
+      val cells = for {
+        g <- 0 until 6
+        v <- 0 to 8 by (1 + r.nextInt(3))
+        y <- Seq(true, false)
+        if !(g == 4 && !y) && !(g == 5 && y) && r.nextInt(3) > 0
+      } yield (s"g$g", v * 125000L, y, 1L + r.nextInt(4))
+      val counts = cells.toDF("g", "v", "y", "c")
+      val units = cells.flatMap { case (g, v, y, c) =>
+        Seq.fill(c.toInt)((g, v, y)) }.toDF("g", "v", "y")
+      val groups = cells.map(_._1).distinct
+      def check(name: String, src: DataFrame, byGroup: DataFrame,
+          pooled: DataFrame => DataFrame, order: String*): Unit = {
+        val alone = groups.map(g =>
+            pooled(src.where($"g" === g).drop("g"))
+              .select(lit(g).as("group"), col("*")))
+          .reduce(_ union _)
+        val by = ("group" +: order).map(col)
+        assert(bits(rows(byGroup.orderBy(by: _*))) ==
+          bits(rows(alone.orderBy(by: _*))), name)
+      }
+      check("auc", counts, Stats.rocAucByGroupFromCounts(counts),
+        Stats.rocAucFromCounts(_))
+      check("ap", counts, Stats.averagePrecisionByGroupFromCounts(counts),
+        Stats.averagePrecisionFromCounts(_))
+      check("sweep", counts, Stats.thresholdSweepByGroupFromCounts(counts),
+        Stats.thresholdSweepFromCounts(_), "threshold")
+      check("calibration", counts,
+        Stats.calibrationBinsByGroupFromCounts(counts),
+        Stats.calibrationBinsFromCounts(_), "bin")
+      check("brier", units, Stats.brierByGroup(units, $"g", $"v", $"y"),
+        Stats.brierScore(_, $"v", $"y"))
+    }
+  }
+
   test("property: the rocAuc/thresholdSweep grid guard trips on every " +
       "unquantized random score batch and admits its quantized form") {
     import graft.ext.Stats
