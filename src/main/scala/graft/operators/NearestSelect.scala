@@ -22,7 +22,10 @@ import org.apache.spark.sql.functions._
   *    smaller value: when a group's candidates are already collected into
   *    one row (one aggregate per group), the picks are array expressions
   *    and need no shuffle of their own. The daily chain job picks this way
-  *    ([[graft.plans.ChainPipeline.selectNearTheMoney]]).
+  *    ([[graft.plans.ChainPipeline.loadDay]]): one aggregate per symbol
+  *    collects its chain rows beside its as-of close, both picks run on
+  *    that row, and the winning rows are exploded back out in the same
+  *    partitioning.
   */
 object NearestSelect {
 

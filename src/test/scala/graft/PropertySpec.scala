@@ -195,6 +195,119 @@ class PropertySpec extends SparkSpec {
       !got.exists(_.startsWith("NULLCLOSE|")), got.filter(_.startsWith("NULL")))
   }
 
+  test("property: loadDay equals a driver-side fold of the reference's " +
+      "daily job: as-of close, closest expirations, closest strikes, " +
+      "keep-first PK with bid NULLS LAST") {
+    val day = java.time.LocalDate.of(2024, 1, 15)
+    val r3 = new scala.util.Random(23)
+    // one straddle row: (expiration offset, strike, call bid, put bid,
+    // both option symbols present); non-null bids are all distinct, so
+    // the kept (bid, ask) of a PK is unique, and a bid may be null
+    case class Straddle(e: Int, k: BigDecimal, cb: Option[BigDecimal],
+        pb: Option[BigDecimal], whole: Boolean)
+    var nextBid = 0
+    def bid(): Option[BigDecimal] =
+      if (r3.nextInt(8) == 0) None
+      else { nextBid += 1; Some(BigDecimal(nextBid) / 100) }
+    def straddles(exps: Seq[Int], ks: Seq[BigDecimal]): Seq[Straddle] = for {
+      e <- exps; k <- ks if r3.nextInt(4) > 0
+    } yield Straddle(e, k, bid(), bid(), r3.nextInt(15) > 0)
+    def listing() = (Seq.fill(2 + r3.nextInt(6))(1 + r3.nextInt(80)).distinct,
+      Seq.fill(4 + r3.nextInt(12))(BigDecimal(20 + r3.nextInt(500)) / 2).distinct)
+    // (symbol, straddles, prices as (day offset, close in cents))
+    val random = (1 to 20).map { i =>
+      val (exps, ks) = listing()
+      val px = Seq.fill(1 + r3.nextInt(4))(
+        (-r3.nextInt(12), Option(2000 + r3.nextInt(18000)))).distinctBy(_._1)
+      (s"S$i", straddles(exps, ks), px)
+    }
+    val (exps, ks) = (Seq(10, 20, 30, 40, 50), (20 to 60).map(k => BigDecimal(k * 5)))
+    val special = Seq(
+      // a price after the folder date is ignored: the mark is 100
+      ("FUTURE", Seq((-2, Some(10000)), (3, Some(20000)))),
+      // no price on the folder date: the as-of walks back to day − 5
+      ("GAP", Seq((-10, Some(5000)), (-5, Some(15000)))),
+      // the latest close ≤ folder date is null: nothing is selected,
+      // even though an earlier close exists
+      ("NULLCLOSE", Seq((-3, Some(10000)), (-1, None))),
+      // only later prices, or none at all: nothing is selected
+      ("NOPRICE", Seq((1, Some(10000)))),
+      ("NOPX", Seq.empty[(Int, Option[Int])]))
+      .map { case (s, px) => (s, straddles(exps, ks), px) }
+    // duplicate straddle rows: each (expiration, strike) listed 3 times,
+    // the lowest non-null bid of each side must win
+    val dupBase = straddles(Seq(14, 28), Seq(95, 100, 105).map(BigDecimal(_)))
+      .map(_.copy(whole = true))
+    val dup = ("DUP", dupBase ++ dupBase.map(s => s.copy(cb = bid(), pb = bid())) ++
+      dupBase.map(s => s.copy(cb = None, pb = bid())), Seq((0, Some(10000))))
+    val syms = random ++ special :+ dup
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_loadday")
+    def num(x: Option[BigDecimal]) = x.map(_.toString).getOrElse("null")
+    syms.foreach { case (s, sts, _) =>
+      val objs = sts.map { st =>
+        val exp = day.plusDays(st.e.toLong)
+        def side(p: String, b: Option[BigDecimal], present: Boolean) = {
+          val occ = if (present) "\"" + s"$s $p$exp" + "\"" else "null"
+          s""""${p}_optionsymbol": $occ, "${p}_bid": ${num(b)}, """ +
+            s""""${p}_ask": ${num(b.map(_ + 1))}, "${p}_ivint": 20.5"""
+        }
+        s"""{"expirationdate": "$exp", "strike": ${st.k}, """ +
+          side("call", st.cb, true) + ", " + side("put", st.pb, st.whole) + "}"
+      }
+      java.nio.file.Files.writeString(dir.resolve(s"$s.json"),
+        objs.mkString("[\n", ",\n", "\n]"))
+    }
+    val prices = syms.flatMap { case (s, _, px) =>
+      px.map { case (o, c) =>
+        (s, java.sql.Date.valueOf(day.plusDays(o.toLong)),
+          c.map(_.toDouble / 100)) }
+    }.toDF("act_symbol", "date", "close")
+
+    // the driver-side fold
+    val want = syms.flatMap { case (s, sts, px) =>
+      val mark = px.filter(_._1 <= 0).sortBy(_._1).lastOption
+        .flatMap(_._2).map(BigDecimal(_) / 100)
+      val rowsOf = sts.filter(_.whole).flatMap { st =>
+        Seq((st.e, st.k, "Call", st.cb), (st.e, st.k, "Put", st.pb)) }
+      val listed = rowsOf.map(_._1).distinct
+      val pickedExps = Seq(14, 28, 42, 56).map(t =>
+        listed.minBy(e => (math.abs(e - t), e))).distinct
+      val picks = for {
+        m <- mark.toSeq; e <- pickedExps
+        at = rowsOf.filter(_._1 == e).map(_._2).distinct
+        k <- graft.operators.NearestSelect.strikeMultipliers
+          .map(mu => at.minBy(k => ((k - m * mu).abs, k))).distinct
+      } yield (e, k)
+      rowsOf.filter(r => picks.contains((r._1, r._2)))
+        .groupBy(r => (r._1, r._2, r._3)).values
+        .map(_.minBy(_._4.map(b => (0, b)).getOrElse((1, BigDecimal(0)))))
+        .map { case (e, k, side, b) =>
+          s"$s|${day.plusDays(e.toLong)}|${k.setScale(4)}|$side|" +
+            b.map(_.setScale(4).toString).getOrElse("null") + "|" +
+            b.map(x => (x + 1).setScale(4).toString).getOrElse("null") }
+    }.sorted
+
+    val out = graft.plans.ChainPipeline.loadDay(spark, dir.toString, prices,
+      java.sql.Date.valueOf(day))
+    assert(out.columns.toSeq == graft.model.Schemas.optionChain.fieldNames.toSeq)
+    val got = rows(out).map { r =>
+      assert(r.getDate(0).toLocalDate == day)
+      Seq(r.getString(1), r.getDate(2).toString,
+        r.getDecimal(3).toString, r.getString(4),
+        String.valueOf(r.getDecimal(5)), String.valueOf(r.getDecimal(6)))
+        .mkString("|")
+    }.sorted
+    assert(got == want, got.diff(want).take(5) -> want.diff(got).take(5))
+    // every special case is exercised: the as-of mark decides FUTURE's
+    // and GAP's picks, the unpriced symbols select nothing, and DUP's
+    // duplicates collapse to one row per PK
+    def of(s: String) = got.filter(_.startsWith(s + "|"))
+    assert(Seq("FUTURE", "GAP", "DUP").forall(of(_).nonEmpty), got.take(3))
+    assert(Seq("NULLCLOSE", "NOPRICE", "NOPX").forall(of(_).isEmpty))
+    assert(of("DUP").map(_.split('|').take(4).toSeq).distinct.size == of("DUP").size)
+  }
+
   test("property: as-of join equals a brute force, random keys with ties") {
     // a few null keys and times; a narrow time range makes equal
     // (k, rt) pairs common, and values repeat so whole tuples tie too
@@ -339,6 +452,50 @@ class PropertySpec extends SparkSpec {
           .map(r => (r.getLong(0), r.getLong(2)))
         assert(got == exp, s"trial=$trial nBuckets=$nb")
       }
+    }
+  }
+
+  test("property: containmentPairs under a finite maxDocFreq cap returns " +
+      "every accepted pair that shares a non-hot shingle") {
+    import graft.ext.{Dedup, TextAnalysis}
+    // a 6-word boilerplate vocabulary makes hot shingles common to most
+    // documents, a 40-word content vocabulary gives each its rarer ones,
+    // and 30 more documents each quote a slice of one of those between
+    // boilerplate words (high containment, low Jaccard)
+    val r4 = new scala.util.Random(31)
+    val base = (1 to 30).map { _ =>
+      r4.shuffle(Seq.fill(2 + r4.nextInt(10))(s"b${r4.nextInt(6)}") ++
+        Seq.fill(1 + r4.nextInt(8))(s"w${r4.nextInt(40)}"))
+    }
+    val quotes = (1 to 30).map { _ =>
+      val src = base(r4.nextInt(base.size))
+      val from = r4.nextInt(src.size)
+      Seq.fill(r4.nextInt(3))(s"b${r4.nextInt(6)}") ++
+        src.slice(from, from + 3 + r4.nextInt(8)) ++
+        Seq.fill(r4.nextInt(3))(s"b${r4.nextInt(6)}")
+    }
+    val docs = (base ++ quotes).zipWithIndex
+      .map { case (ws, i) => (i.toLong + 1, ws.mkString(" ")) }
+    val sh = docs.toDF("doc_id", "text")
+      .select($"doc_id", TextAnalysis.shingles($"text", 2).as("sh"))
+    val hs = rows(sh.select($"doc_id", Dedup.hashedShingles($"sh").as("hs")))
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    val df = hs.values.toSeq.flatten.groupBy(identity).map { case (h, o) => h -> o.size }
+    for (cap <- Seq(3L, 8L); t <- Seq(0.5, 0.8)) {
+      val hot = df.collect { case (h, n) if n > cap => h }.toSet
+      assert(hot.nonEmpty && hot.size < df.size, s"cap=$cap")
+      val accepted = (for {
+        (a, ha) <- hs.toSeq; (b, hb) <- hs.toSeq if a < b
+        shared = (ha & hb).size.toDouble
+        if math.max(shared / ha.size, shared / hb.size) >= t
+      } yield (a, b) -> ((ha & hb) -- hot).nonEmpty).toMap
+      val got = rows(Dedup.containmentPairs(sh, "doc_id", "sh", t, cap))
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      // exact verification: nothing outside the accepted set comes back
+      assert(got.subsetOf(accepted.keySet), s"cap=$cap t=$t: ${got -- accepted.keySet}")
+      val must = accepted.collect { case (p, true) => p }.toSet
+      assert(must.size > 5, s"cap=$cap t=$t: too few pairs to test")
+      assert(must.subsetOf(got), s"cap=$cap t=$t missed: ${must -- got}")
     }
   }
 

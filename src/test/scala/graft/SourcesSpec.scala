@@ -63,11 +63,15 @@ class SourcesSpec extends SparkSpec {
     assert(rows(again.orderBy(pk: _*)).toString == rows(out.orderBy(pk: _*)).toString)
   }
 
-  test("chain pipeline: loadDay plans 3 shuffles, 2 windows, no range sort") {
+  test("chain pipeline: 1 shuffle, 1 window, 0 broadcasts, 1 JSON scan a day") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     val prices = Seq(("AAA", "2024-01-12", 101.0), ("AAA", "2024-01-20", 150.0),
       ("BBB", "2024-01-10", 6.0))
       .toDF("act_symbol", "ds", "close").withColumn("date", to_date($"ds"))
@@ -77,13 +81,21 @@ class SourcesSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan
     val h = new AdaptiveSparkPlanHelper {}
     val shuffles = h.collect(plan) { case e: ShuffleExchangeExec => e }
-    val windows = h.collect(plan) { case w: WindowExec => w }
-    // chain by symbol, prices by symbol, PK dedup
-    assert(shuffles.size <= 3, plan.toString)
-    assert(!shuffles.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+    // loadDay: chain rows and prices meet in one aggregate by symbol,
+    // and the PK dedup runs inside that partitioning (no range sort)
+    assert(shuffles.size == 1, plan.toString)
+    assert(shuffles.forall(_.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == "act_symbol"
+      case _ => false
+    }), plan.toString)
+    // the PK dedup only
+    assert(h.collect(plan) { case w: WindowExec => w }.size == 1, plan.toString)
+    assert(h.collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty,
       plan.toString)
-    // as-of mark and PK dedup
-    assert(windows.size == 2, plan.toString)
+    // the day's JSON is parsed once
+    assert(h.collect(plan) {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[JsonFileFormat] => s
+    }.size == 1, plan.toString)
   }
 
   test("chain html: positional call/put projection + OCC onmouseover decode") {
