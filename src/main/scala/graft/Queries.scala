@@ -1464,7 +1464,7 @@ object Queries {
 
   /** x74 — end-to-end embedding-space corpus dedup: the x66 adaptive-
     * LSH pairs (same parameters, so the same pinned-deterministic pair
-    * set) → x16-style connected-component label propagation → smallest
+    * set) → x16-style connected components ([[Dedup.clusters]]) → smallest
     * id per cluster survives. Closes the loop between the skew-adaptive
     * pair source and the corpus-level dedup it exists to feed. Only the
     * hash-specific PAIR set is pinned in the oracle; the clustering and
@@ -3802,8 +3802,8 @@ object Queries {
   }
 
   /** x170 — weighted-SimHash COMPONENTS: the x99 pair graph folded to
-    * per-document survivor labels by the escalating clusters()
-    * propagation — the scale-safe "components, not pair lists" form
+    * per-document survivor labels by clusters() — the scale-safe
+    * "components, not pair lists" form
     * (the Ω(#pairs) output-floor lesson) as its own oracle-checked
     * surface; x99's pair-listing form is unchanged beside it. */
   val x170SimhashClusters: Q = (s, dir) => {
@@ -4283,7 +4283,7 @@ object Queries {
   }
 
   /** x52 — canonical-document selection: near-dup clusters (the x16
-    * machinery: LSH candidates, exact verify, label propagation) with
+    * machinery: LSH candidates, exact verify, connected components) with
     * the QUALITY-AWARE survivor rule — the longest copy survives, ties
     * to the smallest id. The difference from x16 is exactly what a
     * production dedup wants: x16 keeps the accidental min-id copy,

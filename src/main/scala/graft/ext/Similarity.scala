@@ -171,7 +171,7 @@ object Similarity {
     * Shape: candidate generation shuffles (cid, id) rows only; vectors
     * re-attach by id for the exact cosine verify; survivors are the
     * smallest id per connected component of verified pairs
-    * ([[Dedup.clusters]] label propagation). Returns (id, keep_id) for
+    * ([[Dedup.clusters]]). Returns (id, keep_id) for
     * EVERY input row — keep_id == id means the row survives; a dropped
     * row points at the member of its semantic group that replaces it. */
   /** Sizing: `centroids` (a trained [[Ivf.train]] quantizer — Lloyd
@@ -183,18 +183,11 @@ object Similarity {
     * cell SIZE it is n·targetCellSize — linear. The round-6 sf1-equiv
     * probe measured exactly this failure on the LSH analog (8.8× work
     * for 10× rows at fixed width), so the scale-safe sizing is the
-    * default and fixed k is the opt-in.
-    *
-    * `maxIters` bounds [[Dedup.clusters]] label propagation; the
-    * default is effectively to-fixpoint (propagation needs component-
-    * diameter iterations and stops early on convergence) because the
-    * operator's contract — keep_id = the component's minimum id — is a
-    * transitive-closure statement, not a bounded-hop one. */
+    * default and fixed k is the opt-in. */
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nCells: Option[Int] = None,
       centroids: Option[Ivf.Centroids] = None,
       targetCellSize: Long = DefaultCellSize,
-      maxIters: Int = FixpointIters,
       assignment: Option[DataFrame] = None,
       flatAutoCells: Int = FlatAutoCells,
       model: Option[Ivf.Model] = None,
@@ -251,7 +244,7 @@ object Similarity {
         VectorOps.dot(col("va"), col("vb")), col("na"), col("nb")))
       .where(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"))
-    val comp = Dedup.clusters(pairs, maxIters = maxIters)
+    val comp = Dedup.clusters(pairs)
       .withColumnRenamed("cluster", "keep_id")
     emb.select(col(idCol).as("id")).distinct()
       .join(comp, Seq("id"), "left")
@@ -352,11 +345,6 @@ object Similarity {
     * a bigger corpus should raise `targetCellSize` (or train a
     * coarser quantizer explicitly) rather than widen the plan. */
   val MaxAutoCells: Int = 1 << 16
-
-  /** Effectively to-fixpoint for [[Dedup.clusters]]: label propagation
-    * needs component-diameter iterations and stops early on
-    * convergence, so a large bound only ever pays for real diameter. */
-  val FixpointIters: Int = 1000
 
   /** Above this auto-derived cell count, the AUTO path trains the
     * TWO-LEVEL quantizer ([[Ivf.trainTwoLevel]], nCoarse = nFine = ⌈√K⌉)
@@ -666,7 +654,7 @@ object Similarity {
   }
 
   /** End-to-end embedding-space corpus dedup: [[lshNearDupPairsAdaptive]]
-    * pairs → connected components ([[Dedup.clusters]] label propagation)
+    * pairs → connected components ([[Dedup.clusters]])
     * → keep the smallest id per cluster. The embedding-space closure of
     * [[Dedup.dedupCorpus]] (which does the same over MinHash+LSH shingle
     * pairs): the pair source is the skew-adaptive path, so hot buckets on

@@ -127,9 +127,11 @@ class ExtSpec extends SparkSpec {
 
   test("clusters frees every superseded round: a chain that escalates to " +
       "doubling leaves only the returned labels pinned") {
-    // a 24-edge chain: the 4 plain rounds cannot close it, so the
-    // contraction and the doubling tier run too
+    // a 24-edge chain dealt round-robin over 4 partitions: the union-
+    // find pass leaves it split, so the quotient finish runs too;
+    // `maxIters` is not read, so 0 closes the chain the same way
     val pairs = (0L until 24L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      .repartition(4)
     def pinnedBy(body: => org.apache.spark.sql.DataFrame) = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val labels = body
@@ -138,14 +140,42 @@ class ExtSpec extends SparkSpec {
       }.toSet
       (labels, spark.sparkContext.getPersistentRDDs.keySet -- before, leaves)
     }
-    val (labels, newIds, leaves) = pinnedBy(Dedup.clusters(pairs))
-    assert(rows(labels).map(r => r.getLong(1)).toSet == Set(0L))
-    assert(leaves.size == 1 && newIds == leaves,
-      s"new persistent RDDs $newIds, returned frame reads $leaves")
-    // no rounds at all: the identity labels still read the edge set
-    val (none, noneIds, noneLeaves) = pinnedBy(Dedup.clusters(pairs, maxIters = 0))
-    assert(rows(none).size == 25)
-    assert(noneIds == noneLeaves, s"$noneIds != $noneLeaves")
+    for (iters <- Seq(10, 0)) {
+      val ((labels, newIds, leaves), jobs) =
+        jobsIn(pinnedBy(Dedup.clusters(pairs, maxIters = iters)))
+      assert(rows(labels).map(r => r.getLong(1)) == Seq.fill(25)(0L))
+      // the repartition shuffle is a job of its own
+      assert(jobs > 4, s"$jobs jobs: the one-pass labels did not split")
+      assert(leaves.size == 1 && newIds == leaves,
+        s"new persistent RDDs $newIds, returned frame reads $leaves")
+    }
+  }
+
+  test("clusters: a one-partition pair graph of a 30-hop chain and a " +
+      "star resolves in one union-find pass, at most 3 jobs") {
+    // the chain visits 31 ids in a scattered order (17 is coprime to
+    // 31), so its minimum sits mid-path; the star's centre is not its min
+    val chain = (0L until 30L).map(i =>
+      (1000L + i * 17 % 31, 1000L + (i + 1) * 17 % 31))
+    val star = (2000L to 2012L).filter(_ != 2005L).map(l => (2005L, l))
+    val pairs = (chain ++ star).toDF("id_a", "id_b").coalesce(1)
+    val (got, jobs) = jobsIn(Dedup.clusters(pairs))
+    assert(rows(got).map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      ((1000L to 1030L).map(_ -> 1000L) ++ (2000L to 2012L).map(_ -> 2000L)).toMap)
+    assert(jobs <= 3, s"clusters started $jobs jobs")
+  }
+
+  test("clusters: non-integral ids fail before any job runs, with an " +
+      "IllegalArgumentException naming Dedup.clusters and the types") {
+    for ((pairs, types) <- Seq(
+        Seq((1.0, 2.5)).toDF("id_a", "id_b") -> "id_a: double, id_b: double",
+        Seq((1L, "2")).toDF("x", "y") -> "x: bigint, y: string")) {
+      val (e, jobs) = jobsIn(intercept[IllegalArgumentException](
+        Dedup.clusters(pairs, pairs.columns(0), pairs.columns(1))))
+      assert(e.getMessage.contains("Dedup.clusters") &&
+        e.getMessage.contains(types), e.getMessage)
+      assert(jobs == 0, s"$jobs jobs ran before the id types were checked")
+    }
   }
 
   test("similarity: brute top-k exact against hand-computed cosine") {

@@ -727,6 +727,83 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("property: Dedup.clusters equals a driver-side union-find on " +
+      "random graphs over 1 to 16 partitions") {
+    import graft.ext.Dedup
+    val g = new scala.util.Random(13)
+    def graph(): Seq[(Long, Long)] = {
+      // ids drawn from a shuffled pool, so no shape's minimum sits where
+      // it was built from
+      val ids = g.shuffle((1L to 2000L).toVector).iterator
+      val clique = { val v = Vector.fill(3 + g.nextInt(8))(ids.next())
+        for (i <- v.indices; j <- v.indices if i < j) yield (v(i), v(j)) }
+      val chain = Vector.fill(31 + g.nextInt(30))(ids.next()).sliding(2)
+        .map(p => (p(0), p(1))).toSeq
+      val star = { val c = ids.next(); Seq.fill(5 + g.nextInt(20))(c -> ids.next()) }
+      val pool = Vector.fill(60)(ids.next())
+      val sparse = Seq.fill(50)((pool(g.nextInt(60)), pool(g.nextInt(60))))
+      val es = Seq(clique, chain, star, sparse).flatMap(g.shuffle(_))
+      val again = es.filter(_ => g.nextInt(10) == 0)
+      g.shuffle(es ++ again ++ again.map(_.swap))
+    }
+    def unionFind(es: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      es.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.toList.map(v => v -> find(v)).toMap
+    }
+    def labels(df: org.apache.spark.sql.DataFrame) = {
+      val got = rows(df).map(r => r.getLong(0) -> r.getLong(1))
+      assert(got.map(_._1).distinct.size == got.size, "duplicate id rows")
+      got.toMap
+    }
+    val jobsBy = for (_ <- 1 to 4; parts <- Seq(1, 2, 4, 8, 16)) yield {
+      val es = graph()
+      val truth = unionFind(es)
+      val df = es.toDF("id_a", "id_b")
+      val pairs = if (parts == 1) df.coalesce(1) else df.repartition(parts)
+      val (got, jobs) = jobsIn(labels(Dedup.clusters(pairs)))
+      assert(got == truth, s"clusters() differs from union-find over " +
+        s"$parts partitions")
+      parts -> jobs
+    }
+    // one partition always takes the one-pass path; sixteen split the
+    // chain, so the quotient edges and the one-task finish ran too (the
+    // repartition shuffle is a job of its own)
+    assert(jobsBy.filter(_._1 == 1).forall(_._2 <= 3), jobsBy)
+    assert(jobsBy.filter(_._1 == 16).forall(_._2 > 4), jobsBy)
+  }
+
+  test("property: Dedup.clusters keeps its edge rules: a null endpoint " +
+      "gives one (null, null) row, a self-loop a singleton, INT ids stay INT") {
+    import graft.ext.Dedup
+    // a chain 4 … 12 beside them, so that over 4 partitions the labels
+    // split and the quotient finish runs with the null row present
+    val nullable = (Seq[(Option[Long], Option[Long])](
+      (Some(1L), None), (None, Some(2L)), (None, None), (Some(3L), Some(3L))) ++
+      (4L until 12L).map(i => (Some(i), Some(i + 1)))).toDF("id_a", "id_b")
+    val want = (Seq[(Option[Any], Option[Any])]((None, None)) ++
+      (1L to 3L).map(i => (Some(i), Some(i))) ++
+      (4L to 12L).map(i => (Some(i), Some(4L)))).sortBy(_.toString)
+    for (parts <- Seq(1, 4)) {
+      val pairs = if (parts == 1) nullable.coalesce(1) else nullable.repartition(parts)
+      val (got, jobs) = jobsIn(rows(Dedup.clusters(pairs)))
+      assert(got.map(r => Option(r.get(0)) -> Option(r.get(1)))
+        .sortBy(_.toString) == want, got)
+      assert(parts == 1 || jobs > 4, s"$jobs jobs: the labels did not split")
+    }
+    val ints = Dedup.clusters(Seq((1, 2), (2, 3), (7, 9)).toDF("id_a", "id_b"))
+    assert(ints.schema.simpleString == "struct<id:int,cluster:int>")
+    assert(rows(ints).map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 9 -> 7))
+  }
+
   test("property: codegen polyHash / polyHashReversed are BIT-identical " +
       "to the HOF fold on adversarial unicode (the r16 contract: the " +
       "expression replaced the engine-portable reference, so the DuckDB " +

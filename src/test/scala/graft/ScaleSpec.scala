@@ -697,10 +697,10 @@ class ScaleSpec extends SparkSpec {
     val fast = Dedup.clustersDoubling(pairs, maxIters = 6).collect()
     assert(fast.forall(_.getLong(1) == 0L),
       "doubling did not converge in 6 rounds")
-    // plain propagation reaches ~1 hop per round, so 6 rounds cannot
-    // close a 24-chain on their own — clusters() must ESCALATE to
-    // doubling rounds and still deliver the fixpoint (the sf0.1 x96
-    // winnow graph hit exactly this under-merge before the escalation)
+    // plain propagation reaches ~1 hop per round, so 6 rounds of it
+    // cannot close a 24-chain (the sf0.1 x96 winnow graph hit exactly
+    // this under-merge); clusters() is union-find and reads no round
+    // budget, so it must deliver the fixpoint whatever maxIters says
     val slow = Dedup.clusters(pairs, maxIters = 6).collect()
     assert(slow.forall(_.getLong(1) == 0L),
       "clusters() returned an under-merged chain — escalation broken")

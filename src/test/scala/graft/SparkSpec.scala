@@ -34,6 +34,26 @@ trait SparkSpec extends AnyFunSuite {
   def rows(df: DataFrame): Seq[org.apache.spark.sql.Row] =
     df.collect().toSeq
 
+  /** `body`'s result and the number of Spark jobs it started, counted by
+    * a listener on the jobs carrying a job group of its own (the bus is
+    * drained first, so every start event of `body`'s jobs is in). */
+  def jobsIn[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "counted")
+    try { val r = body; (r, { org.apache.spark.graft.TestListenerBus.drain(sc); n.get }) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
+
   /** Driver-side reference for [[graft.plans.AsOfJoin]]: for each left row,
     * among right rows with an equal non-null key and a non-null time ≤ the
     * left time, the greatest (time, remaining right columns) tuple wins,
